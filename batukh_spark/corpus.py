@@ -55,12 +55,6 @@ def make_transcripts(spark: SparkSession, n_convs: int, seed: int = 42,
     )
 
 
-def write_transcripts(spark: SparkSession, path: str, n_convs: int,
-                      seed: int = 42, **kw) -> None:
-    df = make_transcripts(spark, n_convs, seed=seed, **kw)
-    (df.write.mode("overwrite").parquet(path))
-
-
 def expected_total_turns(n_convs: int, seed: int = 42,
                          mega_every: int = 997,
                          mega_turns: int = 2000) -> int:

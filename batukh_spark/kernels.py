@@ -6,7 +6,7 @@ functions directly, so Spark output equals oracle output per turn by
 construction (the frozen-backbone contract).
 
 Two tiers:
-  * column-level `pandas_udf`s (composable, used by operators/queries)
+  * `html_blocks_udf` — a column-level `pandas_udf` (used by queries)
   * `extract_turns_batches` — the FUSED whole-pipeline kernel for
     `mapInArrow` (tokenize + score + classify + spans + assemble in ONE
     JVM->Python round-trip; SURVEY §4 manual-physics item 3)
@@ -78,21 +78,7 @@ def _extract_cols(texts, roles, tools):
 
 
 # ---------------------------------------------------------------------------
-# column-level pandas UDFs
-
-
-@pandas_udf(T.StringType())
-def extract_text_udf(text: pd.Series, role: pd.Series,
-                     tool: pd.Series) -> pd.Series:
-    """text payload -> extracted main-content text (E2 pipeline, fused)."""
-    cols = _extract_cols(text.tolist(), role.tolist(), tool.tolist())
-    return pd.Series(cols["extracted_text"])
-
-
-@pandas_udf(T.StringType())
-def detect_family_udf(text: pd.Series) -> pd.Series:
-    from batukh_spark.oracle import detect_family
-    return text.map(lambda t: detect_family(t if isinstance(t, str) else None))
+# column-level pandas UDF
 
 
 @pandas_udf(_BLOCK_ARRAY_T)
@@ -114,12 +100,6 @@ def html_blocks_udf(text: pd.Series) -> pd.Series:
              "link_density": b.link_density, "keep": b.keep}
             for i, b in enumerate(blocks)])
     return pd.Series(out)
-
-
-@pandas_udf(T.StringType())
-def canonicalize_udf(text: pd.Series) -> pd.Series:
-    from batukh_spark.oracle import canonicalize
-    return text.map(lambda t: canonicalize(t) if isinstance(t, str) else "")
 
 
 # ---------------------------------------------------------------------------

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from batukh_spark.operators.text import _prefix_before, apply_token_scale
+
 # interleave_domains builds 2*|domains| codegen terms and collects
 # partitions x |domains| planning rows — both fine for mixture keys
 # (tens of domains), both unbounded hazards for id-like columns.
@@ -82,61 +84,25 @@ def token_budget_sample(docs: DataFrame, budget: int,
     corpus + salt keeps the same documents on any cluster, any
     partitioning, any retry.
 
-    Scale (per-stratum distributed prefix sum — same shape as
-    pack_sequences, never a per-stratum SinglePartition window):
-    only (stratum, id, n_tokens, hash) tuples flow through the math;
-      1. range-repartition + sort by (stratum, hash, id), materialized
-         once (localCheckpoint) so the partition ids seen by the
-         totals job and the output job are identical;
-      2. per-(partition, stratum) running sum via a window keyed on
-         the PHYSICAL partition id — every window group lives inside
-         one partition by construction, so the exchange the window
-         would otherwise add is a no-op over the pinned partitioning;
-      3. per-(partition, stratum) totals (<= partitions x strata rows)
-         collect to the driver — the same k-row planning-collect class
-         as the IVF codebook — and come back as a broadcast offsets
-         join keyed null-safe on (partition, stratum).
-    The keep verdict depends only on the total (hash, id) order within
-    the stratum, not on where range partitioning drew its boundaries.
+    Scale: only (stratum, id, n_tokens, hash) tuples flow through the
+    math — tokens_before is a per-stratum `text._prefix_before` sum
+    (NULL stratum included), never a per-stratum SinglePartition
+    window.
     """
-    from pyspark.sql import Window
     if budget <= 0:
         raise ValueError(f"budget must be positive, got {budget}")
-    spark = docs.sparkSession
     h = F.md5(F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string")))
     # optional ppm calibration (text.apply_token_scale): with
     # token_scale set, per-doc counts — and therefore `budget` and the
     # returned tokens/tokens_before — are in calibrated units
-    from batukh_spark.operators.text import apply_token_scale
     slim = docs.select(F.col(strata_col).alias("__s"), F.col(id_col),
                        apply_token_scale(
                            F.col(tokens_col).cast("long"), token_scale)
                        .alias("__n"),
                        h.alias("__h"))
-    n_parts = spark.sparkContext.defaultParallelism
-    ordered = (slim.repartitionByRange(n_parts, "__s", "__h", id_col)
-               .sortWithinPartitions("__s", "__h", id_col)
-               .withColumn("__part", F.spark_partition_id())
-               .localCheckpoint())
-    w = (Window.partitionBy("__part", "__s").orderBy("__h", id_col)
-         .rowsBetween(Window.unboundedPreceding, -1))
-    local = ordered.withColumn(
-        "__local", F.coalesce(F.sum("__n").over(w), F.lit(0)))
-    totals = (ordered.groupBy("__part", "__s")
-              .agg(F.sum("__n").alias("__tot")).collect())
-    acc: dict = {}
-    rows = []
-    for r in sorted(totals, key=lambda r: ((r["__s"] is None, r["__s"]),
-                                           r["__part"])):
-        rows.append((r["__part"], r["__s"], acc.get(r["__s"], 0)))
-        acc[r["__s"]] = acc.get(r["__s"], 0) + r["__tot"]
-    odf = spark.createDataFrame(rows or [(0, None, 0)],
-                                "__opart int, __os string, __off long")
-    joined = local.join(
-        F.broadcast(odf),
-        (local["__part"] == odf["__opart"])
-        & local["__s"].eqNullSafe(odf["__os"]))
-    before = (F.col("__off") + F.col("__local")).cast("long")
+    joined, _ = _prefix_before(slim, ["__h", id_col], group_col="__s",
+                               weight="__n")
+    before = F.col("__before")
     return (joined.filter(before < F.lit(int(budget)))
             .select(F.col(id_col), F.col("__s").alias(strata_col),
                     F.col("__n").alias(tokens_col),
@@ -335,11 +301,14 @@ def interleave_domains(rows, domain_col: str = "lang",
     Returns (id_col, domain_col, domain_rank, global_pos) with both
     ranks dense from 0.
 
-    Scale: the per-domain rank is the pack_sequences distributed
-    prefix shape keyed on (physical partition, domain); per-domain
-    sizes (a k-row planning collect, k = |domains|) then turn the
-    global position into a CLOSED FORM —
-        global_pos = sum_d' min(rank, n_d') + #{d' < d : n_d' > rank}
+    A NULL domain is a domain of its own and takes the last slot of
+    each round (the SQL default NULLS LAST).
+
+    Scale: the per-domain rank is a `text._prefix_before` count keyed
+    on the domain; the k collected domain sizes (k = |domains|) then
+    turn the global position into a CLOSED FORM —
+        global_pos = sum_d' min(rank, n_d') + #{d' precedes d : n_d' > rank}
+    where d' precedes d when d' is non-NULL and (d is NULL or d' < d)
     — built as 2*|domains| codegen terms, so the interleave costs no
     second shuffle and no global sort at all.
 
@@ -352,8 +321,6 @@ def interleave_domains(rows, domain_col: str = "lang",
     limit-capped probe, so the check itself stays cheap at any
     cardinality) and FAILS LOUDLY past MAX_INTERLEAVE_DOMAINS=64
     instead of silently building an unbounded plan."""
-    from pyspark.sql import Window
-    spark = rows.sparkSession
     h = F.md5(F.concat(F.lit(f"{salt}{int(epoch)}:"),
                        F.col(id_col).cast("string")))
     slim = rows.select(F.col(id_col), F.col(domain_col).alias("__d"),
@@ -367,39 +334,19 @@ def interleave_domains(rows, domain_col: str = "lang",
             f"{MAX_INTERLEAVE_DOMAINS} distinct values — this "
             f"operator round-robins a MIXTURE key, not a "
             f"high-cardinality id; bucket the domains upstream")
-    n_parts = spark.sparkContext.defaultParallelism
-    ordered = (slim.repartitionByRange(n_parts, "__d", "__h", id_col)
-               .sortWithinPartitions("__d", "__h", id_col)
-               .withColumn("__part", F.spark_partition_id())
-               .localCheckpoint())
-    w = Window.partitionBy("__part", "__d").orderBy("__h", id_col)
-    local = ordered.withColumn("__local",
-                               F.row_number().over(w) - F.lit(1))
-    totals = sorted(
-        ordered.groupBy("__part", "__d").count().collect(),
-        key=lambda r: (r["__d"], r["__part"]))
-    offsets, off, cur_d = [], 0, None
-    sizes = {}
-    for r in totals:
-        if r["__d"] != cur_d:
-            cur_d, off = r["__d"], 0
-        offsets.append((r["__part"], r["__d"], off))
-        off += r["count"]
-        sizes[r["__d"]] = off
-    odf = spark.createDataFrame(offsets or [(0, "", 0)],
-                                "__opart int, __od string, __off long")
-    joined = local.join(
-        F.broadcast(odf),
-        (local["__part"] == odf["__opart"]) & (local["__d"] == odf["__od"]))
-    rank = (F.col("__off") + F.col("__local")).cast("long")
+    joined, sizes = _prefix_before(slim, ["__h", id_col], group_col="__d")
+    rank = F.col("__before")
+    d = F.col("__d")
     # closed-form interleave position from the k collected sizes
     pos = F.lit(0).cast("long")
-    for d in sorted(sizes):
-        n_d = F.lit(sizes[d]).cast("long")
-        pos = pos + F.least(rank, n_d)
-        pos = pos + F.when((F.lit(d) < F.col("__d")) & (n_d > rank),
-                           F.lit(1).cast("long")).otherwise(F.lit(0))
-    return joined.select(F.col(id_col), F.col("__d").alias(domain_col),
+    for dp, n in sizes.items():
+        n_dp = F.lit(n).cast("long")
+        pos = pos + F.least(rank, n_dp)
+        if dp is not None:
+            precedes = d.isNull() | (F.lit(dp) < d)
+            pos = pos + F.when(precedes & (n_dp > rank),
+                               F.lit(1).cast("long")).otherwise(F.lit(0))
+    return joined.select(F.col(id_col), d.alias(domain_col),
                          rank.alias("domain_rank"),
                          pos.alias("global_pos"))
 

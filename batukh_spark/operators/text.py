@@ -7,8 +7,9 @@ linearly with the scan, no Python in the hot path.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def tokens_col(text: Column | str) -> Column:
@@ -203,6 +204,70 @@ def redact_pii(docs, id_col: str = "doc_id", text_col: str = "text"):
                        n_ctrl.alias("n_ctrl"))
 
 
+def _prefix_before(df, order_cols, group_col=None, weight=None):
+    """Exclusive running sum of `weight` within `group_col` along the
+    total order (group_col, *order_cols) — the one distributed prefix
+    derivation behind packing, budget cuts, bucket batching and the
+    training-order ranks.  `weight=None` counts rows, so `__before` is
+    the dense 0-based rank; `group_col=None` is one global group.
+    `order_cols` must be a total order within each group (end them
+    with a unique id).
+
+    Returns (df + `__part` + `__before`, {group value: group total}).
+    Groups match null-safely: a NULL group is one group like any other.
+
+    Scale (distributed prefix sum, never a SinglePartition window):
+      1. range-repartition by (group_col, *order_cols) and materialize
+         once (localCheckpoint), so the partition ids seen by the totals
+         job and the output job are identical; a group's rows then
+         occupy consecutive partitions in partition-id order;
+      2. per-(partition, group) exclusive running sum via a window keyed
+         on the physical partition id — the plan shuffles the
+         checkpointed rows once more (Exchange hashpartitioning(__part,
+         ...)) and sorts each window partition by the order columns;
+      3. per-(partition, group) totals (<= partitions x groups rows)
+         collect to the driver — the same k-row planning-collect class
+         as the IVF codebook; each group's offsets accumulate over those
+         totals in partition-id order (group values are hashed, never
+         compared) and come back as a broadcast offsets join.
+    The result depends only on the total order, not on where range
+    partitioning drew its boundaries."""
+    spark = df.sparkSession
+    groups = [group_col] if group_col else []
+    w = F.lit(1).cast("long") if weight is None else F.col(weight)
+    ordered = (df.repartitionByRange(
+        spark.sparkContext.defaultParallelism, *groups, *order_cols)
+        .withColumn("__part", F.spark_partition_id())
+        .localCheckpoint())
+    win = (Window.partitionBy("__part", *groups).orderBy(*order_cols)
+           .rowsBetween(Window.unboundedPreceding, -1))
+    local = ordered.withColumn(
+        "__local", F.coalesce(F.sum(w).over(win), F.lit(0)))
+    totals = (ordered.groupBy("__part", *groups)
+              .agg(F.coalesce(F.sum(w), F.lit(0)).alias("__tot"))
+              .collect())
+    acc: dict = {}
+    offsets = []
+    for r in sorted(totals, key=lambda r: r["__part"]):
+        g = r[group_col] if group_col else None
+        offsets.append((r["__part"], g, acc.get(g, 0)))
+        acc[g] = acc.get(g, 0) + r["__tot"]
+    gtype = ordered.schema[group_col].dataType if group_col \
+        else T.NullType()
+    odf = spark.createDataFrame(offsets, T.StructType([
+        T.StructField("__opart", T.IntegerType()),
+        T.StructField("__og", gtype),
+        T.StructField("__off", T.LongType())]))
+    cond = local["__part"] == odf["__opart"]
+    if group_col:
+        cond = cond & local[group_col].eqNullSafe(odf["__og"])
+    out = (local.join(F.broadcast(odf), cond)
+           .withColumn("__before",
+                       (F.col("__off") + F.col("__local")).cast("long"))
+           .drop("__local", "__opart", "__og", "__off"))
+    return out, acc
+
+
 def pack_sequences(chunks, seq_len: int = 256,
                    doc_col: str = "doc_id", idx_col: str = "chunk_idx",
                    ntok_col: str = "n_tokens",
@@ -222,23 +287,11 @@ def pack_sequences(chunks, seq_len: int = 256,
     [tok_begin, tok_end) is the chunk-local token slice landing in
     seq_id at in-sequence offset seq_pos.
 
-    Scale (distributed prefix sum — no global single-partition
-    window): only (doc, idx, n_tokens) triples flow through the math
-    (never chunk text; join text back by key afterwards).
-      1. range-repartition + sort by (doc_col, idx_col), materialized
-         once (localCheckpoint) so the partition ids seen by the
-         offsets job and the output job are identical;
-      2. per-partition running sum via a window keyed on the physical
-         partition id;
-      3. per-partition totals (one row per partition) collect to the
-         driver — the same k-row planning-collect class as the IVF
-         codebook — and come back as a broadcast offsets join.
-    The final global offsets depend only on the total (doc, idx)
-    order, not on where range partitioning drew its boundaries."""
-    from pyspark.sql import Window
+    Scale: only (doc, idx, n_tokens) triples flow through the math
+    (never chunk text; join text back by key afterwards); the stream
+    offsets are `_prefix_before` over the (doc_col, idx_col) order."""
     if seq_len <= 0:
         raise ValueError(f"seq_len must be positive, got {seq_len}")
-    spark = chunks.sparkSession
     # optional ppm calibration of each chunk's count BEFORE packing:
     # with token_scale set, seq_len and all emitted positions are in
     # calibrated (target-tokenizer-estimate) units
@@ -247,34 +300,13 @@ def pack_sequences(chunks, seq_len: int = 256,
                     apply_token_scale(F.col(ntok_col).cast("long"),
                                       token_scale).alias("__n"))
             .filter(F.col("__n") > 0))
-    n_parts = spark.sparkContext.defaultParallelism
-    ordered = (slim.repartitionByRange(n_parts, doc_col, idx_col)
-               .sortWithinPartitions(doc_col, idx_col)
-               .withColumn("__part", F.spark_partition_id())
-               .localCheckpoint())
-    w = (Window.partitionBy("__part").orderBy(doc_col, idx_col)
-         .rowsBetween(Window.unboundedPreceding, -1))
-    local = ordered.withColumn(
-        "__local_start", F.coalesce(F.sum("__n").over(w), F.lit(0)))
-    totals = sorted(
-        ordered.groupBy("__part").agg(F.sum("__n").alias("__tot"))
-        .collect(), key=lambda r: r["__part"])
-    offsets, off = [], 0
-    for r in totals:
-        offsets.append((r["__part"], off))
-        off += r["__tot"]
-    odf = spark.createDataFrame(offsets or [(0, 0)],
-                                "__opart int, __offset long")
-    joined = (local.join(F.broadcast(odf),
-                         local["__part"] == odf["__opart"])
-              .withColumn("__g", F.col("__offset")
-                          + F.col("__local_start")))
-    gstart = F.col("__g")
+    joined, _ = _prefix_before(slim, [doc_col, idx_col], weight="__n")
+    gstart = F.col("__before")
     # integer `div`, NOT `/`: dividing longs with `/` goes through
     # double, which silently mis-assigns boundaries once the total
     # stream exceeds 2^53 tokens — inside the 10^12-doc design scale
-    first = F.expr(f"__g div {int(seq_len)}")
-    last = F.expr(f"(__g + __n - 1) div {int(seq_len)}")
+    first = F.expr(f"__before div {int(seq_len)}")
+    last = F.expr(f"(__before + __n - 1) div {int(seq_len)}")
     pieces = F.transform(F.sequence(first, last), lambda s: F.struct(
         s.cast("long").alias("seq_id"),
         (F.greatest(gstart, s * seq_len) - gstart).cast("long")
@@ -358,17 +390,12 @@ def length_bucketed_batches(rows, batch_max_tokens: int,
     static shape costs).  Rows with n_tokens <= 0 are dropped (empty
     rows batch nothing).
 
-    Scale: the rank math is the pack_sequences distributed prefix
-    shape — only (id, n_tokens, bucket, hash) tuples flow through it;
-    per-(partition, bucket) counts (<= partitions x ~20 bucket rows)
-    collect to the driver and come back as a broadcast offsets join.
-    The per-bucket window keys on (physical partition, bucket), so no
-    bucket ever becomes a SinglePartition window."""
-    from pyspark.sql import Window
+    Scale: only (id, n_tokens, bucket, hash) tuples flow through the
+    rank math — a per-bucket `_prefix_before` count, so no bucket ever
+    becomes a SinglePartition window."""
     if not (isinstance(batch_max_tokens, int) and batch_max_tokens >= 1):
         raise ValueError(
             f"batch_max_tokens must be an int >= 1, got {batch_max_tokens!r}")
-    spark = rows.sparkSession
     n = F.col(ntok_col).cast("long")
     # ceil power of two via bit length: 2^len(bin(n-1)) for n >= 2
     # (SQL expr: shiftleft's PySpark wrapper only takes literal shifts)
@@ -380,36 +407,14 @@ def length_bucketed_batches(rows, batch_max_tokens: int,
             .filter(F.col("__n") > 0)
             .select(F.col(id_col), F.col("__n"),
                     bucket.alias("__b"), h.alias("__h")))
-    n_parts = spark.sparkContext.defaultParallelism
-    ordered = (slim.repartitionByRange(n_parts, "__b", "__h", id_col)
-               .sortWithinPartitions("__b", "__h", id_col)
-               .withColumn("__part", F.spark_partition_id())
-               .localCheckpoint())
-    w = Window.partitionBy("__part", "__b").orderBy("__h", id_col)
-    local = ordered.withColumn("__local",
-                               F.row_number().over(w) - F.lit(1))
-    totals = sorted(
-        ordered.groupBy("__part", "__b").count().collect(),
-        key=lambda r: (r["__b"], r["__part"]))
-    offsets, off, cur_b = [], 0, None
-    for r in totals:
-        if r["__b"] != cur_b:
-            cur_b, off = r["__b"], 0
-        offsets.append((r["__part"], r["__b"], off))
-        off += r["count"]
-    odf = spark.createDataFrame(offsets or [(0, 0, 0)],
-                                "__opart int, __ob long, __off long")
-    joined = local.join(
-        F.broadcast(odf),
-        (local["__part"] == odf["__opart"]) & (local["__b"] == odf["__ob"]))
-    rank = F.col("__off") + F.col("__local")
+    joined, _ = _prefix_before(slim, ["__h", id_col], group_col="__b")
     batch_rows = F.greatest(
         F.lit(1).cast("long"),
         F.expr(f"{int(batch_max_tokens)} div __b"))
     return joined.select(
         F.col(id_col), F.col("__n").alias(ntok_col),
         F.col("__b").alias("bucket_len"),
-        rank.cast("long").alias("__rk"),
+        F.col("__before").alias("__rk"),
         (F.col("__b") - F.col("__n")).cast("long").alias("pad_tokens"),
         batch_rows.alias("__br")) \
         .select(F.col(id_col), F.col(ntok_col), F.col("bucket_len"),
@@ -441,36 +446,13 @@ def epoch_order(rows, epoch: int, id_col: str = "seq_id",
       k+1's order is uncorrelated with epoch k's;
     - scale: the rank math touches only (id, hash) pairs — callers
       join the rank back by id, so row payloads never flow through
-      the ordering.  Global rank uses the distributed prefix shape of
-      pack_sequences (range partition + partition-keyed row_number +
-      k-row offsets broadcast), never a SinglePartition window.
+      the ordering; the rank is a `_prefix_before` count.
 
     Returns (id_col, epoch_rank).
     """
-    from pyspark.sql import Window
-    spark = rows.sparkSession
     h = F.md5(F.concat(F.lit(f"{salt}{int(epoch)}:"),
                        F.col(id_col).cast("string")))
     slim = rows.select(F.col(id_col), h.alias("__h"))
-    n_parts = spark.sparkContext.defaultParallelism
-    ordered = (slim.repartitionByRange(n_parts, "__h", id_col)
-               .sortWithinPartitions("__h", id_col)
-               .withColumn("__part", F.spark_partition_id())
-               .localCheckpoint())
-    w = Window.partitionBy("__part").orderBy("__h", id_col)
-    local = ordered.withColumn("__local",
-                               F.row_number().over(w) - F.lit(1))
-    totals = sorted(ordered.groupBy("__part").count().collect(),
-                    key=lambda r: r["__part"])
-    offsets, off = [], 0
-    for r in totals:
-        offsets.append((r["__part"], off))
-        off += r["count"]
-    odf = spark.createDataFrame(offsets or [(0, 0)],
-                                "__opart int, __off long")
-    joined = local.join(F.broadcast(odf),
-                        local["__part"] == odf["__opart"])
-    return joined.select(
-        F.col(id_col),
-        (F.col("__off") + F.col("__local")).cast("long")
-        .alias("epoch_rank"))
+    ranked, _ = _prefix_before(slim, ["__h", id_col])
+    return ranked.select(F.col(id_col),
+                         F.col("__before").alias("epoch_rank"))

@@ -8,8 +8,8 @@ FILES mode (default for path/table sources) — Iceberg-style planning:
       -> mapInArrow(fused extraction kernel)       [ONE Python crossing]
       -> sortWithinPartitions(conv_id, turn_idx)   [on the lean output]
       -> write extracted, partitionBy(unit), dynamic overwrite
-      -> append per-unit manifest rows (single KERNEL pass; source
-         selected by $BATUKH_MANIFEST_SOURCE — see _write_with_manifest)
+      -> append per-unit manifest rows (single KERNEL pass, aggregated
+         from the cached kernel output — see _write_with_manifest)
 
 SHUFFLE mode (DataFrame sources / conv-bucketed output):
     read transcripts                               [scan: pruned to 6 cols]
@@ -38,13 +38,11 @@ Design for 10^12 turns / 1000 executors:
   those units on resume and OVERWRITES their partitions (no duplicate
   rows) — the checkpoint-restore analogue of
   /root/reference/batukh/torch/segmenter.py:267-278,313-370.
-* Single-kernel-pass manifest, two measured sources (see
-  _write_with_manifest): executor-cache aggregation (default — fastest
-  while the run's output fits memory) or a column-pruned re-read of
-  the written table ($BATUKH_MANIFEST_SOURCE=reread — the 100 TB
-  setting, where caching would spill every extracted byte to executor
-  disk just to feed four narrow aggregates).  Neither source re-runs
-  the Python kernel.
+* Single-kernel-pass manifest (see _write_with_manifest): aggregated
+  from the executor-cached kernel output, so the Python kernel never
+  runs twice.  At 100 TB that cache spills every extracted byte to
+  executor disk; the planned replacement derives the manifest from the
+  written files' parquet footers (ROADMAP item 4).
 * Ordering: (conv_id, turn_idx) sort within unit partitions + unit dirs
   in the output. Readers reconstruct global order with
   ORDER BY conv_id, turn_idx — same contract as the reference's sorted,
@@ -53,7 +51,6 @@ Design for 10^12 turns / 1000 executors:
 
 from __future__ import annotations
 
-import os
 import time
 import uuid
 
@@ -115,7 +112,7 @@ def run_extraction_files(spark: SparkSession, source: str, output: str,
         -> sortWithinPartitions
         -> write partitionBy(unit), DYNAMIC partition overwrite
         -> append per-unit manifest rows (single kernel pass — see
-           _write_with_manifest for the two manifest sources)
+           _write_with_manifest)
 
     Zero pre-kernel exchange: at 10^12 turns the input arrives as
     millions of parquet/Iceberg data files, so file granularity is both
@@ -157,62 +154,34 @@ def run_extraction_files(spark: SparkSession, source: str, output: str,
         df.mapInArrow(kernels.extract_turns_lean,
                       schema=kernels.lean_schema_sql(_OUT_SCHEMA_SQL))
           .sortWithinPartitions("conv_id", "turn_idx"))
-    _write_with_manifest(extracted, output, metrics, run_id, t0,
-                         units.select("unit").distinct(), summary)
+    _write_with_manifest(extracted, output, metrics, run_id, t0, summary)
     summary["wall_s"] = time.time() - t0
     return summary
 
 
 def _write_with_manifest(extracted: DataFrame, output: str,
                          metrics: str | None, run_id: str, t0: float,
-                         planned_units: DataFrame,
                          summary: dict) -> None:
     """Write the extracted table, then derive the per-unit manifest in
-    a single KERNEL pass — two manifest sources, both measured, chosen
-    by $BATUKH_MANIFEST_SOURCE:
+    a single KERNEL pass: persist the kernel output at executor storage
+    while the write materializes it, and aggregate the manifest from
+    the SAME cache (a cache-hit aggregate is ~free while the run's
+    output fits executor memory).  The Python kernel never runs twice.
 
-    'cache' (default): persist the kernel output at executor storage
-      while the write materializes it, aggregate the manifest from the
-      SAME cache.  Fastest when the run's output fits executor
-      memory — the bench corpus (~1 GB extracted) measures ~3 s/run
-      faster than the re-read (cache-hit aggregate is ~free).
-
-    'reread': write first, then aggregate from a COLUMN-PRUNED re-read
-      of the written table (unit, conv_id, text_nbytes, error — a few
-      %% of the written bytes; extracted_text is never re-read),
-      semi-joined to this run's planned units.  The production setting
-      at 100 TB: the cache mode would spill 100%% of the extracted
-      bytes to executor disk a second time just to feed four narrow
-      aggregates, strictly more I/O than re-reading the manifest
-      columns.  Rows from units an earlier run committed (resume, or
-      an unrelated run sharing the output dir) never leak in — the
-      plan's unit ids broadcast against the partition column; a
-      crash-window unit (write committed, manifest append lost) is in
-      the plan and was dynamically overwritten this run, so its
-      re-read rows are this run's too.
-
-    Neither mode ever runs the Python kernel twice."""
+    At 100 TB the persist spills every extracted byte to executor disk
+    just to feed four narrow aggregates; the planned replacement reads
+    the manifest fields from the written files' parquet footers
+    (ROADMAP item 4), which also lets the manifest see lost rows."""
     spark = extracted.sparkSession
-    mode = os.environ.get("BATUKH_MANIFEST_SOURCE", "cache")
     if not metrics:
         bio.write_extracted(extracted, output, partition_col="unit")
         return
-    if mode == "reread":
+    extracted = extracted.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
         bio.write_extracted(extracted, output, partition_col="unit")
-        written = (spark.read.parquet(output)
-                   .select("unit", "conv_id", "text_nbytes", "error")
-                   .join(F.broadcast(planned_units), "unit",
-                         "left_semi"))
-        bio.append_manifest(_build_manifest(written, run_id, t0),
-                            metrics)
-    else:
-        extracted = extracted.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            bio.write_extracted(extracted, output, partition_col="unit")
-            bio.append_manifest(_build_manifest(extracted, run_id, t0),
-                                metrics)
-        finally:
-            extracted.unpersist()
+        bio.append_manifest(_build_manifest(extracted, run_id, t0), metrics)
+    finally:
+        extracted.unpersist()
     summary["units_completed"] = _written_unit_count(
         spark, metrics, run_id, t0)
 
@@ -316,14 +285,7 @@ def run_extraction(spark: SparkSession, source: str | DataFrame,
 
     summary = {"run_id": run_id, "n_units": n_units,
                "resumed": bool(resume and done_units is not None)}
-    # planned units for reread-mode manifest scoping: the full id
-    # range minus resumed-done units
-    planned = spark.range(n_units).select(
-        F.col("id").cast("long").alias("unit"))
-    if done_units is not None:
-        planned = planned.join(done_units, "unit", "left_anti")
-    _write_with_manifest(extracted, output, metrics, run_id, t0,
-                         planned, summary)
+    _write_with_manifest(extracted, output, metrics, run_id, t0, summary)
     summary["wall_s"] = time.time() - t0
     return summary
 

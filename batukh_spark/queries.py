@@ -19,9 +19,6 @@ from pyspark.sql import functions as F
 from batukh_spark.operators import dedup, similarity, textstats
 from batukh_spark.operators.text import tokens_col
 
-_TABLES = ("region nation customer supplier part orders lineitem events "
-           "documents embeddings").split()
-
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -2558,9 +2555,6 @@ def training_mix_q(spark, sf):
 
 _ALPHA = "abcdefghijklmnopqrstuvwxyz"
 
-# whitespace-collapse matching oracle.canonical.canonicalize on this corpus
-_CANON_SQL_EXPR = r"trim(regexp_replace({col}, '\s+', ' ', 'g'))"
-
 
 def _html_payload_col():
     """Templated HTML page: nav chrome + heading + content + footer.
@@ -4027,8 +4021,8 @@ def length_bucketed_batches_q(spark, sf):
     per-doc whitespace token counts -> ceil-power-of-two buckets ->
     per-bucket deterministic hash-ordered batches of
     max(1, 512 div bucket_len) rows (operators/text.
-    length_bucketed_batches — the pack_sequences distributed-prefix
-    shape, per-(partition, bucket) windows, never SinglePartition)."""
+    length_bucketed_batches — a per-bucket distributed prefix rank,
+    see text._prefix_before; never SinglePartition)."""
     from batukh_spark.operators.text import (length_bucketed_batches,
                                              tokens_col)
     docs = t_spread(spark, sf, "documents")

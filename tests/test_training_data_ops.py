@@ -882,6 +882,28 @@ def test_interleave_domains_partitioning_invariant(spark):
     assert [p for _, _, p in a] != []
 
 
+@pytest.mark.parametrize("rows", [
+    # (1,a),(2,a),(3,NULL),(4,b),(5,NULL): NULL is its own domain and
+    # takes the last slot of each round (SQL ASC is NULLS LAST)
+    [(1, "a"), (2, "a"), (3, None), (4, "b"), (5, None)],
+    [(1, None), (2, None), (3, None)],
+], ids=["mixed", "all_null"])
+def test_interleave_domains_null_domain_matches_oracle(spark, rows):
+    """NULL domains: the operator must agree row-for-row with
+    INTERLEAVE_DOMAINS_SQL run over the same planted rows."""
+    import duckdb
+    from batukh_spark.operators.sampling import interleave_domains
+    from batukh_spark.queries import INTERLEAVE_DOMAINS_SQL
+    df = spark.createDataFrame(rows, "doc_id long, lang string")
+    got = sorted(tuple(r) for r in interleave_domains(df).collect())
+    con = duckdb.connect()
+    con.execute("create table documents(doc_id bigint, lang varchar)")
+    con.executemany("insert into documents values (?, ?)", rows)
+    want = sorted(con.execute(INTERLEAVE_DOMAINS_SQL).fetchall())
+    assert got == want
+    assert sorted(r[3] for r in got) == list(range(len(rows)))
+
+
 def test_token_length_profile_exact_quantiles(spark):
     """Known distribution: inverse-CDF-lower quantiles come out
     exactly; totals add up."""
@@ -1409,3 +1431,50 @@ def test_bpe_token_counts_semantics(spark):
     # doc1: [low][low][low,er] = 4; doc2: [er][er] + '@@' as 1 = 3;
     # doc3: token-less -> 0
     assert got == {1: 4, 2: 3, 3: 0}
+
+
+# ---------------------------------------------------------------------------
+# text._prefix_before (the shared distributed prefix derivation)
+
+_PREFIX_CASES = {
+    "empty": [],
+    "null_group": [(i, None if i % 3 == 0 else "ab"[i % 2], i % 7)
+                   for i in range(60)],
+    "zero_weight": [(i, "ab"[i % 2], 0 if i % 4 else 5)
+                    for i in range(40)],
+    "one_group_all_partitions": [(i, "x", 1 + i % 5) for i in range(400)],
+    "single_row_groups": [(i, f"g{i:03d}", i) for i in range(100)],
+}
+
+
+@pytest.mark.parametrize("case", sorted(_PREFIX_CASES))
+def test_prefix_before_matches_single_window(spark, case):
+    """The partition-keyed prefix sum + offsets join equals the plain
+    single-Window exclusive running sum (and row count for weight=None),
+    per group and globally; the totals equal the group sums."""
+    from pyspark.sql import Window
+    from batukh_spark.operators.text import _prefix_before
+    rows = _PREFIX_CASES[case]
+    df = spark.createDataFrame(rows, "id long, g string, w long")
+    for group_col in ("g", None):
+        for weight in ("w", None):
+            out, totals = _prefix_before(df, ["id"], group_col, weight)
+            got = sorted((r["id"], r["__before"]) for r in out.collect())
+            w = F.lit(1) if weight is None else F.col(weight)
+            win = Window.orderBy("id").rowsBetween(
+                Window.unboundedPreceding, -1)
+            if group_col:
+                win = win.partitionBy(group_col)
+            ref = df.select("id", F.coalesce(F.sum(w).over(win), F.lit(0))
+                            .cast("long").alias("b"))
+            assert got == sorted((r.id, r.b) for r in ref.collect())
+            want_tot = {}
+            for i, g, wt in rows:
+                key = g if group_col else None
+                want_tot[key] = want_tot.get(key, 0) \
+                    + (1 if weight is None else wt)
+            assert totals == want_tot
+    if case == "one_group_all_partitions":
+        parts = {r["__part"] for r in
+                 _prefix_before(df, ["id"], "g")[0].collect()}
+        assert len(parts) == spark.sparkContext.defaultParallelism
