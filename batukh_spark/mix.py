@@ -18,15 +18,13 @@ page (/root/reference/batukh/torch/segmenter.py:394-573) — here the
 
 Scale: each stage's story is documented at its definition; the chain
 adds only key joins on doc id between stages.  The input should be a
-materialized extraction (or persisted DataFrame) — keep_set traverses
-it several times before the first internal materialization point.  The
-multiply-consumed INTERNAL frontiers (`kept`: dedup verdict applied,
-feeds the quality gate, the language gate, and the gated join;
-`sampled`: feeds chunking and the final metadata join) are
-localCheckpointed inside `training_mix`, so the dedup + gate lineage
-runs once regardless of how many downstream stages traverse it —
-executor-local storage sized by the surviving corpus, the price of
-not re-running the LSH dedup chain per consumer.
+materialized extraction (`session.materialize`) — keep_set traverses
+it several times before the first internal materialization point.
+Inside `training_mix`, `materialize` cuts the plan at `kept` (dedup
+verdict applied; only when decontamination reads it too) and at
+`enriched` (quality + language columns; the gate filter's barrier),
+so the LSH dedup chain runs once, not once per consumer —
+executor-local storage sized by the surviving corpus.
 """
 
 from __future__ import annotations
@@ -37,6 +35,7 @@ from pyspark.sql import functions as F
 from batukh_spark.operators import dedup, textstats
 from batukh_spark.operators.sampling import stratified_sample
 from batukh_spark.operators.text import chunk_documents
+from batukh_spark.session import materialize
 
 
 def training_mix(docs: DataFrame, rates: dict[str, float],
@@ -68,20 +67,16 @@ def training_mix(docs: DataFrame, rates: dict[str, float],
     from batukh_spark.operators.decontam import decontaminate
 
     ks = dedup.keep_set(docs, id_col, text_col)
-    # localCheckpoint: `kept` is consumed by three subplans (quality,
-    # lang, gated join) — without it the embedded keep_set LSH chain
-    # re-executes per consumer (module docstring, scale note)
-    kept = (docs.join(ks.filter(F.col("keep")).select(id_col), id_col)
-            .localCheckpoint())
+    kept = docs.join(ks.filter(F.col("keep")).select(id_col), id_col)
     if benchmark is not None:
+        # decontaminate reads `kept` twice (grams, id join) and the
+        # join below a third time: run the keep_set LSH chain once
+        kept = materialize(kept, "mix.training_mix:kept")
         dec = decontaminate(kept, benchmark, n=decontam_n,
                             id_col=id_col, text_col=text_col,
                             bench_text_col=bench_text_col or text_col)
-        # re-checkpoint: the decontam gram join would otherwise re-run
-        # per downstream consumer of `kept`
-        kept = (kept.join(dec.filter(~F.col("contaminated"))
-                          .select(id_col), id_col)
-                .localCheckpoint())
+        kept = kept.join(dec.filter(~F.col("contaminated"))
+                         .select(id_col), id_col)
     # enrich IN PLACE via passthrough (round 7): quality and language
     # annotate the same frame as consecutive narrow projections that
     # fuse into one scan — the previous (id, metric) + join-back form
@@ -97,20 +92,19 @@ def training_mix(docs: DataFrame, rates: dict[str, float],
     if keep_unknown_lang:
         ql = ql.withColumn(
             "pred_lang", F.coalesce(F.col("pred_lang"), F.lit("und")))
-    # localCheckpoint BEFORE filtering on the computed columns:
+    # materialize BEFORE filtering on the computed columns:
     # predicate pushdown would otherwise collapse the full quality /
     # lang expression trees into the Filter (and again into the
     # Project above it), and their interpreted higher-order folds get
     # re-evaluated per reference — measured 100x on the gate stage
     # (64s -> 0.6s on a 5k-doc corpus).  The barrier makes the filter
     # see plain materialized columns.
-    enriched = ql.localCheckpoint()
+    enriched = materialize(ql, "mix.training_mix:enriched")
     gated = enriched.filter((F.col("quality") >= quality_min)
                             & F.col("pred_lang").isNotNull())
-    # `sampled` feeds both chunking and the final metadata join
     sampled = stratified_sample(gated, rates, default_rate,
                                 strata_col="pred_lang", id_col=id_col,
-                                salt=salt).localCheckpoint()
+                                salt=salt)
     chunks = chunk_documents(sampled, max_tokens, overlap,
                              id_col=id_col, text_col=text_col)
     return chunks.join(
@@ -154,7 +148,7 @@ def sft_mix(turns: DataFrame, weights: dict[str, float],
     reach the output (the stats join is on this corpus's turns).
 
     Scale: assembly is the one text-carrying shuffle; the assembled
-    docs are localCheckpointed ONCE and feed dedup + the stats join
+    docs are materialized ONCE and feed dedup + the stats join
     (keep_set alone traverses its input three times); the split is
     scan-local codegen; the span stats shuffle ints keyed by
     conversation.  Every stage's deeper story is at its definition.
@@ -163,8 +157,9 @@ def sft_mix(turns: DataFrame, weights: dict[str, float],
         assemble_conversations, loss_mask_spans)
     from batukh_spark.operators.sampling import split_assign
 
-    docs = assemble_conversations(turns, id_col, order_col, role_col,
-                                  text_col, sep).localCheckpoint()
+    docs = materialize(assemble_conversations(turns, id_col, order_col,
+                                              role_col, text_col, sep),
+                       "mix.sft_mix:docs")
     dd_in = docs.select(F.col(id_col).alias("doc_id"),
                         F.col("doc_text").alias("text"))
     if extra_docs is not None:

@@ -25,6 +25,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from batukh_spark.operators.text import tokens_col, word_shingles
+from batukh_spark.session import materialize
 
 N_HASHES = 16          # minhash signature length
 N_BANDS = 4            # LSH bands (4 rows/band): ~Jaccard>0.5 candidates
@@ -120,8 +121,8 @@ def lsh_candidate_pairs(docs: DataFrame, id_col: str = "doc_id",
     # contrary to the earlier assumption here).  Interleaved A/B at
     # sf0.1: pairs 1.13 -> 1.03 s, full keep_set 2.93 -> 2.69 s median.
     # The checkpoint is n_hashes x 32 B + id per doc — metadata-sized.
-    sigs = minhash_signature(docs, id_col, text_col, n_hashes) \
-        .localCheckpoint()
+    sigs = materialize(minhash_signature(docs, id_col, text_col, n_hashes),
+                       "dedup.lsh_candidate_pairs:sigs")
     bands = minhash_bands(sigs, id_col, n_hashes, n_bands)
     left = bands.alias("a")
     right = bands.alias("b")
@@ -144,34 +145,28 @@ def resolve_clusters(pairs: DataFrame, id_a: str = "id_a",
     dedup keep-set retains.  This is the last mile LSH needs — real
     corpus dedup drops *clusters*, not pairs.
 
-    Scale: each iteration is one join + groupBy shuffled on id — the
-    min-label propagation step of the large-star/small-star connected-
-    components algorithm; iterations needed = graph diameter, and
-    near-dup graphs are overwhelmingly tiny cliques (diameter 1-2) with
-    rare short chains, so max_iters=20 is generous.  localCheckpoint
-    cuts lineage per iteration (no exponential plan growth).  Raises if
-    propagation hasn't converged by max_iters rather than returning a
-    silently-partial clustering.
+    Scale: plain min-label propagation — each round (one join +
+    groupBy shuffled on id, materialized so plans do not grow) lowers
+    every label to its neighbours' minimum, so rounds = graph diameter.
+    Near-dup graphs are mostly tiny cliques (diameter 1-2); a chain
+    longer than max_iters raises RuntimeError rather than returning a
+    silently-partial clustering (ROADMAP direction 4: logarithmic
+    rounds).
     """
     # symmetrize via ONE explode pass, not a two-arm union: the union
     # form re-executed the whole upstream candidate-generation DAG
     # (e.g. the LSH band self-join) once PER ARM during edge
     # materialization — no subtree reuse fires across union branches
     # (round-7 plan sweep; interleaved A/B on keep_set 2.87 -> 2.77 s
-    # at sf0.1, and at scale the candidate join is the dominant stage
-    # so running it once instead of twice is the real win)
-    edges = (pairs.select(F.explode(F.array(
-                 F.struct(F.col(id_a).alias("src"),
-                          F.col(id_b).alias("dst")),
-                 F.struct(F.col(id_b).alias("src"),
-                          F.col(id_a).alias("dst")))).alias("__e"))
-             .select("__e.src", "__e.dst")
-             .distinct()
-             # materialize ONCE: every propagation round joins edges,
-             # and without this each round re-executes the whole
-             # upstream candidate-generation DAG (e.g. the full
-             # minhash+LSH pipeline) — a per-iteration corpus re-scan
-             .localCheckpoint())
+    # at sf0.1; at scale the candidate join is the dominant stage, so
+    # running it once instead of twice is the real win).  Materialized
+    # ONCE: every propagation round joins edges, and would otherwise
+    # re-execute the whole upstream candidate-generation DAG
+    edges = materialize(pairs.select(F.explode(F.array(
+        F.struct(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
+        F.struct(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))))
+        .alias("__e")).select("__e.src", "__e.dst").distinct(),
+        "dedup.resolve_clusters:edges")
     # empty candidate graph (a fully-distinct corpus): skip the
     # propagation loop — each round costs fixed shuffle overhead even
     # over empty inputs, and the edges are already materialized so
@@ -185,11 +180,10 @@ def resolve_clusters(pairs: DataFrame, id_a: str = "id_a",
     # ONE groupBy — no self-label table to build and join first.  For
     # the dominant near-dup graph shape (tiny cliques, diameter 1-2)
     # this alone is the fixpoint and the loop below only confirms it.
-    labels = (edges.groupBy("src")
-              .agg(F.min("dst").alias("__m"))
-              .select(F.col("src").alias("id"),
-                      F.least(F.col("__m"), F.col("src")).alias("label"))
-              .localCheckpoint())
+    labels = materialize(edges.groupBy("src").agg(F.min("dst").alias("__m"))
+                         .select(F.col("src").alias("id"),
+                                 F.least("__m", "src").alias("label")),
+                         "dedup.resolve_clusters:seed")
     for _ in range(max_iters):
         nbr_min = (edges.join(labels, edges.dst == labels.id)
                    .groupBy("src").agg(F.min("label").alias("nbr")))
@@ -198,12 +192,12 @@ def resolve_clusters(pairs: DataFrame, id_a: str = "id_a",
         # per-iteration labels-vs-labels equality JOIN this replaces
         # was two extra exchanges per round (measured ~40% of the
         # whole propagation wall on clique-shaped graphs)
-        new_labels = (labels.join(nbr_min, labels.id == nbr_min.src, "left")
-                      .select(labels.id, F.col("label").alias("__old"),
-                              F.least(F.col("label"),
-                                      F.coalesce("nbr", F.col("label")))
-                              .alias("label"))
-                      .localCheckpoint())
+        new_labels = materialize(
+            labels.join(nbr_min, labels.id == nbr_min.src, "left")
+            .select(labels.id, F.col("label").alias("__old"),
+                    F.least("label", F.coalesce("nbr", "label"))
+                    .alias("label")),
+            "dedup.resolve_clusters:round")
         changed = (new_labels
                    .filter(F.col("label") != F.col("__old"))
                    .limit(1).count())
@@ -313,8 +307,9 @@ def simhash_candidate_pairs(docs: DataFrame, id_col: str = "doc_id",
     # one signature job after) — each side would re-tokenize and
     # re-hash the corpus.  The checkpoint is (id, 64-char sig) rows,
     # metadata-sized at any corpus scale.
-    sigs = simhash(docs.filter(F.size(tokens_col(text_col)) > 0),
-                   id_col, text_col, bits).localCheckpoint()
+    sigs = materialize(simhash(docs.filter(F.size(tokens_col(text_col)) > 0),
+                               id_col, text_col, bits),
+                       "dedup.simhash_candidate_pairs:sigs")
     band_cols = [F.substring("simhash", b * rows_per_band + 1,
                              rows_per_band) for b in range(n_bands)]
     # the full signature rides through the explode (64 bytes/row) so
@@ -387,10 +382,10 @@ def keep_set(docs: DataFrame, id_col: str = "doc_id",
     # join), and without the barrier each consumer re-runs the corpus
     # scan + canonicalization + md5 — the checkpoint is metadata-sized
     # at any corpus scale
-    hashes = docs.select(
+    hashes = materialize(docs.select(
         F.col(id_col),
-        F.md5(canonical_text(F.col(text_col))).alias("text_hash")) \
-        .localCheckpoint()
+        F.md5(canonical_text(F.col(text_col))).alias("text_hash")),
+        "dedup.keep_set:hashes")
     exact = hashes.groupBy("text_hash").agg(F.min(id_col).alias("keep_id"))
     with_exact = hashes.join(exact, "text_hash") \
         .select(F.col(id_col), F.col("keep_id"))

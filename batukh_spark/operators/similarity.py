@@ -19,6 +19,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from batukh_spark.session import materialize
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
@@ -112,17 +114,18 @@ def kmeans_centroids(emb: DataFrame, k: int = 8, iters: int = 2,
         assigned = _assign(q, cents, id_col, keep_q=True, dim=dim, k=k)
         dims = [F.sum(F.col("q").getItem(i)).alias(f"s{i}")
                 for i in range(dim)]
-        cents = (assigned.groupBy("cluster")
-                 .agg(F.count(F.lit(1)).alias("n"), *dims)
-                 .select(F.col("cluster").alias("c_id"),
-                         F.array(*[(F.col(f"s{i}") / F.col("n"))
-                                   .alias(f"d{i}")
-                                   for i in range(dim)]).alias("c_vec"))
-                 # materialize the k-row codebook: without this every
-                 # downstream action re-executes ALL previous Lloyd
-                 # rounds (the plan nests per round) — at 10^9 vectors
-                 # that re-scans the corpus once per round per action
-                 .localCheckpoint())
+        # materialize the k-row codebook: without this every downstream
+        # action re-executes ALL previous Lloyd rounds (the plan nests
+        # per round) — at 10^9 vectors that re-scans the corpus once
+        # per round per action
+        cents = materialize(
+            assigned.groupBy("cluster")
+            .agg(F.count(F.lit(1)).alias("n"), *dims)
+            .select(F.col("cluster").alias("c_id"),
+                    F.array(*[(F.col(f"s{i}") / F.col("n"))
+                              .alias(f"d{i}")
+                              for i in range(dim)]).alias("c_vec")),
+            "similarity.kmeans_centroids:round")
     return cents
 
 
@@ -426,10 +429,10 @@ def srp_candidate_pairs(emb: DataFrame, n_bits: int = 32,
     # band_sig) — n_bands short rows per vector, a tiny fraction of
     # the corpus bytes, exactly what build_embedding_store persists
     # for the same reason.
-    bands = sigs.select(
+    bands = materialize(sigs.select(
         F.col(id_col),
-        F.posexplode(F.array(*band_cols)).alias("band_id", "band_sig")) \
-        .localCheckpoint()
+        F.posexplode(F.array(*band_cols)).alias("band_id", "band_sig")),
+        "similarity.srp_candidate_pairs:bands")
     if max_bucket is not None:
         if not (isinstance(max_bucket, int) and max_bucket >= 2):
             raise ValueError(f"max_bucket must be an int >= 2 or None, "
@@ -738,10 +741,10 @@ def embedding_keep_set(emb: DataFrame, n_bits: int = 32,
     # full corpus scans at production scale.  Executor-local storage
     # holds id + dim doubles + 32B hash per vector — the same budget
     # build_embedding_store commits to disk for the incremental path.
-    vecsh = (emb.select(F.col(id_col),
-                        F.col(vec_col).cast("array<double>").alias("__e"),
-                        vec_hash(F.col(vec_col)).alias("__vh"))
-             .localCheckpoint())
+    vecsh = materialize(emb.select(
+        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__e"),
+        vec_hash(F.col(vec_col)).alias("__vh")),
+        "similarity.embedding_keep_set:vecsh")
     hashes = vecsh.select(F.col(id_col), F.col("__vh"))
     exact = hashes.groupBy("__vh").agg(F.min(id_col).alias("keep_id"))
     with_exact = hashes.join(exact, "__vh") \
@@ -752,10 +755,9 @@ def embedding_keep_set(emb: DataFrame, n_bits: int = 32,
     # interleaved A/B: 6.65 -> 6.21 s median on the sf0.1 registry
     # corpus; at scale this trades one rep-vector materialization for
     # two full vector shuffles).
-    reps = (vecsh.select(F.col(id_col), F.col("__e"))
-            .join(exact.select(F.col("keep_id").alias(id_col)),
-                  id_col, "left_semi")
-            .localCheckpoint())
+    reps = materialize(vecsh.select(F.col(id_col), F.col("__e")).join(
+        exact.select(F.col("keep_id").alias(id_col)), id_col, "left_semi"),
+        "similarity.embedding_keep_set:reps")
     pairs = (srp_near_dup_pairs(reps, n_bits=n_bits, n_bands=n_bands,
                                 dim=dim, threshold=threshold,
                                 id_col=id_col, vec_col="__e",
@@ -1039,10 +1041,10 @@ def incremental_embedding_keep_set(spark, new_emb: DataFrame,
     # checkpoint is the batch itself (the small side of incremental
     # dedup by design), never the store.  The double-cast is a no-op
     # for already-double input, so signature/hash bits are unchanged.
-    nvecs = (new_emb.select(F.col(id_col),
-                            F.col(vec_col).cast("array<double>")
-                            .alias("__ne"))
-             .localCheckpoint())
+    nvecs = materialize(
+        new_emb.select(F.col(id_col),
+                       F.col(vec_col).cast("array<double>").alias("__ne")),
+        "similarity.incremental_embedding_keep_set:nvecs")
     sigs = srp_signature(nvecs, n_bits, dim, id_col, "__ne")
     rpb = n_bits // n_bands
     band_cols = [F.substring("sig", b * rpb + 1, rpb)

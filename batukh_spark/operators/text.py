@@ -11,6 +11,8 @@ from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from batukh_spark.session import materialize
+
 
 def tokens_col(text: Column | str) -> Column:
     """lower → whitespace-split → drop empties.
@@ -218,7 +220,7 @@ def _prefix_before(df, order_cols, group_col=None, weight=None):
 
     Scale (distributed prefix sum, never a SinglePartition window):
       1. range-repartition by (group_col, *order_cols) and materialize
-         once (localCheckpoint), so the partition ids seen by the totals
+         once (`materialize`), so the partition ids seen by the totals
          job and the output job are identical; a group's rows then
          occupy consecutive partitions in partition-id order;
       2. per-(partition, group) exclusive running sum via a window keyed
@@ -235,10 +237,10 @@ def _prefix_before(df, order_cols, group_col=None, weight=None):
     spark = df.sparkSession
     groups = [group_col] if group_col else []
     w = F.lit(1).cast("long") if weight is None else F.col(weight)
-    ordered = (df.repartitionByRange(
+    ordered = materialize(df.repartitionByRange(
         spark.sparkContext.defaultParallelism, *groups, *order_cols)
-        .withColumn("__part", F.spark_partition_id())
-        .localCheckpoint())
+        .withColumn("__part", F.spark_partition_id()),
+        "text._prefix_before:ordered")
     win = (Window.partitionBy("__part", *groups).orderBy(*order_cols)
            .rowsBetween(Window.unboundedPreceding, -1))
     local = ordered.withColumn(
@@ -337,7 +339,7 @@ def assemble_sequences(chunks, seq_len: int = 256,
     final assembly is a groupBy(seq_id) whose groups are bounded by
     seq_len tokens.
 
-    The pruned chunk table is localCheckpointed ONCE at entry: the
+    The pruned chunk table is materialized ONCE at entry: the
     packing math (via pack_sequences' internal materialization) and
     the text join otherwise each re-execute the whole upstream chunk
     construction (round-7 interleaved A/B: 1.60 s -> 1.47 s median on
@@ -345,8 +347,8 @@ def assemble_sequences(chunks, seq_len: int = 256,
     training_batches capstone, whose upstream is already checkpoint-
     fed).  Executor-storage cost is the chunk table itself — the same
     bytes the text join already shuffles."""
-    chunks = chunks.select(doc_col, idx_col, ntok_col, text_col) \
-        .localCheckpoint()
+    chunks = materialize(chunks.select(doc_col, idx_col, ntok_col, text_col),
+                         "text.assemble_sequences:chunks")
     pieces = pack_sequences(chunks, seq_len, doc_col, idx_col, ntok_col)
     withtext = pieces.join(
         chunks.select(doc_col, idx_col, text_col), [doc_col, idx_col])

@@ -13,6 +13,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from batukh_spark.operators.text import char_grams_md5, tokens_col
+from batukh_spark.session import materialize
 
 # per-language stopword profiles for the stopword-hit heuristic —
 # 12 languages x 16 high-frequency function words; deterministic
@@ -545,13 +546,11 @@ def fingerprint_candidate_pairs(docs: DataFrame, id_col: str = "doc_id",
     passages (measured on the test corpus: cap 100 ~ all-pairs, cap 5 ~
     0.2-4% of pairs); raise it for passage-level recall at the cost of
     quadratic-in-df bucket work."""
-    # codegen winnowing (see _winnow_fps), materialized ONCE via lazy
-    # localCheckpoint: the fingerprint table feeds THREE subplans below
-    # (df counts + both self-join sides).  The checkpointed rows are
-    # (id, 32B fp) — the MOSS index a production run would persist
-    # anyway.
-    fps = _winnow_fps(docs, id_col, text_col, k, w) \
-        .localCheckpoint(eager=False)
+    # codegen winnowing (see _winnow_fps), materialized ONCE: THREE
+    # subplans read it (df counts + both self-join sides); its rows are
+    # (id, 32B fp), the MOSS index a production run would persist anyway
+    fps = materialize(_winnow_fps(docs, id_col, text_col, k, w),
+                      "textstats.fingerprint_candidate_pairs:fps")
     rare = (fps.groupBy("fp")
             .agg(F.count(F.lit(1)).alias("__df"))
             .filter(F.col("__df") <= max_df)
@@ -600,8 +599,8 @@ def unigram_logprob(docs: DataFrame, id_col: str = "doc_id",
     tok = (docs
            .select(F.col(id_col),
                    F.explode(tokens_col(text_col)).alias("__t")))
-    vocab = (tok.groupBy("__t").agg(F.count(F.lit(1)).alias("__c"))
-             .localCheckpoint())
+    vocab = materialize(tok.groupBy("__t").agg(F.count("*").alias("__c")),
+                        "textstats.unigram_logprob:vocab")
     total = vocab.agg(F.sum("__c")).collect()[0][0] or 0
     ln_n_micro = round(math.log(total) * 1e6) if total > 0 else 0
     lq = F.round(F.log(F.col("__c").cast("double")) * 1e6, 0).cast("long")
@@ -654,9 +653,9 @@ def bigram_logprob(docs: DataFrame, id_col: str = "doc_id",
     pairs = F.zip_with(F.slice("__tk", 1, F.greatest(n - 1, F.lit(0))),
                        F.slice("__tk", 2, F.greatest(n - 1, F.lit(0))),
                        lambda a, b: F.concat_ws(" ", a, b))
-    big = (toks.select(F.col(id_col),
-                       F.explode(pairs).alias("__bg"))
-           .localCheckpoint())
+    big = materialize(
+        toks.select(F.col(id_col), F.explode(pairs).alias("__bg")),
+        "textstats.bigram_logprob:bigrams")
     left = F.split(F.col("__bg"), " ", 2)[0]
     c2 = big.groupBy("__bg").agg(F.count(F.lit(1)).alias("__c2"))
     c1 = (big.groupBy(left.alias("__w1"))

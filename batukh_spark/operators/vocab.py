@@ -13,7 +13,7 @@ in Spark's native shapes:
     -> one map-side-combined groupBy(pair) -> a ONE-ROW argmax collect
     (the planning-collect class) -> a scan-local fold applying the
     winning merge to every word's symbol array (greedy leftmost,
-    the reference BPE application order), localCheckpointed so round
+    the reference BPE application order), materialized so round
     r+1 does not re-execute rounds 1..r.
 
 Determinism: counts are integers, the argmax tie-break is (count desc,
@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from batukh_spark.session import materialize
 
 # training only considers word-ish tokens (standard BPE
 # pre-tokenization); this also guarantees symbols never contain the
@@ -86,17 +88,15 @@ def _train_bpe_full(docs: DataFrame, n_merges: int, text_col: str):
     if not (isinstance(n_merges, int) and 1 <= n_merges <= 64):
         raise ValueError(f"n_merges must be in [1, 64], got {n_merges!r}")
     from batukh_spark.operators.text import tokens_col
-    words = (docs
-             .select(F.explode(tokens_col(text_col)).alias("w"))
-             .where(F.col("w").rlike(BPE_WORD_RE))
-             .groupBy("w").agg(F.count(F.lit(1)).alias("n"))
-             .select(
-                 "w", "n",
-                 F.transform(
-                     F.sequence(F.lit(1), F.length("w")),
-                     lambda i: F.col("w").substr(i, F.lit(1)))
-                 .alias("syms"))
-             .localCheckpoint())
+    words = materialize(
+        docs.select(F.explode(tokens_col(text_col)).alias("w"))
+        .where(F.col("w").rlike(BPE_WORD_RE))
+        .groupBy("w").agg(F.count(F.lit(1)).alias("n"))
+        .select("w", "n",
+                F.transform(F.sequence(F.lit(1), F.length("w")),
+                            lambda i: F.col("w").substr(i, F.lit(1)))
+                .alias("syms")),
+        "vocab._train_bpe_full:words")
     out_rows = []
     for rnd in range(1, n_merges + 1):
         pair = F.explode(
@@ -117,10 +117,10 @@ def _train_bpe_full(docs: DataFrame, n_merges: int, text_col: str):
         left, right = best[0]["pair"].split("\x1f")
         out_rows.append((rnd, left, right, left + right,
                          int(best[0]["cnt"])))
-        words = (words.select(
+        words = materialize(words.select(
             "w", "n",
-            _apply_merge(F.col("syms"), left, right).alias("syms"))
-            .localCheckpoint())
+            _apply_merge(F.col("syms"), left, right).alias("syms")),
+            "vocab._train_bpe_full:round")
     return out_rows, words
 
 

@@ -59,6 +59,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from batukh_spark import kernels
+from batukh_spark.session import materialize
 from batukh_spark.sources import io as bio
 
 # max turns one conversation contributes to a single work unit
@@ -311,17 +312,17 @@ def compact_manifest(spark: SparkSession, metrics: str,
     this, a long-lived dataset's manifest grows by (units x runs) and
     every resume scans unbounded history.
 
-    Returns the number of rows kept.  The survivor set materializes via
-    localCheckpoint (executor storage) before the source path is
+    Returns the number of rows kept.  The survivor set is materialized
+    (`session.materialize`, executor storage) before the source path is
     overwritten — the manifest is metadata-scale (rows = units kept), so
     this stays cheap even at 10^7 units."""
     m = bio.read_manifest(spark, metrics)
     if m is None:
         return 0
     w = Window.partitionBy("unit").orderBy(F.desc("ts"), F.desc("run_id"))
-    kept = (m.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= max_to_keep).drop("_rn")
-            .localCheckpoint())
+    kept = materialize(m.withColumn("_rn", F.row_number().over(w))
+                       .filter(F.col("_rn") <= max_to_keep).drop("_rn"),
+                       "pipeline.compact_manifest:kept")
     n = kept.count()
     bio.rewrite_manifest(kept, metrics)
     return n

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from batukh_spark.operators import dedup, similarity, textstats
 from batukh_spark.operators.text import tokens_col
+from batukh_spark.session import materialize
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -590,11 +591,12 @@ select doc_id, reason = 'unique' as keep, reason from verdict
 
 def simhash_adjacent_hamming(spark, sf):
     docs = t_spread(spark, sf, "documents")
-    # localCheckpoint: both self-join sides consume sigs and no
+    # materialize: both self-join sides consume sigs and no
     # ReusedExchange fires across the Arrow vote projection, so the
     # signature would be computed twice (interleaved A/B: 1.28 s ->
     # 1.00 s median at sf0.1) — same fix as simhash_candidate_pairs
-    sigs = dedup.simhash(docs).localCheckpoint()
+    sigs = materialize(dedup.simhash(docs),
+                       "queries.simhash_adjacent_hamming:sigs")
     a = sigs.alias("a")
     b = sigs.alias("b")
     return (a.join(b, F.col("b.doc_id") == F.col("a.doc_id") + 1)
@@ -2516,7 +2518,6 @@ def training_mix_q(spark, sf):
     kernel."""
     from batukh_spark import kernels
     from batukh_spark.mix import training_mix
-    from pyspark import StorageLevel
 
     docs = t_spread(spark, sf, "documents")
     pages = docs.select(
@@ -2534,10 +2535,11 @@ def training_mix_q(spark, sf):
         F.col("extracted_text").alias("text"))
     twins = extracted.filter(F.col("doc_id") % 25 == 0).select(
         (F.col("doc_id") + 1000000).alias("doc_id"), "text")
-    # the mix traverses the corpus once per stage family — persist the
-    # extraction so the kernel runs once, not once per downstream branch
-    corpus = extracted.unionByName(twins) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    # the mix traverses the corpus once per stage family (keep_set,
+    # the gated join, the benchmark slice) — materialize the extraction
+    # so the kernel runs once, not once per downstream branch
+    corpus = materialize(extracted.unionByName(twins),
+                         "queries.training_mix:corpus")
     # eval benchmark = a slice of the corpus itself (doc_id % 40 = 7,
     # originals only) -> those docs are full-overlap contaminated and
     # must be dropped by the decontamination stage before sampling
@@ -2630,6 +2632,15 @@ def extract_transcripts(spark, sf):
                       F.col("n_blocks").cast("long").alias("n_blocks"),
                       F.col("n_kept").cast("long").alias("n_kept"),
                       "extracted_text")
+
+
+def _extracted_turns(spark, sf, name: str) -> DataFrame:
+    """The flagship turns (conv_id, turn_idx, role, extracted_text),
+    materialized as `name`: every caller reads them more than once, and
+    the opaque mapInArrow defeats subtree reuse, so the barrier runs
+    the kernel once instead of once per consumer."""
+    return materialize(extract_transcripts(spark, sf).select(
+        "conv_id", "turn_idx", "role", "extracted_text"), name)
 
 
 # shared doc-stats CTE: canonical text + word list/count
@@ -2973,14 +2984,14 @@ def epoch_order_q(spark, sf):
                                              pack_sequences)
     chunks = chunk_documents(t_spread(spark, sf, "documents"),
                              max_tokens=64, overlap=8)
-    # localCheckpoint: seqs feeds BOTH the rank computation and the
+    # materialize: seqs feeds BOTH the rank computation and the
     # final join base — without it the pieces Generate + groupBy
     # subtree re-executes per consumer (plan-verified)
-    seqs = (pack_sequences(chunks, seq_len=256)
-            .groupBy("seq_id")
-            .agg(F.sum(F.col("tok_end") - F.col("tok_begin"))
-                 .cast("long").alias("n_tokens"))
-            .localCheckpoint())
+    seqs = materialize(pack_sequences(chunks, seq_len=256)
+                       .groupBy("seq_id")
+                       .agg(F.sum(F.col("tok_end") - F.col("tok_begin"))
+                            .cast("long").alias("n_tokens")),
+                       "queries.epoch_order:seqs")
     ranks = epoch_order(seqs, epoch=7)
     return seqs.join(ranks, "seq_id").select(
         "seq_id", "n_tokens", "epoch_rank")
@@ -3050,10 +3061,11 @@ def boilerplate_turns_q(spark, sf):
         .alias("conv_id"),
         F.lit(3).alias("turn_idx"),
         F.lit(_GREETING).alias("extracted_text"))
-    # localCheckpoint: the turns feed BOTH the stats aggregation and
+    # materialize: the turns feed BOTH the stats aggregation and
     # the flag join — without the barrier the extraction kernel would
     # re-run once per consumer (the training_mix re-traversal lesson)
-    allt = turns.unionByName(greet).localCheckpoint()
+    allt = materialize(turns.unionByName(greet),
+                       "queries.boilerplate_turns:turns")
     return boilerplate_turns(allt, min_convs=3).select(
         "conv_id", "turn_idx", "n_convs", "is_boilerplate")
 
@@ -3109,10 +3121,7 @@ def repetition_loops_q(spark, sf):
     (partial overlap); the base 3-turn conversations have no same-role
     adjacency, so every output row is a planted comparison."""
     from batukh_spark.operators.conversations import repetition_loops
-    # localCheckpoint: ext feeds four union branches — one kernel run,
-    # not one per branch (opaque mapInArrow defeats subtree reuse)
-    ext = extract_transcripts(spark, sf).select(
-        "conv_id", "turn_idx", "role", "extracted_text").localCheckpoint()
+    ext = _extracted_turns(spark, sf, "queries.repetition_loops:ext")
     num = F.substring("conv_id", 2, 100).cast("long")
     asst = ext.filter(F.col("turn_idx") == 1)
     dup = asst.filter(num % 13 == 0).select(
@@ -3129,9 +3138,8 @@ def repetition_loops_q(spark, sf):
     ctl = (ext.filter((F.col("turn_idx") == 1) & (num % 19 == 0))
            .select("conv_id", F.lit(5).alias("turn_idx"), "role",
                    F.lit(_ctl_text).alias("extracted_text")))
-    allt = (ext.unionByName(dup).unionByName(part).unionByName(ctl)
-            .localCheckpoint())
-    return repetition_loops(allt)
+    return repetition_loops(
+        ext.unionByName(dup).unionByName(part).unionByName(ctl))
 
 
 REPETITION_LOOPS_SQL = (
@@ -3237,11 +3245,7 @@ def merge_turns_q(spark, sf):
     produce the same maximal runs, first-turn indices, newline-joined
     texts, and merge counts."""
     from batukh_spark.operators.conversations import merge_consecutive_turns
-    # localCheckpoint: ext feeds FOUR union branches below, and the
-    # opaque mapInArrow kernel is re-executed per consumer (no subtree
-    # reuse across union arms) — the barrier runs the kernel once
-    ext = extract_transcripts(spark, sf).select(
-        "conv_id", "turn_idx", "role", "extracted_text").localCheckpoint()
+    ext = _extracted_turns(spark, sf, "queries.merge_turns:ext")
     num = F.substring("conv_id", 2, 100).cast("long")
     t1 = ext.filter(F.col("turn_idx") == 1)
     p3 = t1.filter(num % 13 == 0).select(
@@ -3255,9 +3259,8 @@ def merge_turns_q(spark, sf):
         "conv_id", F.lit(5).alias("turn_idx"),
         F.lit("tool").alias("role"),
         F.lit("second flush of the same result").alias("extracted_text"))
-    allt = (ext.unionByName(p3).unionByName(p4).unionByName(p5)
-            .localCheckpoint())
-    return merge_consecutive_turns(allt)
+    return merge_consecutive_turns(
+        ext.unionByName(p3).unionByName(p4).unionByName(p5))
 
 
 MERGE_TURNS_SQL = (
@@ -4112,24 +4115,20 @@ def conversation_keep_set_q(spark, sf):
     the verdict matches whatever the banding decides)."""
     from batukh_spark.operators.conversations import assemble_conversations
     num = F.substring("conv_id", 2, 100).cast("long")
-    # localCheckpoint: conv feeds three union branches (base + both
+    # materialize: conv feeds three union branches (base + both
     # planted-twin arms) — one kernel+assembly run, not three
-    conv = (assemble_conversations(extract_transcripts(spark, sf))
-            .select(F.col("conv_id").alias("doc_id"),
-                    F.col("doc_text").alias("text"),
-                    num.alias("__n"))
-            .localCheckpoint())
+    conv = materialize(
+        assemble_conversations(extract_transcripts(spark, sf)).select(
+            F.col("conv_id").alias("doc_id"),
+            F.col("doc_text").alias("text"), num.alias("__n")),
+        "queries.conversation_keep_set:conv")
     twins = conv.filter(F.col("__n") % 25 == 0).select(
         F.concat("doc_id", F.lit("_x")).alias("doc_id"), "text")
     near = conv.filter(F.col("__n") % 37 == 0).select(
         F.concat("doc_id", F.lit("_y")).alias("doc_id"),
         F.concat("text", F.lit(" zzz")).alias("text"))
-    # localCheckpoint: keep_set consumes its input on three subplans
-    # (hashes, rep semi-join, LSH chain) — without the barrier the
-    # extraction kernel + assembly would re-run per consumer
-    alldocs = (conv.drop("__n").unionByName(twins).unionByName(near)
-               .localCheckpoint())
-    return dedup.keep_set(alldocs)
+    return dedup.keep_set(
+        conv.drop("__n").unionByName(twins).unionByName(near))
 
 
 # DuckDB rejects a nested WITH inside a `WITH RECURSIVE` CTE body, so
@@ -4202,24 +4201,19 @@ def sft_mix_q(spark, sf):
     (span_end - span_start telescopes to plen - hlen), making it an
     independent derivation of the Spark side's windowed arithmetic."""
     from batukh_spark.mix import sft_mix
-    # localCheckpoint: ext feeds the twin-construction assembly AND
-    # sft_mix's own assembly + loss-mask span pass — one kernel run
-    # (mix.py's documented materialized-input contract)
-    ext = extract_transcripts(spark, sf).select(
-        "conv_id", "turn_idx", "role", "extracted_text").localCheckpoint()
+    ext = _extracted_turns(spark, sf, "queries.sft_mix:ext")
     from batukh_spark.operators.conversations import assemble_conversations
-    conv = assemble_conversations(ext).select(
-        F.col("conv_id").alias("doc_id"),
-        F.col("doc_text").alias("text"),
-        F.substring("doc_id", 2, 100).cast("long").alias("__n")) \
-        .localCheckpoint()
+    conv = materialize(assemble_conversations(ext).select(
+        F.col("conv_id").alias("doc_id"), F.col("doc_text").alias("text"),
+        F.substring("doc_id", 2, 100).cast("long").alias("__n")),
+        "queries.sft_mix:conv")
     twins = conv.filter(F.col("__n") % 25 == 0).select(
         F.concat("doc_id", F.lit("_x")).alias("doc_id"), "text")
     near = conv.filter(F.col("__n") % 37 == 0).select(
         F.concat("doc_id", F.lit("_y")).alias("doc_id"),
         F.concat("text", F.lit(" zzz")).alias("text"))
-    extra = twins.unionByName(near).localCheckpoint()
-    return sft_mix(ext, _SPLIT_WEIGHTS, extra_docs=extra)
+    return sft_mix(ext, _SPLIT_WEIGHTS,
+                   extra_docs=twins.unionByName(near))
 
 
 def _sft_mix_sql() -> str:
@@ -4334,11 +4328,12 @@ def _response_cands(spark, sf):
     (best_of_n, preference_pairs): each conversation's assistant turn
     spawns three scored candidates — original, half-truncation,
     self-repetition — ranked by quality_score."""
-    # localCheckpoint: three candidate branches consume ext — one
+    # materialize: three candidate branches consume ext — one
     # kernel run, not three (opaque mapInArrow defeats subtree reuse)
-    ext = (extract_transcripts(spark, sf)
-           .filter(F.col("turn_idx") == 1)
-           .select("conv_id", "extracted_text").localCheckpoint())
+    ext = materialize(extract_transcripts(spark, sf)
+                      .filter(F.col("turn_idx") == 1)
+                      .select("conv_id", "extracted_text"),
+                      "queries._response_cands:ext")
     from batukh_spark.operators.text import tokens_col
     tk = tokens_col("extracted_text")
     half = F.array_join(
@@ -4354,7 +4349,7 @@ def _response_cands(spark, sf):
                     F.concat("conv_id", F.lit("#2")).alias("cand_id"),
                     F.concat("extracted_text", F.lit("\n"),
                              "extracted_text").alias("text"))
-    cands = c0.unionByName(c1).unionByName(c2).localCheckpoint()
+    cands = c0.unionByName(c1).unionByName(c2)
     # passthrough enrich: conv_id rides through the quality scan, so
     # no join back against the candidate table is needed
     return textstats.quality_score(cands, "cand_id", "text",
@@ -4437,11 +4432,9 @@ def packed_loss_masks_q(spark, sf):
     window offsets -> conversation stream prefix sum -> generate_series
     sequence overlaps -> interval intersection."""
     from batukh_spark.operators.conversations import packed_loss_masks
-    # localCheckpoint: the operator consumes its input twice (per-turn
-    # offsets + conversation totals) — one kernel run, not two
-    ext = extract_transcripts(spark, sf).select(
-        "conv_id", "turn_idx", "role", "extracted_text").localCheckpoint()
-    return packed_loss_masks(ext, seq_len=128)
+    return packed_loss_masks(
+        _extracted_turns(spark, sf, "queries.packed_loss_masks:ext"),
+        seq_len=128)
 
 
 _PLM_L = 128
@@ -4539,13 +4532,8 @@ def _trace_turns(spark, sf):
     drops it) and planted anomalies — conv%7==0 gets a failing tool
     turn (ERROR marker appended), conv%9==0 gets a SECOND tool (a
     'calc' turn whose text is a Traceback), conv%11==0 gets a
-    user->user double-send (turns 3 and 4).
-
-    ext is localCheckpointed: FOUR union branches consume it, and the
-    opaque mapInArrow kernel re-executes per consumer without the
-    barrier (measured 4x the kernel cost on every trace query)."""
-    ext = extract_transcripts(spark, sf).select(
-        "conv_id", "turn_idx", "role", "extracted_text").localCheckpoint()
+    user->user double-send (turns 3 and 4)."""
+    ext = _extracted_turns(spark, sf, "queries._trace_turns:ext")
     num = F.substring("conv_id", 2, 100).cast("long")
     base = ext.select(
         "conv_id", "turn_idx", "role",
@@ -4666,11 +4654,8 @@ def sft_samples_q(spark, sf):
     exactly consistent with assembly
     (operators/conversations.sft_samples)."""
     from batukh_spark.operators.conversations import sft_samples
-    # localCheckpoint: sft_samples consumes its input twice (span
-    # offsets + document assembly) — one kernel run, not two
-    ext = extract_transcripts(spark, sf).select(
-        "conv_id", "turn_idx", "role", "extracted_text").localCheckpoint()
-    return sft_samples(ext)
+    return sft_samples(
+        _extracted_turns(spark, sf, "queries.sft_samples:ext"))
 
 
 SFT_SAMPLES_SQL = (

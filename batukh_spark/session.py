@@ -1,10 +1,11 @@
-"""SparkSession factory with the engine's tuned defaults."""
+"""SparkSession factory with the engine's tuned defaults, and the
+engine's one plan cut (`materialize`)."""
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(app_name: str = "batukh-spark", cores: int | None = None,
@@ -59,3 +60,20 @@ def get_spark(app_name: str = "batukh-spark", cores: int | None = None,
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def materialize(df: DataFrame, name: str) -> DataFrame:
+    """Eager localCheckpoint of `df` into executor storage — the engine's
+    one plan cut.  Its jobs carry `name` ("<module>.<function>:<frame>")
+    as job description and `batukh.op`, so the event log names them;
+    both local properties are restored afterwards, also on failure."""
+    sc = df.sparkSession.sparkContext
+    keys = ("spark.job.description", "batukh.op")
+    old = [sc.getLocalProperty(k) for k in keys]
+    for k in keys:
+        sc.setLocalProperty(k, name)
+    try:
+        return df.localCheckpoint()
+    finally:
+        for k, v in zip(keys, old):
+            sc.setLocalProperty(k, v)

@@ -5,7 +5,6 @@ the driver's timing contract).
 Usage:
   python bench_extra.py time  [reps] [query ...]   noop-sink per-query wall
   python bench_extra.py plan  <tag> [query ...]    write plans/r07/<q>_<tag>.txt
-  python bench_extra.py stage <name>               named micro-stage profiles
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS   (default 32).
@@ -84,121 +83,6 @@ def cmd_plan(tag: str, names: list[str]) -> None:
     spark.stop()
 
 
-def _timed(label, thunk, reps=3):
-    walls = []
-    for _ in range(reps):
-        t0 = time.time()
-        thunk()
-        walls.append(round(time.time() - t0, 3))
-    print(f"{label}: median={statistics.median(walls)} samples={walls}")
-
-
-def stage_embedding_keep_set(spark):
-    """Decompose embedding_keep_set cost: aug build, sigs, bands,
-    candidates, verify, clusters."""
-    from pyspark.sql import functions as F
-
-    from batukh_spark.operators import similarity
-    from batukh_spark.operators.dedup import resolve_clusters
-    from batukh_spark.queries import embedding_keep_set_q, t_spread
-
-    emb = t_spread(spark, SF_DIR, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e"))
-    # rebuild aug exactly like the registry query
-    import batukh_spark.queries as Q
-    vid = F.col("vec_id")
-    exact_twins = emb.filter(vid % 17 == 0).select(
-        (vid + 1000000).alias("vec_id"), "e")
-    eps = F.element_at(F.array(F.lit(0.1), F.lit(0.15), F.lit(0.2)),
-                       (vid % 3 + 1).cast("int"))
-
-    def tsign(i):
-        h = F.md5(F.concat(F.lit("t:"), vid.cast("string"),
-                           F.lit(":"), i.cast("string")))
-        return F.when(F.substring(h, 1, 1).isin(*"89abcdef"),
-                      F.lit(1.0)).otherwise(F.lit(-1.0))
-
-    near_twins = (emb.filter(vid < 100)
-                  .select((vid + 2000000).alias("tid"),
-                          F.transform("e", lambda x, i:
-                                      x * (1 + eps * tsign(i)))
-                          .alias("e"))
-                  .select(F.col("tid").alias("vec_id"), "e"))
-    aug = emb.unionByName(exact_twins).unionByName(near_twins)
-
-    _timed("aug (union+twins)", lambda: noop(aug))
-    sigs = similarity.srp_signature(aug, 32, 64, "vec_id", "e")
-    _timed("srp_signature", lambda: noop(sigs))
-    cand = similarity.srp_candidate_pairs(aug, 32, 4, 64, "vec_id", "e")
-    _timed("srp_candidate_pairs", lambda: noop(cand))
-    print("n_candidates:", cand.count())
-    pairs = similarity.srp_near_dup_pairs(aug, 32, 4, 64, 0.9,
-                                          "vec_id", "e")
-    _timed("srp_near_dup_pairs (verify exact HOF)", lambda: noop(pairs))
-    pairs_f = similarity.srp_near_dup_pairs(aug, 32, 4, 64, 0.9,
-                                            "vec_id", "e", fast=True)
-    _timed("srp_near_dup_pairs (fast)", lambda: noop(pairs_f))
-    edges = pairs.where(F.col("is_near_dup")).select("id_a", "id_b")
-    _timed("resolve_clusters", lambda: noop(resolve_clusters(edges)))
-    _timed("full embedding_keep_set_q",
-           lambda: noop(embedding_keep_set_q(spark, SF_DIR)))
-
-
-def stage_extract(spark):
-    """Decompose extract_transcripts: payload build vs kernel vs agg."""
-    from pyspark.sql import functions as F
-
-    import batukh_spark.queries as Q
-    docs = Q.t_spread(spark, SF_DIR, "documents")
-    conv = F.concat(F.lit("c"), F.col("doc_id").cast("string"))
-    html_t = docs.select(conv.alias("conv_id"), F.lit(0).alias("turn_idx"),
-                         F.lit("user").alias("role"),
-                         Q._html_payload_col().alias("text"),
-                         F.lit(None).cast("string").alias("tool"))
-    pdf_t = docs.select(conv.alias("conv_id"), F.lit(1).alias("turn_idx"),
-                        F.lit("assistant").alias("role"),
-                        Q._pdf_grid_payload_col().alias("text"),
-                        F.lit(None).cast("string").alias("tool"))
-    tool_t = docs.select(conv.alias("conv_id"), F.lit(2).alias("turn_idx"),
-                         F.lit("tool").alias("role"),
-                         Q._plain_tool_payload_col().alias("text"),
-                         F.lit("search").alias("tool"))
-    payload = html_t.unionByName(pdf_t).unionByName(tool_t)
-    _timed("payload build (html)", lambda: noop(html_t))
-    _timed("payload build (pdf json)", lambda: noop(pdf_t))
-    _timed("payload build (tool)", lambda: noop(tool_t))
-    _timed("payload build (all)", lambda: noop(payload))
-    _timed("extract_transcripts full",
-           lambda: noop(Q.extract_transcripts(spark, SF_DIR)))
-
-
-def stage_keep_set(spark):
-    """Decompose text keep_set over documents (corpus_keep_set)."""
-    from pyspark.sql import functions as F
-
-    from batukh_spark.operators import dedup
-    import batukh_spark.queries as Q
-    # mirror corpus_keep_set_q input
-    fn, _ = Q.QUERIES["corpus_keep_set"]
-    docs = Q.t_spread(spark, SF_DIR, "documents")
-    _timed("minhash_signature",
-           lambda: noop(dedup.minhash_signature(docs)))
-    cand = dedup.lsh_candidate_pairs(docs)
-    _timed("lsh_candidate_pairs", lambda: noop(cand))
-    print("n_candidates:", cand.count())
-    _timed("resolve_clusters",
-           lambda: noop(dedup.resolve_clusters(cand)))
-    _timed("keep_set full", lambda: noop(dedup.keep_set(docs)))
-    _timed("corpus_keep_set_q", lambda: noop(fn(spark, SF_DIR)))
-
-
-STAGES = {
-    "embedding_keep_set": stage_embedding_keep_set,
-    "extract": stage_extract,
-    "keep_set": stage_keep_set,
-}
-
-
 def main() -> int:
     if len(sys.argv) < 2:
         print(__doc__)
@@ -209,10 +93,6 @@ def main() -> int:
         cmd_time(reps, sys.argv[3:])
     elif cmd == "plan":
         cmd_plan(sys.argv[2], sys.argv[3:])
-    elif cmd == "stage":
-        spark = get_spark()
-        STAGES[sys.argv[2]](spark)
-        spark.stop()
     else:
         print(__doc__)
         return 2
