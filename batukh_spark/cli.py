@@ -28,7 +28,8 @@ import sys
 
 def main(argv=None) -> int:
     p = argparse.ArgumentParser(prog="batukh-spark")
-    p.add_argument("--input", help="transcripts table ident or parquet path")
+    p.add_argument("--input", help="transcripts table ident, or parquet "
+                                    "or JSONL path")
     p.add_argument("--synthesize", type=int, default=0,
                    help="generate N synthetic conversations instead of "
                         "--input (deterministic, seed=42)")

@@ -7,9 +7,10 @@ construction (the frozen-backbone contract).
 
 Two tiers:
   * `html_blocks_udf` — a column-level `pandas_udf` (used by queries)
-  * `extract_turns_batches` — the FUSED whole-pipeline kernel for
+  * `extract_turns` — the FUSED whole-pipeline kernel applied with
     `mapInArrow` (tokenize + score + classify + spans + assemble in ONE
-    JVM->Python round-trip; SURVEY §4 manual-physics item 3)
+    JVM->Python round-trip; SURVEY §4 manual-physics item 3).  It is the
+    only place that applies the kernel and knows its output schema.
 """
 
 from __future__ import annotations
@@ -18,6 +19,7 @@ from typing import Iterator
 
 import pandas as pd
 import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
@@ -123,67 +125,56 @@ EXTRA_SCHEMA_SQL = (
     "spans array<struct<start:int,end:int,kind:string>>, error string")
 
 
-def make_extract_kernel(keep_text: bool = False):
-    """Build the fused mapInArrow kernel.
-
-    keep_text=False (production default) drops the raw `text` column from
-    the OUTPUT batches, replacing it with `text_nbytes:int` (manifests
-    need bytes_in).  Profiling showed the JVM side — not Python — is the
-    throughput bottleneck at 32 workers (workers idle ~50% waiting for
-    input); echoing the payload back through Arrow IPC + parquet write
-    roughly doubles that JVM volume for a column the extracted table
-    doesn't need (readers re-join on (conv_id, turn_idx))."""
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.compute as pc
-        for batch in batches:
-            names = batch.schema.names
-            ti = names.index("text")
-            text_arr = batch.column(ti)
-            texts = text_arr.to_pylist()
-            roles = (batch.column(names.index("role")).to_pylist()
-                     if "role" in names else None)
-            tools = (batch.column(names.index("tool")).to_pylist()
-                     if "tool" in names else None)
-            cols = _extract_cols(texts, roles, tools)
-            arrays, fields = [], []
-            for i, f in enumerate(batch.schema):
-                if i == ti and not keep_text:
-                    continue
-                arrays.append(batch.column(i))
-                fields.append(f)
-            if not keep_text:
-                arrays.append(pc.cast(pc.binary_length(text_arr),
-                                      pa.int32()))
-                fields.append(pa.field("text_nbytes", pa.int32()))
-            arrays += [
-                pa.array(cols["family"], pa.string()),
-                pa.array(cols["extracted_text"], pa.string()),
-                pa.array(cols["n_blocks"], pa.int32()),
-                pa.array(cols["n_kept"], pa.int32()),
-                pa.array(cols["spans"], _SPAN_TYPE),
-                pa.array(cols["error"], pa.string()),
-            ]
-            fields += EXTRA_FIELDS
-            yield pa.RecordBatch.from_arrays(arrays,
-                                             schema=pa.schema(fields))
-
-    return kernel
+def extract_turns_lean(
+        batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """The fused mapInArrow kernel: each batch's columns pass through
+    except the raw `text`, which is replaced by `text_nbytes:int`
+    (manifests need bytes_in), followed by EXTRA_FIELDS.  Echoing the
+    payload back through Arrow IPC + parquet write would roughly double
+    the JVM-side volume (the feed bottleneck) for a column the
+    extracted table doesn't need (readers re-join on
+    (conv_id, turn_idx)).  Apply it with `extract_turns`, which derives
+    the matching output schema."""
+    import pyarrow.compute as pc
+    for batch in batches:
+        names = batch.schema.names
+        ti = names.index("text")
+        text_arr = batch.column(ti)
+        roles = (batch.column(names.index("role")).to_pylist()
+                 if "role" in names else None)
+        tools = (batch.column(names.index("tool")).to_pylist()
+                 if "tool" in names else None)
+        cols = _extract_cols(text_arr.to_pylist(), roles, tools)
+        keep = [i for i in range(len(names)) if i != ti]
+        arrays = [batch.column(i) for i in keep] + [
+            pc.cast(pc.binary_length(text_arr), pa.int32()),
+            pa.array(cols["family"], pa.string()),
+            pa.array(cols["extracted_text"], pa.string()),
+            pa.array(cols["n_blocks"], pa.int32()),
+            pa.array(cols["n_kept"], pa.int32()),
+            pa.array(cols["spans"], _SPAN_TYPE),
+            pa.array(cols["error"], pa.string()),
+        ]
+        fields = ([batch.schema.field(i) for i in keep]
+                  + [pa.field("text_nbytes", pa.int32())] + EXTRA_FIELDS)
+        yield pa.RecordBatch.from_arrays(arrays, schema=pa.schema(fields))
 
 
-# production kernel (drops text, adds text_nbytes)
-extract_turns_lean = make_extract_kernel(keep_text=False)
-# test/debug kernel (echoes text through)
-extract_turns_batches = make_extract_kernel(keep_text=True)
-
-
-def extracted_schema_sql(input_schema_sql: str) -> str:
-    """Output schema for the keep_text kernel."""
-    return input_schema_sql + ", " + EXTRA_SCHEMA_SQL
+def extract_turns(df: DataFrame) -> DataFrame:
+    """Run the fused extraction kernel over `df` (a frame with a `text`
+    column; `role`/`tool` are optional).  The output schema is derived
+    from `df.schema`: its columns in their actual order minus `text`,
+    then `text_nbytes int`, then the extras — so callers never restate
+    it, and a join that moves its key first cannot desync the batch
+    layout from the declared schema."""
+    kept = ", ".join(f"`{f.name.replace('`', '``')}` "
+                     f"{f.dataType.simpleString()}"
+                     for f in df.schema.fields if f.name != "text")
+    return df.mapInArrow(extract_turns_lean, schema=lean_schema_sql(kept))
 
 
 def lean_schema_sql(input_schema_sql_without_text: str) -> str:
-    """Output schema for the lean kernel: caller passes the input schema
-    MINUS the text column (order preserved otherwise)."""
+    """Output schema of `extract_turns_lean` for an input whose schema
+    MINUS the text column (order preserved otherwise) is given as DDL."""
     return (input_schema_sql_without_text + ", text_nbytes int, "
             + EXTRA_SCHEMA_SQL)

@@ -225,45 +225,6 @@ def _assign(q: DataFrame, cents: DataFrame, id_col: str = "vec_id",
     return q.select(*cols)
 
 
-def assign_ivf_clusters_fast(emb: DataFrame, n_centroids: int = 8,
-                             id_col: str = "vec_id",
-                             vec_col: str = "embedding",
-                             iters: int = 2, dim: int = 64) -> DataFrame:
-    """Production-scale IVF assignment: same trained codebook, but the
-    per-vector argmax runs as ONE numpy matmul per Arrow batch inside a
-    pandas UDF (vectorized; the HOF form interprets k x dim lambda
-    evals per vector).  numpy's SIMD summation order can differ from
-    the oracle's in the last float bit, so this is the bulk path;
-    `assign_ivf_clusters` stays the bit-exact oracle form (equality on
-    real data is pinned by tests/test_operators.py)."""
-    cents = kmeans_centroids(emb, k=n_centroids, iters=iters, dim=dim,
-                             id_col=id_col, vec_col=vec_col)
-    rows = sorted(cents.collect(), key=lambda r: r.c_id)  # k rows (tiny)
-    cmat = np.array([r.c_vec for r in rows], dtype="f8")  # (k, dim)
-    cnorm = np.linalg.norm(cmat, axis=1)
-
-    @pandas_udf(T.IntegerType())
-    def best_cluster(vecs: pd.Series) -> pd.Series:
-        m = np.array([np.asarray(v, dtype="f8") for v in vecs])
-        # half-AWAY-from-zero rounding: np.rint is half-to-even, which
-        # diverges from the oracle/DuckDB round() on exact .5 boundaries
-        s = m * 1e6
-        qm = np.sign(s) * np.floor(np.abs(s) + 0.5)
-        qnorm = np.linalg.norm(qm, axis=1)
-        zero = qnorm == 0.0
-        qnorm[zero] = 1.0                         # avoid 0/0 warnings
-        sims = (qm @ cmat.T) / (qnorm[:, None] * cnorm[None, :])
-        out = pd.array(np.argmax(sims, axis=1).astype("int32"),
-                       dtype="Int32")
-        # zero-norm vectors have no defined cosine: the exact HOF path
-        # yields NULL (0/0 -> null in Spark SQL), so match it
-        out[zero] = None
-        return pd.Series(out)
-
-    return emb.select(F.col(id_col),
-                      best_cluster(F.col(vec_col)).alias("cluster"))
-
-
 def assign_ivf_clusters(emb: DataFrame, n_centroids: int = 8,
                         id_col: str = "vec_id",
                         vec_col: str = "embedding",

@@ -1,25 +1,28 @@
 """The full extraction job (SURVEY §3 lifecycle, §7 step 5).
 
-Two physical modes behind one API (`run_extraction`):
+One body behind one API (`run_extraction`); the two modes differ only
+in how a row gets its work unit:
 
-FILES mode (default for path/table sources) — Iceberg-style planning:
-    plan input files -> anti-join 'done' units     [driver-side]
-      -> scan ONLY pending files                   [zero pre-kernel shuffle]
-      -> mapInArrow(fused extraction kernel)       [ONE Python crossing]
+FILES mode (auto for parquet and JSONL paths) — Iceberg-style planning:
+    unit = xxhash64(input file URI); plan files -> anti-join 'done'
+    units [driver-side] -> scan ONLY pending files [zero pre-kernel
+    shuffle].  At 10^12 turns the input arrives as millions of data
+    files, so the file is both the natural resume and parallelism
+    unit; Spark still splits an oversized file across tasks
+    (maxPartitionBytes), which divides a unit's compute but never its
+    commit scope, because the output is partitioned by unit.
+
+SHUFFLE mode (auto for DataFrame sources and catalog tables):
+    unit = pmod(xxhash64(conv_id, turn_idx//CHUNK), n_units) [salted]
+    -> anti-join 'done' units -> repartition(n_units, unit) [one
+    aligning shuffle]
+
+then, written once for both:
+      -> kernels.extract_turns                     [ONE Python crossing]
       -> sortWithinPartitions(conv_id, turn_idx)   [on the lean output]
       -> write extracted, partitionBy(unit), dynamic overwrite
       -> append per-unit manifest rows (single KERNEL pass, aggregated
          from the cached kernel output — see _write_with_manifest)
-
-SHUFFLE mode (DataFrame sources / conv-bucketed output):
-    read transcripts                               [scan: pruned to 6 cols]
-      -> unit = pmod(xxhash64(conv_id, turn_idx//CHUNK), n_units)
-                                                   [salted work-unit id]
-      -> resume? anti-join units already 'done' in the manifest
-      -> repartition(n_units, unit)                [one aligning shuffle]
-      -> mapInArrow(fused kernel) -> sortWithinPartitions
-      -> write extracted, partitionBy(unit), dynamic overwrite
-      -> append per-unit manifest rows (same single-pass derivation)
 
 Design for 10^12 turns / 1000 executors:
 
@@ -42,7 +45,7 @@ Design for 10^12 turns / 1000 executors:
   from the executor-cached kernel output, so the Python kernel never
   runs twice.  At 100 TB that cache spills every extracted byte to
   executor disk; the planned replacement derives the manifest from the
-  written files' parquet footers (ROADMAP item 4).
+  written files' parquet footers (ROADMAP direction 2).
 * Ordering: (conv_id, turn_idx) sort within unit partitions + unit dirs
   in the output. Readers reconstruct global order with
   ORDER BY conv_id, turn_idx — same contract as the reference's sorted,
@@ -54,6 +57,7 @@ from __future__ import annotations
 import time
 import uuid
 
+import pyarrow as pa
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -66,9 +70,6 @@ from batukh_spark.sources import io as bio
 CHUNK_TURNS = 512
 
 _INPUT_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-# lean kernel output: text replaced by text_nbytes (see kernels.py)
-_OUT_SCHEMA_SQL = ("conv_id string, turn_idx int, role string, "
-                   "tool string, ts timestamp, unit long")
 
 STATUS_DONE = "done"
 
@@ -83,108 +84,134 @@ def with_unit(df: DataFrame, n_units: int) -> DataFrame:
                F.lit(n_units)).cast("long"))
 
 
-def file_units(spark: SparkSession, source: str):
+def file_units(spark: SparkSession, paths: list[str]) -> DataFrame:
     """Iceberg-style work-unit plan: one unit per input data file.
 
-    Returns (files_df with columns path/unit).  Unit identity is the
-    FULL 64-bit xxhash64 of the file URI — stable across runs and
-    cluster sizes, the exact analogue of Iceberg's incremental file-scan
-    planning.  A truncated hash is a correctness hazard: at 10^6 files a
-    31-bit space expects ~n^2/2^32 collisions, and a pending file whose
-    unit collides with a 'done' unit would be silently skipped on resume.
-    The 64-bit space keeps the expected collision count < 1 up to ~10^9
-    files (and collisions fail LOUD at plan level if two paths tie,
-    because both would resume together, never drop)."""
-    all_files = spark.read.parquet(source).inputFiles()
-    files_df = spark.createDataFrame([(f,) for f in sorted(all_files)],
-                                     "path string")
-    return files_df.select("path", F.xxhash64("path").alias("unit"))
+    Returns a (path, unit) frame for the source's listed `paths`
+    (`DataFrame.inputFiles()`).  Unit identity is the FULL 64-bit
+    xxhash64 of the file URI — stable across runs and cluster sizes,
+    the exact analogue of Iceberg's incremental file-scan planning.  A
+    truncated hash is a correctness hazard: at 10^6 files a 31-bit space
+    expects ~n^2/2^32 collisions, and a pending file whose unit collides
+    with a 'done' unit would be silently skipped on resume.  The 64-bit
+    space keeps the expected collision count < 1 up to ~10^9 files (and
+    collisions fail LOUD at plan level if two paths tie, because both
+    would resume together, never drop).
+
+    The paths cross to the JVM as one Arrow table, so the plan is a
+    local relation: no job and no Python worker (`createDataFrame`
+    over a Python list would be a pickled Python RDD)."""
+    table = pa.table({"path": pa.array(sorted(paths), pa.string())})
+    return (spark.createDataFrame(table)
+            .select("path", F.xxhash64("path").alias("unit")))
 
 
-def run_extraction_files(spark: SparkSession, source: str, output: str,
-                         metrics: str | None = None,
-                         run_id: str | None = None,
-                         resume: bool = False) -> dict:
-    """Shuffle-free extraction: work unit = input file (SURVEY §3).
+def run_extraction(spark: SparkSession, source: str | DataFrame,
+                   output: str, metrics: str | None = None,
+                   run_id: str | None = None, n_units: int | None = None,
+                   resume: bool = False, mode: str = "auto") -> dict:
+    """Run (or resume) the extraction job; returns a summary dict with
+    the keys run_id, mode, n_units, resumed, units_completed, wall_s.
 
-        plan files -> anti-join 'done' units  [driver-side, like Iceberg
-                                               snapshot planning]
-        -> scan ONLY pending files -> mapInArrow(fused kernel)
-        -> sortWithinPartitions
-        -> write partitionBy(unit), DYNAMIC partition overwrite
-        -> append per-unit manifest rows (single kernel pass — see
-           _write_with_manifest)
-
-    Zero pre-kernel exchange: at 10^12 turns the input arrives as
-    millions of parquet/Iceberg data files, so file granularity is both
-    the natural resume unit and the natural parallelism unit (Spark
-    still splits oversized files across tasks via maxPartitionBytes —
-    that only sub-divides a unit's compute, never merges units' commit
-    scope, because the output is partitioned by the unit column).
-    Exactly-once: a crash after the write commits but before the
-    manifest appends leaves those units 'pending'; the resumed run
-    re-extracts them and dynamic overwrite REPLACES their partitions, so
-    no duplicate rows can survive (plain append could double them)."""
+    mode="auto" picks "files" (shuffle-free, unit = input file) for
+    parquet and JSONL paths, and "shuffle" (unit = salted conv hash,
+    one aligning exchange) for DataFrame sources such as a freshly
+    synthesized corpus and for catalog tables, whose files are not
+    ours to plan.  `n_units` sizes shuffle mode; files mode has one
+    unit per file."""
     t0 = time.time()
     run_id = run_id or uuid.uuid4().hex[:12]
-    units = file_units(spark, source)
+    fmt = (None if isinstance(source, DataFrame)
+           else bio.source_format(spark, source))
+    if mode == "auto":
+        mode = "files" if fmt in ("parquet", "jsonl") else "shuffle"
+    done = _done_units(spark, metrics) if resume and metrics else None
 
-    done_units = None
-    if resume and metrics:
-        prior = bio.read_manifest(spark, metrics)
-        if prior is not None:
-            done_units = (prior.filter(F.col("status") == STATUS_DONE)
-                          .select("unit").distinct())
-            units = units.join(F.broadcast(done_units), "unit", "left_anti")
-    # driver-side file list, as in any Spark/Iceberg planning step: at
-    # 10^7 files this is ~1-2 GB of driver heap (path strings) — size
-    # spark.driver.memory accordingly, or plan per input partition
-    pending = [r.path for r in units.select("path").collect()]
-    summary = {"run_id": run_id, "mode": "files",
-               "resumed": bool(resume and done_units is not None),
-               "units_total": None, "units_completed": 0}
-    if not pending:
-        summary["wall_s"] = time.time() - t0
-        return summary
+    # the modes differ only in how a row gets its unit
+    if mode == "files":
+        paths = bio.read_transcripts(spark, source, fmt).inputFiles()
+        n_units = len(paths)
+        units = _pending(file_units(spark, paths), done).collect()
+        # driver-side file list, as in any Spark/Iceberg planning step:
+        # at 10^7 files this is ~1-2 GB of driver heap (path strings) —
+        # size spark.driver.memory accordingly, or plan per partition
+        df = (bio.read_transcripts(spark, [u.path for u in units], fmt)
+              .select(*_INPUT_COLS)
+              .withColumn("unit", F.xxhash64(F.input_file_name()))
+              if units else None)
+    else:
+        # 8x over-decomposition: hash-partitioning unit ids onto tasks
+        # leaves a few tasks holding 2-3 units (balls-into-bins); with
+        # many waves per core the stragglers amortize, without the extra
+        # sampling scan that repartitionByRange would spend on 100 TB
+        n_units = n_units or max(
+            32, spark.sparkContext.defaultParallelism * 8)
+        src = (source if isinstance(source, DataFrame)
+               else bio.read_transcripts(spark, source, fmt))
+        # column pruning is explicit so the scan reads only what the
+        # kernel needs even if the table grows columns later; one
+        # shuffle aligns units to tasks, so each task writes into few
+        # unit dirs
+        df = (_pending(with_unit(src.select(*_INPUT_COLS), n_units), done)
+              .repartition(n_units, "unit"))
 
-    df = (spark.read.parquet(*pending)
-          .select(*_INPUT_COLS)
-          .withColumn("unit", F.xxhash64(F.input_file_name()))
-          .select(*_INPUT_COLS, "unit"))
-    extracted = (
-        df.mapInArrow(kernels.extract_turns_lean,
-                      schema=kernels.lean_schema_sql(_OUT_SCHEMA_SQL))
-          .sortWithinPartitions("conv_id", "turn_idx"))
-    _write_with_manifest(extracted, output, metrics, run_id, t0, summary)
-    summary["wall_s"] = time.time() - t0
-    return summary
+    completed = 0
+    if df is not None:
+        # the ordering sort runs AFTER the kernel, on the lean extracted
+        # rows (~half the bytes of the input payloads): JVM work ahead
+        # of the kernel is the feed bottleneck, so it is minimized
+        extracted = kernels.extract_turns(df).sortWithinPartitions(
+            "conv_id", "turn_idx")
+        completed = _write_with_manifest(extracted, output, metrics,
+                                         run_id, t0)
+    return {"run_id": run_id, "mode": mode, "n_units": n_units,
+            "resumed": done is not None, "units_completed": completed,
+            "wall_s": time.time() - t0}
+
+
+def _done_units(spark: SparkSession, metrics: str) -> DataFrame | None:
+    """Units the manifest records as done, or None before a first run."""
+    prior = bio.read_manifest(spark, metrics)
+    if prior is None:
+        return None
+    return (prior.filter(F.col("status") == STATUS_DONE)
+            .select("unit").distinct())
+
+
+def _pending(units: DataFrame, done: DataFrame | None) -> DataFrame:
+    """The rows of `units` whose unit is not done: the resume anti-join.
+    In files mode it runs over the plan (one row per file), so done
+    files are never scanned; in shuffle mode over the data."""
+    if done is None:
+        return units
+    return units.join(F.broadcast(done), "unit", "left_anti")
 
 
 def _write_with_manifest(extracted: DataFrame, output: str,
-                         metrics: str | None, run_id: str, t0: float,
-                         summary: dict) -> None:
+                         metrics: str | None, run_id: str,
+                         t0: float) -> int:
     """Write the extracted table, then derive the per-unit manifest in
     a single KERNEL pass: persist the kernel output at executor storage
     while the write materializes it, and aggregate the manifest from
     the SAME cache (a cache-hit aggregate is ~free while the run's
     output fits executor memory).  The Python kernel never runs twice.
+    Returns the number of units this invocation committed (0 without a
+    manifest).
 
     At 100 TB the persist spills every extracted byte to executor disk
     just to feed four narrow aggregates; the planned replacement reads
     the manifest fields from the written files' parquet footers
-    (ROADMAP item 4), which also lets the manifest see lost rows."""
-    spark = extracted.sparkSession
+    (ROADMAP direction 2), which also lets the manifest see lost rows."""
     if not metrics:
         bio.write_extracted(extracted, output, partition_col="unit")
-        return
+        return 0
     extracted = extracted.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         bio.write_extracted(extracted, output, partition_col="unit")
         bio.append_manifest(_build_manifest(extracted, run_id, t0), metrics)
     finally:
         extracted.unpersist()
-    summary["units_completed"] = _written_unit_count(
-        spark, metrics, run_id, t0)
+    return _written_unit_count(extracted.sparkSession, metrics, run_id, t0)
 
 
 def _written_unit_count(spark: SparkSession, metrics: str,
@@ -227,68 +254,6 @@ def _build_manifest(written: DataFrame, run_id: str, t0: float) -> DataFrame:
         .select("run_id", "unit", "conv_id_min", "conv_id_max",
                 "rows_in", "rows_out", "bytes_in", "n_errors",
                 "wall_ms", "status", "ts"))
-
-
-def run_extraction(spark: SparkSession, source: str | DataFrame,
-                   output: str, metrics: str | None = None,
-                   run_id: str | None = None, n_units: int | None = None,
-                   resume: bool = False, mode: str = "auto") -> dict:
-    """Run (or resume) the extraction job; returns a summary dict.
-
-    mode="files" (shuffle-free, unit = input file) is used whenever the
-    source is a path/table; mode="shuffle" (unit = salted conv hash,
-    one aligning exchange) is the fallback for DataFrame sources such as
-    a freshly synthesized corpus, and for callers that want conv-bucketed
-    output dirs."""
-    if mode == "auto":
-        mode = "shuffle" if isinstance(source, DataFrame) else "files"
-    if mode == "files":
-        return run_extraction_files(spark, source, output, metrics=metrics,
-                                    run_id=run_id, resume=resume)
-    t0 = time.time()
-    run_id = run_id or uuid.uuid4().hex[:12]
-    # 8x over-decomposition: hash-partitioning unit ids onto tasks leaves
-    # a few tasks holding 2-3 units (balls-into-bins); with many waves per
-    # core the stragglers amortize, without the extra sampling scan that
-    # repartitionByRange would spend on 100 TB of input
-    n_units = n_units or max(
-        32, spark.sparkContext.defaultParallelism * 8)
-
-    df = (source if isinstance(source, DataFrame)
-          else bio.read_transcripts(spark, source))
-    # column pruning is explicit so the parquet scan reads only what the
-    # kernel needs even if the table grows columns later
-    df = with_unit(df.select(*_INPUT_COLS), n_units)
-
-    done_units = None
-    if resume and metrics:
-        prior = bio.read_manifest(spark, metrics)
-        if prior is not None:
-            done_units = (prior.filter(F.col("status") == STATUS_DONE)
-                          .select("unit").distinct())
-            df = df.join(F.broadcast(done_units), "unit", "left_anti")
-
-    # canonical column order: joins move the join key first, which would
-    # desync the batch layout from the declared mapInArrow schema
-    df = df.select(*_INPUT_COLS, "unit")
-
-    # one shuffle aligns units to tasks (so each task writes into few
-    # unit dirs); the ordering sort runs AFTER the kernel, on the lean
-    # extracted rows (~half the bytes of the input payloads) — profiling
-    # showed the JVM side is the feed bottleneck for 32 workers, so JVM
-    # work ahead of the kernel is minimized
-    extracted = (
-        df.repartition(n_units, "unit")
-          .mapInArrow(kernels.extract_turns_lean,
-                      schema=kernels.lean_schema_sql(_OUT_SCHEMA_SQL))
-          .sortWithinPartitions("conv_id", "turn_idx")
-    )
-
-    summary = {"run_id": run_id, "n_units": n_units,
-               "resumed": bool(resume and done_units is not None)}
-    _write_with_manifest(extracted, output, metrics, run_id, t0, summary)
-    summary["wall_s"] = time.time() - t0
-    return summary
 
 
 def latest_done_units(spark: SparkSession, metrics: str) -> DataFrame | None:

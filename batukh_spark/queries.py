@@ -2526,10 +2526,7 @@ def training_mix_q(spark, sf):
         F.lit(0).alias("turn_idx"), F.lit("user").alias("role"),
         _html_payload_col().alias("text"),
         F.lit(None).cast("string").alias("tool"))
-    out = pages.mapInArrow(
-        kernels.extract_turns_lean,
-        schema=kernels.lean_schema_sql(
-            "conv_id string, turn_idx int, role string, tool string"))
+    out = kernels.extract_turns(pages)
     extracted = out.select(
         F.expr("cast(substr(conv_id, 2) as bigint)").alias("doc_id"),
         F.col("extracted_text").alias("text"))
@@ -2624,10 +2621,7 @@ def extract_transcripts(spark, sf):
                          _plain_tool_payload_col().alias("text"),
                          F.lit("search").alias("tool"))
     df = html_t.unionByName(pdf_t).unionByName(tool_t)
-    out = df.mapInArrow(
-        kernels.extract_turns_lean,
-        schema=kernels.lean_schema_sql(
-            "conv_id string, turn_idx int, role string, tool string"))
+    out = kernels.extract_turns(df)
     return out.select("conv_id", "turn_idx", "role", "family",
                       F.col("n_blocks").cast("long").alias("n_blocks"),
                       F.col("n_kept").cast("long").alias("n_kept"),
@@ -2763,10 +2757,7 @@ def pdf_xycut_lines(spark, sf):
     df = docs.select(F.col("doc_id"), payload.alias("text"),
                      F.lit("assistant").alias("role"),
                      F.lit(None).cast("string").alias("tool"))
-    out = df.mapInArrow(
-        kernels.extract_turns_lean,
-        schema=kernels.lean_schema_sql(
-            "doc_id bigint, role string, tool string"))
+    out = kernels.extract_turns(df)
     return out.select("doc_id",
                       F.col("n_kept").cast("long").alias("n_lines"),
                       "extracted_text")

@@ -1,5 +1,7 @@
-"""All engine schemas (SURVEY §1.2).
+"""The transcripts input schema (SURVEY §1.2).
 
+The extraction output schema is derived from its input by
+`kernels.extract_turns`; the manifest's by `pipeline._build_manifest`.
 The transcripts shape is EXACTLY the BASELINE.json input_hint:
 (conv_id:string, turn_idx:int32, role:string, text:string, tool:string,
 ts:timestamp).
@@ -14,53 +16,4 @@ TRANSCRIPTS_SCHEMA = T.StructType([
     T.StructField("text", T.StringType(), True),
     T.StructField("tool", T.StringType(), True),
     T.StructField("ts", T.TimestampType(), True),
-])
-
-# per-block struct — the contour/bbox analogue
-# (/root/reference/batukh/torch/segmenter.py:547-554)
-BLOCK_STRUCT = T.StructType([
-    T.StructField("block_id", T.IntegerType(), False),
-    T.StructField("kind", T.StringType(), False),
-    T.StructField("start", T.IntegerType(), False),
-    T.StructField("end", T.IntegerType(), False),
-    T.StructField("n_words", T.IntegerType(), False),
-    T.StructField("score", T.DoubleType(), False),
-    T.StructField("link_density", T.DoubleType(), False),
-    T.StructField("keep", T.BooleanType(), False),
-])
-
-SPAN_STRUCT = T.StructType([
-    T.StructField("start", T.IntegerType(), False),
-    T.StructField("end", T.IntegerType(), False),
-    T.StructField("kind", T.StringType(), False),
-])
-
-# extraction output appended to each turn row
-EXTRACT_RESULT_FIELDS = [
-    T.StructField("family", T.StringType(), False),
-    T.StructField("extracted_text", T.StringType(), False),
-    T.StructField("n_blocks", T.IntegerType(), False),
-    T.StructField("n_kept", T.IntegerType(), False),
-    T.StructField("spans", T.ArrayType(SPAN_STRUCT), False),
-    T.StructField("error", T.StringType(), True),
-]
-
-EXTRACTED_SCHEMA = T.StructType(
-    list(TRANSCRIPTS_SCHEMA.fields) + EXTRACT_RESULT_FIELDS)
-
-# checkpoint-manifest rows (SURVEY §1.2; the analogue of
-# {epoch}-{timestamp}.pt checkpoints + max_to_keep retention,
-# /root/reference/batukh/torch/segmenter.py:313-370)
-MANIFEST_SCHEMA = T.StructType([
-    T.StructField("run_id", T.StringType(), False),
-    T.StructField("unit", T.LongType(), False),
-    T.StructField("conv_id_min", T.StringType(), True),
-    T.StructField("conv_id_max", T.StringType(), True),
-    T.StructField("rows_in", T.LongType(), False),
-    T.StructField("rows_out", T.LongType(), False),
-    T.StructField("bytes_in", T.LongType(), False),
-    T.StructField("n_errors", T.LongType(), False),
-    T.StructField("wall_ms", T.LongType(), False),
-    T.StructField("status", T.StringType(), False),
-    T.StructField("ts", T.TimestampType(), False),
 ])

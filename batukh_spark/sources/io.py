@@ -48,26 +48,37 @@ def _looks_jsonl(source: str) -> bool:
     return False
 
 
-def read_transcripts(spark: SparkSession, source: str,
+def source_format(spark: SparkSession, source: str) -> str:
+    """'table' for a catalog identifier, else 'jsonl' or 'parquet' (see
+    `_looks_jsonl` for how JSONL is detected)."""
+    if _is_catalog_table(spark, source):
+        return "table"
+    return "jsonl" if _looks_jsonl(source) else "parquet"
+
+
+def read_transcripts(spark: SparkSession, source: str | list[str],
                      fmt: str | None = None) -> DataFrame:
     """source = catalog table ident, parquet path/dir, or JSONL
     (.jsonl/.json) path/dir — web-scale transcript dumps commonly
-    arrive as line-delimited JSON before compaction to parquet.
-    `fmt` ('jsonl' | 'parquet') overrides detection; without it, JSONL
-    is detected by path suffix or by sniffing a local directory's
-    contents (a dir of .jsonl part files routes correctly even when
-    the dir name has no suffix)."""
-    if _is_catalog_table(spark, source):
-        return spark.read.table(source)
+    arrive as line-delimited JSON before compaction to parquet — or a
+    list of data files of one format (a files-mode plan's pending
+    files; pass their source's `fmt`).
+    `fmt` ('table' | 'jsonl' | 'parquet') overrides detection; without
+    it, JSONL is detected by path suffix or by sniffing a local
+    directory's contents (a dir of .jsonl part files routes correctly
+    even when the dir name has no suffix)."""
     if fmt is None:
-        fmt = "jsonl" if _looks_jsonl(source) else "parquet"
+        fmt = source_format(spark, source)
+    if fmt == "table":
+        return spark.read.table(source)
+    paths = [source] if isinstance(source, str) else list(source)
     if fmt in ("jsonl", "json"):
         from batukh_spark.schema import TRANSCRIPTS_SCHEMA
         return (spark.read.schema(TRANSCRIPTS_SCHEMA)
                 .option("timestampFormat",
                         "yyyy-MM-dd'T'HH:mm:ss[.SSSSSS]")
-                .json(source))
-    return spark.read.parquet(source)
+                .json(paths))
+    return spark.read.parquet(*paths)
 
 
 def write_extracted(df: DataFrame, target: str, partition_col: str = "unit",

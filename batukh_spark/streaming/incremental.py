@@ -19,9 +19,6 @@ from pyspark.sql import SparkSession
 from batukh_spark import kernels
 from batukh_spark.schema import TRANSCRIPTS_SCHEMA
 
-_OUT_SCHEMA_SQL = ("conv_id string, turn_idx int, role string, "
-                   "tool string, ts timestamp")
-
 
 def incremental_extract(spark: SparkSession, source_dir: str,
                         output_dir: str, checkpoint_dir: str,
@@ -36,9 +33,7 @@ def incremental_extract(spark: SparkSession, source_dir: str,
               .schema(TRANSCRIPTS_SCHEMA)
               .option("maxFilesPerTrigger", "64")
               .parquet(source_dir))
-    extracted = stream.mapInArrow(
-        kernels.extract_turns_lean,
-        schema=kernels.lean_schema_sql(_OUT_SCHEMA_SQL))
+    extracted = kernels.extract_turns(stream)
     writer = (extracted.writeStream
               .format("parquet")
               .option("path", output_dir)
@@ -395,9 +390,7 @@ def streaming_conversation_docs(spark: SparkSession, source_dir: str):
               # micro-batches and the state buffer is exercised
               .option("maxFilesPerTrigger", "8")
               .parquet(source_dir))
-    extracted = stream.mapInArrow(
-        kernels.extract_turns_lean,
-        schema=kernels.lean_schema_sql(_OUT_SCHEMA_SQL))
+    extracted = kernels.extract_turns(stream)
     return (extracted
             .select("conv_id", "turn_idx", "role", "extracted_text")
             .groupBy("conv_id")

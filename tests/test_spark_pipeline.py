@@ -22,9 +22,9 @@ _SCHEMA_SQL = ("conv_id string, turn_idx int, role string, text string, "
                "tool string, ts timestamp")
 
 
-def _extract_df(df):
-    return df.mapInArrow(kernels.extract_turns_batches,
-                         schema=kernels.extracted_schema_sql(_SCHEMA_SQL))
+def _inputs(df):
+    """(conv_id, turn_idx) -> input row: the kernel output drops `text`."""
+    return {(r.conv_id, r.turn_idx): r for r in df.collect()}
 
 
 def test_corpus_deterministic_across_partitioning(spark):
@@ -38,12 +38,13 @@ def test_corpus_deterministic_across_partitioning(spark):
 
 def test_spark_extraction_equals_oracle(spark):
     df = make_transcripts(spark, 60, mega_every=29, mega_turns=120)
-    rows = _extract_df(df).select(
-        "conv_id", "turn_idx", "role", "text", "tool",
-        "extracted_text", "family").collect()
-    assert rows, "no rows extracted"
+    inputs = _inputs(df)
+    rows = kernels.extract_turns(df).select(
+        "conv_id", "turn_idx", "extracted_text", "family").collect()
+    assert len(rows) == len(inputs)
     for r in rows:
-        want = oracle_extract(r.text, role=r.role, tool=r.tool)
+        i = inputs[(r.conv_id, r.turn_idx)]
+        want = oracle_extract(i.text, role=i.role, tool=i.tool)
         assert r.extracted_text == want.extracted_text, \
             f"mismatch at {r.conv_id}/{r.turn_idx}"
         assert r.family == want.family
@@ -51,10 +52,10 @@ def test_spark_extraction_equals_oracle(spark):
 
 def test_extraction_partitioning_invariance(spark):
     df = make_transcripts(spark, 30)
-    a = _extract_df(df.repartition(2)).select(
+    a = kernels.extract_turns(df.repartition(2)).select(
         "conv_id", "turn_idx", "extracted_text").orderBy(
         "conv_id", "turn_idx").collect()
-    b = _extract_df(df.repartition(16)).select(
+    b = kernels.extract_turns(df.repartition(16)).select(
         "conv_id", "turn_idx", "extracted_text").orderBy(
         "conv_id", "turn_idx").collect()
     assert a == b
@@ -67,7 +68,7 @@ def test_golden_fixtures_through_spark(spark):
                 role=f["role"], text=f["text"], tool=f["tool"], ts=None)
             for f in FIXTURES]
     df = spark.createDataFrame(rows, schema=_SCHEMA_SQL)
-    out = _extract_df(df).collect()
+    out = kernels.extract_turns(df).collect()
     assert len(out) == len(FIXTURES)
     for r in out:
         g = golden[(r.conv_id, r.turn_idx)]

@@ -227,7 +227,7 @@ def test_streaming_conversation_docs_matches_batch(spark, dirs):
     from batukh_spark import kernels
     from batukh_spark.operators.conversations import assemble_conversations
     from batukh_spark.streaming.incremental import (
-        _OUT_SCHEMA_SQL, streaming_conversation_docs)
+        streaming_conversation_docs)
 
     make_transcripts(spark, 30, partitions=20).write.parquet(dirs["src"])
 
@@ -243,9 +243,7 @@ def test_streaming_conversation_docs_matches_batch(spark, dirs):
         "where rn = 1").collect()
     got = {r.conv_id: (r.n_turns, r.n_bytes, r.doc_text) for r in rows}
 
-    batch_ext = spark.read.parquet(dirs["src"]).mapInArrow(
-        kernels.extract_turns_lean,
-        schema=kernels.lean_schema_sql(_OUT_SCHEMA_SQL))
+    batch_ext = kernels.extract_turns(spark.read.parquet(dirs["src"]))
     want = {r.conv_id: (r.n_turns, r.n_bytes, r.doc_text)
             for r in assemble_conversations(batch_ext).collect()}
     assert got == want
