@@ -90,10 +90,6 @@ def main(argv=None) -> int:
                         "candidate generation (bounds per-probe work "
                         "at any corpus size; see "
                         "similarity.srp_candidate_pairs)")
-    p.add_argument("--fast-verify", action="store_true",
-                   help="--job semdedup: vectorized numpy cosine "
-                        "verification (bulk path; differential-tested "
-                        "equal to the oracle-exact interpreted form)")
     p.add_argument("--pq", action="store_true",
                    help="--job annindex: train the IVF-PQ index "
                         "(integer distance-table serving) instead of "
@@ -108,6 +104,10 @@ def main(argv=None) -> int:
     if args.job != "extract" and not args.input:
         p.error(f"--job {args.job} requires --input (an extraction "
                 f"output table)")
+    if args.store and args.max_bucket is not None:
+        p.error("--max-bucket applies to whole-corpus --job semdedup "
+                "only; --store dedups against the store's persisted "
+                "band buckets")
 
     from batukh_spark.session import get_spark
     from batukh_spark import pipeline
@@ -223,12 +223,11 @@ def _run_training_job(spark, args) -> dict:
         if args.store:
             out = incremental_embedding_keep_set(
                 spark, ext, args.store, threshold=args.threshold,
-                dim=args.dim, fast=args.fast_verify)
+                dim=args.dim)
         else:
             out = embedding_keep_set(ext, dim=args.dim,
                                      threshold=args.threshold,
-                                     max_bucket=args.max_bucket,
-                                     fast=args.fast_verify)
+                                     max_bucket=args.max_bucket)
         n_rows = _write_table(spark, out, args.output)
         written = _read_table(spark, args.output)
         by_reason = {r["reason"]: r["n"] for r in

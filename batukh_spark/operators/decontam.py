@@ -86,6 +86,20 @@ def benchmark_ngrams(benchmark: DataFrame, n: int = N_DECONTAM,
             .distinct())
 
 
+def doc_grams(docs: DataFrame, keys: list[str], n: int,
+              text_col: str = "text") -> DataFrame:
+    """(*keys, gram_hash): one row per DISTINCT n-token gram hash of
+    each doc (gram_hashes over the JVM tokens).  Docs shorter than n
+    tokens yield no rows."""
+    key_cols = [F.col(k) for k in keys]
+    return (docs
+            .select(*key_cols, tokens_col(text_col).alias("__tk"))
+            .select(*key_cols,
+                    F.explode(F.array_distinct(
+                        gram_hashes(F.col("__tk"), n)))
+                    .alias("gram_hash")))
+
+
 def decontaminate(docs: DataFrame, benchmark: DataFrame,
                   n: int = N_DECONTAM, id_col: str = "doc_id",
                   text_col: str = "text",
@@ -101,13 +115,7 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame,
     if not (isinstance(n, int) and n >= 2):
         raise ValueError(f"n must be an int >= 2, got {n!r}")
     bgrams = benchmark_ngrams(benchmark, n, bench_text_col)
-    dgrams = (docs
-              .select(F.col(id_col),
-                      tokens_col(text_col).alias("__tk"))
-              .select(F.col(id_col),
-                      F.explode(F.array_distinct(
-                          gram_hashes(F.col("__tk"), n)))
-                      .alias("gram_hash")))
+    dgrams = doc_grams(docs, [id_col], n, text_col)
     hits = (dgrams.join(F.broadcast(bgrams), "gram_hash")
             .groupBy(id_col)
             .agg(F.count(F.lit(1)).alias("__n_hits")))
@@ -255,13 +263,7 @@ def split_leakage(rows: DataFrame, n: int = N_DECONTAM,
         raise ValueError(f"n must be an int >= 2, got {n!r}")
 
     def grams(side):
-        return (side
-                .select(F.col(id_col), F.col(split_col),
-                        tokens_col(text_col).alias("__tk"))
-                .select(F.col(id_col), F.col(split_col),
-                        F.explode(F.array_distinct(
-                            gram_hashes(F.col("__tk"), n)))
-                        .alias("gram_hash")))
+        return doc_grams(side, [id_col, split_col], n, text_col)
 
     is_train = F.col(split_col) == train_split
     tgrams = (grams(rows.filter(is_train))

@@ -86,23 +86,72 @@ def minhash_signature(docs: DataFrame, id_col: str = "doc_id",
                               for s in range(n_hashes)]).alias("sig")))
 
 
-def minhash_bands(sigs: DataFrame, id_col: str = "doc_id",
-                  n_hashes: int = N_HASHES,
-                  n_bands: int = N_BANDS) -> DataFrame:
-    """(id, band_id, band_hash) from a minhash-signature table —
-    band_hash = md5(concat of the band's signature rows).  Shared by
-    the batch LSH self-join and the incremental signature store (the
-    store persists exactly these rows, so run N+1 buckets against run
-    N without recomputing anything from run N's text)."""
-    rows_per_band = n_hashes // n_bands
-    band_cols = []
-    for b in range(n_bands):
-        parts = [F.col("sig").getItem(b * rows_per_band + r)
-                 for r in range(rows_per_band)]
-        band_cols.append(F.md5(F.concat_ws("|", *parts)))
-    return sigs.select(
-        F.col(id_col),
-        F.posexplode(F.array(*band_cols)).alias("band_id", "band_hash"))
+def _md5_band_keys(sig: Column, n_hashes: int = N_HASHES,
+                   n_bands: int = N_BANDS) -> list[Column]:
+    """Minhash band keys: band b's key is md5 of its n_hashes/n_bands
+    signature rows joined by '|'.  The batch LSH self-join, the
+    signature store and its streaming twin all bucket on these keys,
+    so run N+1 buckets against run N's stored bands exactly."""
+    rows = n_hashes // n_bands
+    return [F.md5(F.concat_ws("|", *[sig.getItem(b * rows + r)
+                                     for r in range(rows)]))
+            for b in range(n_bands)]
+
+
+def _bit_band_keys(sig: Column, n_bits: int,
+                   n_bands: int) -> list[Column]:
+    """Band keys of a '0'/'1' signature string (simhash, SRP): band b's
+    key is its n_bits/n_bands-character substring."""
+    rows = n_bits // n_bands
+    return [F.substring(sig, b * rows + 1, rows) for b in range(n_bands)]
+
+
+def _explode_bands(sigs: DataFrame, id_col: str, keys: list[Column],
+                   key: str, *carry: Column) -> DataFrame:
+    """(id, *carry, band_id, key): one row per band bucket."""
+    return sigs.select(F.col(id_col), *carry,
+                       F.posexplode(F.array(*keys)).alias("band_id", key))
+
+
+def _band_pairs(bands: DataFrame, id_col: str, key: str,
+                *aggs: Column) -> DataFrame:
+    """The LSH bucket self-join: ids sharing any (band_id, key) bucket
+    become a candidate pair (id_a < id_b, n_shared_bands, *aggs), where
+    `aggs` read the two sides as `a.` and `b.`.  It shuffles only the
+    band rows — bucketed, never all-pairs."""
+    a = bands.alias("a")
+    b = bands.alias("b")
+    return (a.join(b, (F.col("a.band_id") == F.col("b.band_id"))
+                   & (F.col(f"a.{key}") == F.col(f"b.{key}"))
+                   & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
+            .groupBy(F.col(f"a.{id_col}").alias("id_a"),
+                     F.col(f"b.{id_col}").alias("id_b"))
+            .agg(F.count(F.lit(1)).alias("n_shared_bands"), *aggs))
+
+
+def _verdict(exact: Column, near: Column) -> list[Column]:
+    """[keep, reason] of a dedup verdict: reason is exact_dup, else
+    near_dup, else unique, and only unique rows are kept."""
+    reason = (F.when(exact, "exact_dup")
+              .when(near, "near_dup")
+              .otherwise("unique"))
+    return [(reason == "unique").alias("keep"), reason.alias("reason")]
+
+
+def _cluster_verdict(with_exact: DataFrame, pairs: DataFrame,
+                     id_col: str) -> DataFrame:
+    """(id, keep, reason) of a whole-corpus keep set.  `with_exact` is
+    (id, keep_id: the min id of its exact group) and `pairs` the
+    verified near-dup edges between exact-group representatives; a row
+    is near_dup when it is in a component but is not its min id."""
+    clusters = resolve_clusters(pairs) \
+        .select(F.col("doc_id").alias("__cid"), F.col("cluster_id"))
+    return (with_exact
+            .join(clusters, F.col(id_col) == F.col("__cid"), "left")
+            .select(F.col(id_col), *_verdict(
+                F.col(id_col) != F.col("keep_id"),
+                F.col("cluster_id").isNotNull()
+                & (F.col(id_col) != F.col("cluster_id")))))
 
 
 def lsh_candidate_pairs(docs: DataFrame, id_col: str = "doc_id",
@@ -123,16 +172,10 @@ def lsh_candidate_pairs(docs: DataFrame, id_col: str = "doc_id",
     # The checkpoint is n_hashes x 32 B + id per doc — metadata-sized.
     sigs = materialize(minhash_signature(docs, id_col, text_col, n_hashes),
                        "dedup.lsh_candidate_pairs:sigs")
-    bands = minhash_bands(sigs, id_col, n_hashes, n_bands)
-    left = bands.alias("a")
-    right = bands.alias("b")
-    return (left.join(right,
-                      (F.col(f"a.band_id") == F.col("b.band_id"))
-                      & (F.col(f"a.band_hash") == F.col("b.band_hash"))
-                      & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-            .groupBy(F.col(f"a.{id_col}").alias("id_a"),
-                     F.col(f"b.{id_col}").alias("id_b"))
-            .agg(F.count(F.lit(1)).alias("n_shared_bands")))
+    bands = _explode_bands(
+        sigs, id_col, _md5_band_keys(F.col("sig"), n_hashes, n_bands),
+        "band_hash")
+    return _band_pairs(bands, id_col, "band_hash")
 
 
 def resolve_clusters(pairs: DataFrame, id_a: str = "id_a",
@@ -211,32 +254,6 @@ def resolve_clusters(pairs: DataFrame, id_a: str = "id_a",
         f"resolve_clusters: not converged after {max_iters} iterations")
 
 
-def simhash_expr(docs: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text",
-                 bits: int = SIMHASH_BITS) -> DataFrame:
-    """Catalyst-expression form of `simhash` — bits x tokens
-    interpreted fold evaluations per doc.  Kept as the differential
-    twin of the Arrow form below; tests pin equality."""
-    pre = docs.select(F.col(id_col), tokens_col(text_col).alias("__tk"))
-    hashed = pre.select(
-        F.col(id_col),
-        F.transform(F.col("__tk"),
-                    lambda t: F.concat(F.md5(t),
-                                       F.md5(F.concat(F.lit("x:"), t))))
-        .alias("__hs"))
-    bit_votes = F.transform(
-        F.sequence(F.lit(1), F.lit(bits)),
-        lambda j: F.aggregate(
-            F.col("__hs"), F.lit(0),
-            lambda acc, h: acc + F.when(
-                F.substring(h, j.cast("int"), F.lit(1))
-                .isin("8", "9", "a", "b", "c", "d", "e", "f"), 1)
-            .otherwise(-1)))
-    sig = F.concat_ws("", F.transform(
-        bit_votes, lambda v: F.when(v > 0, "1").otherwise("0")))
-    return hashed.select(F.col(id_col), sig.alias("simhash"))
-
-
 def simhash(docs: DataFrame, id_col: str = "doc_id",
             text_col: str = "text",
             bits: int = SIMHASH_BITS) -> DataFrame:
@@ -250,7 +267,7 @@ def simhash(docs: DataFrame, id_col: str = "doc_id",
     one vectorized Arrow batch op instead of bits x tokens interpreted
     fold evaluations per doc.  Votes are integer sums — order-
     independent — so the Arrow tally is EXACTLY the expression form's
-    (simhash_expr, the differential twin pinned by tests); hex chars
+    (the differential twin in tests/reference_twins.py); hex chars
     voting +1 are '8','9','a'-'f', i.e. byte >= 0x38 ('8') among md5's
     [0-9a-f] alphabet.  A NULL text / empty token array yields the
     all-'0' signature in both forms (NULL votes land in the '0'
@@ -300,7 +317,6 @@ def simhash_candidate_pairs(docs: DataFrame, id_col: str = "doc_id",
     bucket the minhash path avoids by dropping shingle-less docs at the
     explode.
     """
-    rows_per_band = bits // n_bands
     # materialize the signature table ONCE: the band self-join consumes
     # it on both sides, and no ReusedExchange fires across the Arrow
     # vote projection (plan-verified: two ArrowEvalPython nodes before,
@@ -310,25 +326,16 @@ def simhash_candidate_pairs(docs: DataFrame, id_col: str = "doc_id",
     sigs = materialize(simhash(docs.filter(F.size(tokens_col(text_col)) > 0),
                                id_col, text_col, bits),
                        "dedup.simhash_candidate_pairs:sigs")
-    band_cols = [F.substring("simhash", b * rows_per_band + 1,
-                             rows_per_band) for b in range(n_bands)]
     # the full signature rides through the explode (64 bytes/row) so
     # the hamming verify needs NO re-join back to the corpus — the
     # expensive token-vote signature is computed exactly once per side
     # of the band self-join, never a third/fourth time
-    bands = sigs.select(
-        F.col(id_col), F.col("simhash"),
-        F.posexplode(F.array(*band_cols)).alias("band_id", "band_sig"))
-    a = bands.alias("a")
-    b = bands.alias("b")
+    bands = _explode_bands(
+        sigs, id_col, _bit_band_keys(F.col("simhash"), bits, n_bands),
+        "band_sig", F.col("simhash"))
     ham = hamming(F.col("a.simhash"), F.col("b.simhash"), bits)
-    return (a.join(b, (F.col("a.band_id") == F.col("b.band_id"))
-                   & (F.col("a.band_sig") == F.col("b.band_sig"))
-                   & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-            .groupBy(F.col(f"a.{id_col}").alias("id_a"),
-                     F.col(f"b.{id_col}").alias("id_b"))
-            .agg(F.count(F.lit(1)).alias("n_shared_bands"),
-                 F.min(ham).cast("long").alias("hamming")))
+    return _band_pairs(bands, id_col, "band_sig",
+                       F.min(ham).cast("long").alias("hamming"))
 
 
 def hamming(a: Column, b: Column, bits: int = SIMHASH_BITS) -> Column:
@@ -391,17 +398,8 @@ def keep_set(docs: DataFrame, id_col: str = "doc_id",
         .select(F.col(id_col), F.col("keep_id"))
     reps = docs.join(exact.select(F.col("keep_id").alias(id_col)),
                      id_col, "left_semi")
-    clusters = resolve_clusters(
-        lsh_candidate_pairs(reps, id_col, text_col)) \
-        .select(F.col("doc_id").alias("__cid"), F.col("cluster_id"))
-    reason = (F.when(F.col(id_col) != F.col("keep_id"), "exact_dup")
-              .when(F.col("cluster_id").isNotNull()
-                    & (F.col(id_col) != F.col("cluster_id")), "near_dup")
-              .otherwise("unique"))
-    return (with_exact
-            .join(clusters, F.col(id_col) == F.col("__cid"), "left")
-            .select(F.col(id_col), (reason == "unique").alias("keep"),
-                    reason.alias("reason")))
+    return _cluster_verdict(
+        with_exact, lsh_candidate_pairs(reps, id_col, text_col), id_col)
 
 
 def build_signature_store(docs: DataFrame, store_dir: str,
@@ -426,7 +424,8 @@ def build_signature_store(docs: DataFrame, store_dir: str,
      .write.mode("overwrite").parquet(f"{store_dir}/exact"))
     sigs = minhash_signature(docs, id_col, text_col)
     sigs.write.mode("overwrite").parquet(f"{store_dir}/sigs")
-    (minhash_bands(sigs, id_col)
+    (_explode_bands(sigs, id_col, _md5_band_keys(F.col("sig")),
+                    "band_hash")
      .write.mode("overwrite").parquet(f"{store_dir}/bands"))
 
 
@@ -463,7 +462,8 @@ def incremental_keep_set(spark, new_docs: DataFrame, store_dir: str,
                  .join(exact_store, "text_hash", "left_semi")
                  .select(F.col(id_col), F.lit(True).alias("__exact")))
     new_sigs = minhash_signature(new_docs, id_col, text_col)
-    new_bands = minhash_bands(new_sigs, id_col)
+    new_bands = _explode_bands(new_sigs, id_col,
+                               _md5_band_keys(F.col("sig")), "band_hash")
     cand = (new_bands.join(band_store, ["band_id", "band_hash"])
             .select(F.col(id_col), "__store_id").distinct())
     agree = F.size(F.filter(
@@ -475,14 +475,11 @@ def incremental_keep_set(spark, new_docs: DataFrame, store_dir: str,
                 .filter(agree >= min_sig_agree)
                 .select(F.col(id_col), F.lit(True).alias("__near"))
                 .distinct())
-    reason = (F.when(F.col("__exact"), "exact_dup")
-              .when(F.col("__near"), "near_dup")
-              .otherwise("unique"))
     return (new_docs.select(F.col(id_col))
             .join(exact_hit, id_col, "left")
             .join(near_hit, id_col, "left")
-            .select(F.col(id_col), (reason == "unique").alias("keep"),
-                    reason.alias("reason")))
+            .select(F.col(id_col),
+                    *_verdict(F.col("__exact"), F.col("__near"))))
 
 
 def ngram_jaccard_pairs(docs: DataFrame, pairs: DataFrame,

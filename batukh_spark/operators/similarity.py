@@ -19,6 +19,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from batukh_spark.operators.dedup import (_band_pairs, _bit_band_keys,
+                                          _cluster_verdict, _explode_bands,
+                                          _verdict)
 from batukh_spark.session import materialize
 
 
@@ -129,27 +132,6 @@ def kmeans_centroids(emb: DataFrame, k: int = 8, iters: int = 2,
     return cents
 
 
-def _assign_expr(q: DataFrame, cents: DataFrame, id_col: str = "vec_id",
-                 keep_q: bool = False, dim: int = 64,
-                 k: int = 8) -> DataFrame:
-    """Catalyst-expression form of `_assign` (see below) — HOF cosine
-    per centroid, interpreted per element.  Kept as the differential
-    twin of the Arrow form; tests pin equality."""
-    packed = cents.groupBy().agg(
-        F.sort_array(F.collect_list(F.struct("c_id", "c_vec")))
-        .alias("cents"))
-    qd = F.transform(F.col("q"), lambda x: x.cast("double"))
-    scored = q.crossJoin(F.broadcast(packed)).select(
-        F.col(id_col), F.col("q"),
-        F.transform(F.col("cents"),
-                    lambda c: cosine(qd, c["c_vec"])).alias("sims"))
-    best = F.array_position(F.col("sims"), F.array_max(F.col("sims"))) - 1
-    cols = [F.col(id_col), best.cast("int").alias("cluster")]
-    if keep_q:
-        cols.append(F.col("q"))
-    return scored.select(*cols)
-
-
 def _assign(q: DataFrame, cents: DataFrame, id_col: str = "vec_id",
             keep_q: bool = False, dim: int = 64, k: int = 8) -> DataFrame:
     """(id, q:quantized vec) x centroid table -> (id, cluster) by cosine
@@ -162,10 +144,10 @@ def _assign(q: DataFrame, cents: DataFrame, id_col: str = "vec_id",
     accumulation over the dim axis — numpy ops vectorize across rows
     while the per-row float addition chain is the identical IEEE
     sequence as the HOF fold / DuckDB's list_sum, so assignments are
-    bit-equal to `_assign_expr` (pinned by differential test).  The
-    expression form interprets k x dim lambda evals per vector; this
-    removes that while keeping the bit-exactness `assign_ivf_clusters_
-    fast` (matmul; pairwise summation) cannot guarantee.
+    bit-equal to the expression form (its differential twin lives in
+    tests/reference_twins.py).  The expression form interprets k x dim
+    lambda evals per vector; this removes that while keeping the
+    bit-exactness a matmul (pairwise summation) cannot guarantee.
 
     Degenerate rows: a zero-norm vector gets a NULL cluster here where
     the expression form RAISES under ANSI (double division by zero) —
@@ -247,29 +229,6 @@ def _srp_sign(j: int, i: int) -> int:
     return 1 if h[0] in "89abcdef" else -1
 
 
-def srp_signature_expr(emb: DataFrame, n_bits: int = 16, dim: int = 64,
-                       id_col: str = "vec_id",
-                       vec_col: str = "embedding") -> DataFrame:
-    """Catalyst-expression form of `srp_signature` — bit j is a flat
-    codegen'd sum of +/- e[i] terms (left-to-right, matching the
-    oracle's list_sum order).  Executes fast once planned, but the
-    n_bits x dim expression TREE costs seconds of driver-side
-    analysis/optimization per fresh plan (measured ~7.5s at 32x64),
-    which a query pays on every invocation.  Kept as the
-    reference/differential twin of the Arrow form below."""
-    pre = emb.select(F.col(id_col),
-                     F.col(vec_col).cast("array<double>").alias("__e"))
-    e = F.col("__e")
-    bits = []
-    for j in range(n_bits):
-        acc = None
-        for i in range(dim):
-            term = e.getItem(i) if _srp_sign(j, i) > 0 else -e.getItem(i)
-            acc = term if acc is None else acc + term
-        bits.append(F.when(acc > 0, "1").otherwise("0"))
-    return pre.select(F.col(id_col), F.concat(*bits).alias("sig"))
-
-
 def _srp_sign_rows(n_bits: int, dim: int) -> list:
     """+1/-1 hyperplane rows for srp_signature (md5-derived, cached)."""
     key = (n_bits, dim)
@@ -283,6 +242,15 @@ def _srp_sign_rows(n_bits: int, dim: int) -> list:
 def srp_signature(emb: DataFrame, n_bits: int = 16, dim: int = 64,
                   id_col: str = "vec_id",
                   vec_col: str = "embedding") -> DataFrame:
+    """(id, sig): the SRP signature of every vector (srp_signature_col).
+    Scan-local: computes with zero shuffle."""
+    return emb.select(F.col(id_col),
+                      srp_signature_col(F.col(vec_col), n_bits, dim)
+                      .alias("sig"))
+
+
+def srp_signature_col(vec: Column, n_bits: int = 16,
+                      dim: int = 64) -> Column:
     """Sign-random-projection LSH signature: bit j = [dot(v, h_j) > 0]
     with Rademacher hyperplanes h_j (see _srp_sign).  Collision
     probability per bit is 1 - theta/pi, so equal signatures <=> small
@@ -292,11 +260,12 @@ def srp_signature(emb: DataFrame, n_bits: int = 16, dim: int = 64,
     over the dim axis with numpy (vectorized across rows), so each
     row's per-bit sum is the IDENTICAL left-to-right float addition
     chain as the expression form / the oracle's list_sum — IEEE adds
-    in the same order, bit-for-bit equal (srp_signature_expr is the
-    differential twin; equality pinned by tests).  The expression form
-    was measured at ~7.5s of driver-side Catalyst analysis per fresh
-    32x64 plan — a per-query planning tax this removes entirely.
-    Scan-local: computes with zero shuffle.
+    in the same order, bit-for-bit equal (the differential twin lives
+    in tests/reference_twins.py).  The expression form was measured at
+    ~7.5s of driver-side Catalyst analysis per fresh 32x64 plan — a
+    per-query planning tax this removes entirely.  As a Column it runs
+    unchanged in batch and streaming plans, so the streaming twin's
+    buckets are the batch buckets by construction.
 
     Degenerate rows mirror the expression form exactly (pinned by a
     differential test incl. NULL/NaN/zero fixtures): a NULL vector or
@@ -335,7 +304,7 @@ def srp_signature(emb: DataFrame, n_bits: int = 16, dim: int = 64,
         chars = np.where(bits, "1", "0")
         return pd.Series(["".join(r) for r in chars])
 
-    v = F.col(vec_col).cast("array<double>")
+    v = vec.cast("array<double>")
     # a NULL vector, short vector, or NULL element nulls the whole sum
     # in the expression form, landing every bit in the '0' branch —
     # the flag reproduces that exactly (Arrow would otherwise fold
@@ -343,7 +312,7 @@ def srp_signature(emb: DataFrame, n_bits: int = 16, dim: int = 64,
     bad = (v.isNull() | (F.size(v) < dim)
            | F.coalesce(F.exists(F.slice(v, 1, dim),
                                  lambda x: x.isNull()), F.lit(False)))
-    return emb.select(F.col(id_col), _sig(v, bad).alias("sig"))
+    return _sig(v, bad)
 
 
 def srp_candidate_pairs(emb: DataFrame, n_bits: int = 32,
@@ -378,10 +347,7 @@ def srp_candidate_pairs(emb: DataFrame, n_bits: int = 32,
     bucket usually still collides in one of the other OR'd bands).
     The cap bounds per-probe work to n_bands * max_bucket candidates
     regardless of corpus size."""
-    rows_per_band = n_bits // n_bands
     sigs = srp_signature(emb, n_bits, dim, id_col, vec_col)
-    band_cols = [F.substring("sig", b * rows_per_band + 1, rows_per_band)
-                 for b in range(n_bands)]
     # materialize the band table ONCE: the self-join below references
     # it on BOTH sides, and the n_bits x dim flat-sum signature subtree
     # is opaque enough that the planner re-executes it per side (no
@@ -390,10 +356,9 @@ def srp_candidate_pairs(emb: DataFrame, n_bits: int = 32,
     # band_sig) — n_bands short rows per vector, a tiny fraction of
     # the corpus bytes, exactly what build_embedding_store persists
     # for the same reason.
-    bands = materialize(sigs.select(
-        F.col(id_col),
-        F.posexplode(F.array(*band_cols)).alias("band_id", "band_sig")),
-        "similarity.srp_candidate_pairs:bands")
+    bands = materialize(_explode_bands(
+        sigs, id_col, _bit_band_keys(F.col("sig"), n_bits, n_bands),
+        "band_sig"), "similarity.srp_candidate_pairs:bands")
     if max_bucket is not None:
         if not (isinstance(max_bucket, int) and max_bucket >= 2):
             raise ValueError(f"max_bucket must be an int >= 2 or None, "
@@ -403,47 +368,30 @@ def srp_candidate_pairs(emb: DataFrame, n_bits: int = 32,
         bands = (bands.join(sizes, ["band_id", "band_sig"])
                  .where(F.col("__bn") <= max_bucket)
                  .drop("__bn"))
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (a.join(b, (F.col("a.band_id") == F.col("b.band_id"))
-                   & (F.col("a.band_sig") == F.col("b.band_sig"))
-                   & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-            .groupBy(F.col(f"a.{id_col}").alias("id_a"),
-                     F.col(f"b.{id_col}").alias("id_b"))
-            .agg(F.count(F.lit(1)).alias("n_shared_bands")))
+    return _band_pairs(bands, id_col, "band_sig")
 
 
 def srp_near_dup_pairs(emb: DataFrame, n_bits: int = 32,
                        n_bands: int = 4, dim: int = 64,
                        threshold: float = 0.9, id_col: str = "vec_id",
                        vec_col: str = "embedding",
-                       max_bucket: int | None = None,
-                       fast: bool = False) -> DataFrame:
+                       max_bucket: int | None = None) -> DataFrame:
     """Embedding near-dup: multi-band SRP-LSH candidates verified by
     exact cosine.  Returns (id_a, id_b, n_shared_bands, cos_sim,
     is_near_dup).  Candidate generation is bucketed (see
     srp_candidate_pairs); the verify join ships vectors for candidates
     only, so the quadratic term is bounded by bucket sizes, not corpus
-    size.
-
-    `fast=True` runs the verification cosine as one numpy batch per
-    Arrow chunk (`_cos_pairs_fast`) instead of interpreted HOF folds
-    per pair — the bulk path for production candidate volumes, with
-    the interpreted form as the oracle-exact default (the
-    assign_ivf_clusters fast/exact split; equality pinned by
-    differential test on the real corpus)."""
+    size."""
     cand = srp_candidate_pairs(emb, n_bits, n_bands, dim, id_col,
                                vec_col, max_bucket=max_bucket)
     vecs = emb.select(F.col(id_col),
                       F.col(vec_col).cast("array<double>").alias("e"))
     a = vecs.alias("va")
     b = vecs.alias("vb")
-    # default verify path is the UNROLLED codegen cosine — bit-exact
-    # to the interpreted HOF fold (see cosine_flat) with no lambda
-    # interpretation per pair; `fast` keeps the numpy batch variant
-    # for callers that prefer the Python-vectorized path
-    cos = (_cos_pairs_fast(F.col("va.e"), F.col("vb.e")) if fast
-           else F.round(cosine_flat(F.col("va.e"), F.col("vb.e"), dim), 6))
+    # the verify is the UNROLLED codegen cosine — bit-exact to the
+    # interpreted HOF fold (see cosine_flat) with no lambda
+    # interpretation per pair
+    cos = F.round(cosine_flat(F.col("va.e"), F.col("vb.e"), dim), 6)
     # cos_sim materializes in its own projection before the flag reads
     # it: referencing the cosine expression twice in one select would
     # evaluate the whole unrolled sum twice per candidate
@@ -650,8 +598,7 @@ def embedding_keep_set(emb: DataFrame, n_bits: int = 32,
                        n_bands: int = 4, dim: int = 64,
                        threshold: float = 0.9, id_col: str = "vec_id",
                        vec_col: str = "embedding",
-                       max_bucket: int | None = None,
-                       fast: bool = False) -> DataFrame:
+                       max_bucket: int | None = None) -> DataFrame:
     """SemDeDup-style per-vector corpus verdict — the embedding-
     granularity twin of the text `dedup.keep_set`, the artifact a
     semantic-dedup pass actually consumes.  Returns (vec_id, keep,
@@ -694,7 +641,6 @@ def embedding_keep_set(emb: DataFrame, n_bits: int = 32,
     the candidate-graph edges.  Degenerate vectors (NULL / NaN / zero)
     should be audited out first via `embedding_audit` — a zero vector
     has undefined cosine and never verifies as near_dup."""
-    from batukh_spark.operators.dedup import resolve_clusters
     # ONE corpus scan: (id, vector, identity hash) materializes once
     # and feeds every consumer below — the un-checkpointed form
     # re-executed the input lineage four times (hash pass, rep
@@ -722,19 +668,10 @@ def embedding_keep_set(emb: DataFrame, n_bits: int = 32,
     pairs = (srp_near_dup_pairs(reps, n_bits=n_bits, n_bands=n_bands,
                                 dim=dim, threshold=threshold,
                                 id_col=id_col, vec_col="__e",
-                                max_bucket=max_bucket, fast=fast)
+                                max_bucket=max_bucket)
              .where(F.col("is_near_dup"))
              .select("id_a", "id_b"))
-    clusters = resolve_clusters(pairs) \
-        .select(F.col("doc_id").alias("__cid"), F.col("cluster_id"))
-    reason = (F.when(F.col(id_col) != F.col("keep_id"), "exact_dup")
-              .when(F.col("cluster_id").isNotNull()
-                    & (F.col(id_col) != F.col("cluster_id")), "near_dup")
-              .otherwise("unique"))
-    return (with_exact
-            .join(clusters, F.col(id_col) == F.col("__cid"), "left")
-            .select(F.col(id_col), (reason == "unique").alias("keep"),
-                    reason.alias("reason")))
+    return _cluster_verdict(with_exact, pairs, id_col)
 
 
 def vec_hash(v: Column) -> Column:
@@ -954,12 +891,9 @@ def build_embedding_store(emb: DataFrame, store_dir: str,
      .write.mode("overwrite").parquet(f"{store_dir}/exact"))
     sigs = srp_signature(emb, n_bits, dim, id_col, vec_col)
     sigs.write.mode("overwrite").parquet(f"{store_dir}/sigs")
-    rpb = n_bits // n_bands
-    band_cols = [F.substring("sig", b * rpb + 1, rpb)
-                 for b in range(n_bands)]
-    (sigs.select(F.col(id_col),
-                 F.posexplode(F.array(*band_cols))
-                 .alias("band_id", "band_sig"))
+    (_explode_bands(sigs, id_col,
+                    _bit_band_keys(F.col("sig"), n_bits, n_bands),
+                    "band_sig")
      .write.mode("overwrite").parquet(f"{store_dir}/bands"))
     (emb.select(F.col(id_col),
                 F.col(vec_col).cast("array<double>").alias("e"))
@@ -972,8 +906,7 @@ def incremental_embedding_keep_set(spark, new_emb: DataFrame,
                                    n_bits: int = 32, n_bands: int = 4,
                                    dim: int = 64,
                                    id_col: str = "vec_id",
-                                   vec_col: str = "embedding",
-                                   fast: bool = False) -> DataFrame:
+                                   vec_col: str = "embedding") -> DataFrame:
     """Cross-run incremental SemDeDup verdict for NEW vectors against
     a persisted `build_embedding_store` — same (vec_id, keep, reason)
     shape as the whole-corpus `embedding_keep_set`:
@@ -1007,12 +940,9 @@ def incremental_embedding_keep_set(spark, new_emb: DataFrame,
                        F.col(vec_col).cast("array<double>").alias("__ne")),
         "similarity.incremental_embedding_keep_set:nvecs")
     sigs = srp_signature(nvecs, n_bits, dim, id_col, "__ne")
-    rpb = n_bits // n_bands
-    band_cols = [F.substring("sig", b * rpb + 1, rpb)
-                 for b in range(n_bands)]
-    nbands = sigs.select(F.col(id_col),
-                         F.posexplode(F.array(*band_cols))
-                         .alias("band_id", "band_sig"))
+    nbands = _explode_bands(sigs, id_col,
+                            _bit_band_keys(F.col("sig"), n_bits, n_bands),
+                            "band_sig")
     hbands = (spark.read.parquet(f"{store_dir}/bands")
               .select(F.col("vec_id").alias("__hid"),
                       "band_id", "band_sig"))
@@ -1022,8 +952,7 @@ def incremental_embedding_keep_set(spark, new_emb: DataFrame,
              .select(F.col("vec_id").alias("__hid"),
                      F.col("e").alias("__he")))
     # unrolled codegen cosine — bit-exact to the HOF fold (cosine_flat)
-    cos = (_cos_pairs_fast(F.col("__ne"), F.col("__he")) if fast
-           else F.round(cosine_flat(F.col("__ne"), F.col("__he"), dim), 6))
+    cos = F.round(cosine_flat(F.col("__ne"), F.col("__he"), dim), 6)
     near = (cand.join(hvecs, "__hid").join(nvecs, id_col)
             .select(F.col(id_col), cos.alias("__cos"))
             .where(F.col("__cos") > threshold)
@@ -1034,38 +963,7 @@ def incremental_embedding_keep_set(spark, new_emb: DataFrame,
                    .withColumn("__exact", F.lit(True)))
     hashes = nvecs.select(F.col(id_col),
                           vec_hash(F.col("__ne")).alias("__vh"))
-    reason = (F.when(F.col("__exact"), "exact_dup")
-              .when(F.col("__near"), "near_dup")
-              .otherwise("unique"))
     return (hashes.join(exact_store, "__vh", "left")
             .join(near, id_col, "left")
-            .select(F.col(id_col), (reason == "unique").alias("keep"),
-                    reason.alias("reason")))
-
-
-@pandas_udf(T.DoubleType())
-def _cos_pairs_fast(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Vectorized cosine for candidate VERIFICATION: one numpy batch
-    per Arrow chunk instead of ~3*dim interpreted lambda evals per
-    pair.  Rounding mirrors the engine contract exactly — half-AWAY
-    at 6 decimals (np.round is half-to-even and must not be used).
-    numpy's pairwise-summed dot can differ from the oracle's strict
-    left-to-right sum by ~1e-15 relative, which is invisible after
-    the 1e-6 rounding except on exact rounding boundaries —
-    differential tests pin fast == exact on the real corpus, and the
-    interpreted form remains the oracle-exact default."""
-    ma = np.array([np.asarray(v, dtype="f8") for v in a])
-    mb = np.array([np.asarray(v, dtype="f8") for v in b])
-    num = (ma * mb).sum(axis=1)
-    den = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
-    ok = den != 0.0
-    den[~ok] = 1.0
-    s = (num / den) * 1e6
-    out = np.sign(s) * np.floor(np.abs(s) + 0.5) / 1e6
-    # zero-norm pairs must be NULL, not NaN: the exact path's 0/0 is
-    # NULL in Spark SQL, and NaN would sort ABOVE every threshold
-    # (NaN > x is true in Spark's ordering), silently flipping the
-    # is_near_dup verdict for degenerate vectors on the fast path
-    res = pd.Series(out)
-    res[~ok] = None
-    return res
+            .select(F.col(id_col),
+                    *_verdict(F.col("__exact"), F.col("__near"))))

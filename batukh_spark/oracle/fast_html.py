@@ -1,8 +1,8 @@
 """THE frozen HTML tokenizer oracle: single-pass regex scanner.
 
 This scanner DEFINES extraction semantics (goldens + the driver's DuckDB
-gate pin it); the HTMLParser-based tokenizer in html_extract.py is kept
-only as a differential-test aid on the well-terminated-refs input class.
+gate pin it); the HTMLParser-based tokenizer in tests/reference_twins.py
+is only a differential-test aid on the well-terminated-refs input class.
 The regex scanner is the oracle rather than html.parser because (a) it is
 ~2x faster and the oracle rate bounds the engine's per-core throughput,
 and (b) html.parser's recovery on malformed refs is pathological for an

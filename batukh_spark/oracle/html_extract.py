@@ -10,227 +10,15 @@ scripts/styles and link farms the way the reference crops away page border
 and background.
 
 Tolerant of malformed markup (unclosed tags, stray close tags, bare `&`):
-`html.parser.HTMLParser` never raises on bad input, mirroring the
-error-tolerant scan `ignore_errors()` in the reference
+the regex scanner (`fast_html.py`) recovers browser-style instead of
+rejecting bad input, mirroring the error-tolerant scan `ignore_errors()` in the reference
 (`/root/reference/batukh/tensorflow/utils/data/dataloader.py:47`).
 """
 
 from __future__ import annotations
 
-import html as _htmlmod
-from html.parser import HTMLParser
-
-from batukh_spark.oracle import constants as C
-from batukh_spark.oracle.blocks import Block, finalize_block
-from batukh_spark.oracle.canonical import canonicalize
-
-_VOID_TAGS = frozenset({
-    "area", "base", "br", "col", "embed", "hr", "img", "input", "link",
-    "meta", "param", "source", "track", "wbr",
-})
-
-
-class _Frame:
-    __slots__ = ("tag", "skip", "boiler", "code", "tool", "anchor")
-
-    def __init__(self, tag, skip, boiler, code, tool, anchor):
-        self.tag = tag
-        self.skip = skip
-        self.boiler = boiler
-        self.code = code
-        self.tool = tool
-        self.anchor = anchor
-
-
-class _BlockTokenizer(HTMLParser):
-    """Streaming tokenizer: emits Blocks with char-offset spans.
-
-    convert_charrefs=False so `getpos()` stays aligned with raw offsets;
-    entities are decoded explicitly in handle_entityref/handle_charref.
-    """
-
-    def __init__(self, raw: str):
-        super().__init__(convert_charrefs=False)
-        self.raw = raw
-        # absolute offset of each raw line start, for getpos() conversion
-        self._line_starts = [0]
-        idx = raw.find("\n")
-        while idx != -1:
-            self._line_starts.append(idx + 1)
-            idx = raw.find("\n", idx + 1)
-        self.blocks: list[Block] = []
-        self._stack: list[_Frame] = []
-        # depth counters mirror the stack flags (profiling: any() scans
-        # over the stack were ~20% of tokenizer time); semantics identical
-        self._n_skip = 0
-        self._n_boiler = 0
-        self._n_code = 0
-        self._n_tool = 0
-        self._n_anchor = 0
-        # current block accumulation
-        self._parts: list[str] = []
-        self._anchor_parts: list[str] = []
-        self._b_start = -1
-        self._b_end = -1
-        self._b_kind: str | None = None
-        self._b_path = ""
-        self._b_structural = False
-        self._block_tag: str | None = None  # last block-level tag opened
-
-    # -- position helpers ---------------------------------------------------
-
-    def _abs(self) -> int:
-        line, col = self.getpos()
-        return self._line_starts[line - 1] + col
-
-    # -- context flags ------------------------------------------------------
-
-    def _push(self, frame: _Frame) -> None:
-        self._stack.append(frame)
-        self._n_skip += frame.skip
-        self._n_boiler += frame.boiler
-        self._n_code += frame.code
-        self._n_tool += frame.tool
-        self._n_anchor += frame.anchor
-
-    def _pop_from(self, i: int) -> None:
-        for f in self._stack[i:]:
-            self._n_skip -= f.skip
-            self._n_boiler -= f.boiler
-            self._n_code -= f.code
-            self._n_tool -= f.tool
-            self._n_anchor -= f.anchor
-        del self._stack[i:]
-
-    # -- block lifecycle ----------------------------------------------------
-
-    def _flush(self) -> None:
-        if self._b_start >= 0:
-            anchor_len = len(canonicalize("".join(self._anchor_parts)))
-            b = finalize_block(self._parts, anchor_len, self._b_start,
-                              self._b_end, self._b_kind or C.KIND_CONTENT,
-                              self._b_path, self._b_structural)
-            if b is not None:
-                self.blocks.append(b)
-        self._parts = []
-        self._anchor_parts = []
-        self._b_start = -1
-        self._b_end = -1
-        self._b_kind = None
-
-    def _append_text(self, decoded: str, raw_start: int, raw_len: int) -> None:
-        if self._n_skip:
-            return
-        if self._b_start < 0:
-            # lazily open a block; capture context at first segment
-            self._b_start = raw_start
-            self._b_path = "/".join(f.tag for f in self._stack)
-            self._b_structural = self._n_boiler > 0
-            if self._n_tool:
-                self._b_kind = C.KIND_TOOL
-            elif self._n_code:
-                self._b_kind = C.KIND_CODE
-            elif self._block_tag in C.HEADING_TAGS:
-                self._b_kind = C.KIND_HEADING
-            else:
-                self._b_kind = C.KIND_CONTENT
-        self._b_end = raw_start + raw_len
-        self._parts.append(decoded)
-        if self._n_anchor:
-            self._anchor_parts.append(decoded)
-
-    # -- HTMLParser callbacks -----------------------------------------------
-
-    def handle_starttag(self, tag, attrs):
-        tag = tag.lower()
-        if tag == "br":
-            self._parts.append("\n")
-            return
-        if tag in _VOID_TAGS:
-            # bare <hr> is a block separator (HTML5); aligns with the
-            # frozen fast scanner, which flushes here too
-            if tag == "hr" and tag in C.BLOCK_TAGS:
-                self._flush()
-            return
-        cls = ""
-        for k, v in attrs:
-            if k == "class" and v:
-                cls = v.lower()
-        is_tool = C.TOOL_CLASS_MARKER in cls
-        frame = _Frame(
-            tag,
-            skip=tag in C.SKIP_TAGS,
-            boiler=tag in C.BOILERPLATE_TAGS,
-            code=tag in C.CODE_TAGS,
-            tool=is_tool,
-            anchor=tag == "a",
-        )
-        if tag in C.BLOCK_TAGS:
-            self._flush()
-            self._block_tag = tag
-        self._push(frame)
-
-    def handle_startendtag(self, tag, attrs):
-        tag = tag.lower()
-        if tag == "br":
-            self._parts.append("\n")
-        elif tag == "hr" and tag in C.BLOCK_TAGS:
-            self._flush()
-
-    def handle_endtag(self, tag):
-        tag = tag.lower()
-        if tag in _VOID_TAGS:
-            return
-        if tag in C.BLOCK_TAGS:
-            self._flush()
-        # tolerant pop: stray close tags with no matching open are ignored
-        for i in range(len(self._stack) - 1, -1, -1):
-            if self._stack[i].tag == tag:
-                self._pop_from(i)
-                break
-        self._block_tag = next(
-            (f.tag for f in reversed(self._stack) if f.tag in C.BLOCK_TAGS),
-            None)
-
-    def handle_data(self, data):
-        if not data:
-            return
-        self._append_text(data, self._abs(), len(data))
-
-    def handle_entityref(self, name):
-        decoded = _htmlmod.unescape(f"&{name};")
-        self._append_text(decoded, self._abs(), len(name) + 2)
-
-    def handle_charref(self, name):
-        try:
-            cp = int(name[1:], 16) if name[0] in "xX" else int(name)
-            decoded = chr(cp)
-        except (ValueError, OverflowError):
-            decoded = ""
-        if decoded:
-            self._append_text(decoded, self._abs(), len(name) + 3)
-
-    def handle_comment(self, data):
-        pass
-
-    def close(self):
-        super().close()
-        self._flush()
-
-
-def tokenize_html_reference(raw: str) -> list[Block]:
-    """html.parser-based tokenizer — kept as the differential-test
-    reference for the fast scanner (tests/test_fast_html.py)."""
-    tok = _BlockTokenizer(raw)
-    try:
-        tok.feed(raw)
-        tok.close()
-    except Exception:
-        # html.parser is documented tolerant; belt-and-braces: salvage what
-        # was tokenized so far (the ignore_errors analogue, but counted by
-        # the caller instead of silently dropped).
-        tok._flush()
-    return tok.blocks
+from batukh_spark.oracle.blocks import Block
+from batukh_spark.oracle.fast_html import tokenize_html_fast
 
 
 def tokenize_html(raw: str) -> list[Block]:
@@ -241,5 +29,4 @@ def tokenize_html(raw: str) -> list[Block]:
     scanner exception must surface (silently swapping tokenizers would
     make extraction output path-dependent and break the frozen-oracle
     determinism contract)."""
-    from batukh_spark.oracle.fast_html import tokenize_html_fast
     return tokenize_html_fast(raw)

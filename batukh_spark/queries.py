@@ -466,7 +466,7 @@ from dsh a join dsh b on b.doc_id = a.doc_id + 1
 
 def _minhash_sig_sql(src: str, p: str = "") -> str:
     """{p}toks/{p}sh/{p}sig/{p}bands CTE bodies over `src`(doc_id,
-    text) — the DuckDB mirror of minhash_signature + minhash_bands.
+    text) — the DuckDB mirror of minhash_signature + its band keys.
     The prefix lets one query carry TWO signature chains (e.g. the
     incremental signature-store side and the new-run side)."""
     return rf"""{p}toks as (

@@ -130,6 +130,31 @@ def streaming_store_dedup(spark: SparkSession, source_dir: str,
             .drop("__hit"))
 
 
+def _probe_bands(df, bands, items, id_col: str, item: str, key: str,
+                 keys: list):
+    """Stream-static probe of a persisted band store: `bands` is the
+    store's (id, band_id, key) table and `items` its (id, item) table.
+    Band b of `keys` is ONE left join against the store's
+    (band_id, key) -> list<item> buckets, so a stream row stays one
+    row (no stream-side distinct or aggregation, which append-mode
+    stream-static joins disallow).  Returns the joined frame and the
+    Column of every collided item."""
+    from pyspark.sql import functions as F
+
+    buckets = (bands.join(items, id_col)
+               .groupBy("band_id", key)
+               .agg(F.collect_list(item).alias("__cands")))
+    for b, k in enumerate(keys):
+        bk = (buckets.filter(F.col("band_id") == b)
+              .select(F.col(key).alias(f"__key{b}"),
+                      F.col("__cands").alias(f"__cands{b}")))
+        df = df.withColumn(f"__key{b}", k).join(bk, f"__key{b}", "left")
+    item_type = items.schema[item].dataType.simpleString()
+    empty = F.array().cast(f"array<{item_type}>")
+    return df, F.concat(*[F.coalesce(F.col(f"__cands{b}"), empty)
+                          for b in range(len(keys))])
+
+
 def streaming_store_keep_set(spark: SparkSession, source_dir: str,
                              store_dir: str, min_sig_agree: int = 8):
     """Full streaming twin of `operators.dedup.incremental_keep_set`:
@@ -167,21 +192,13 @@ def streaming_store_keep_set(spark: SparkSession, source_dir: str,
     (text_hash, keep, reason)."""
     from pyspark.sql import functions as F
 
-    from batukh_spark.operators.dedup import (N_BANDS, N_HASHES,
-                                              canonical_text)
+    from batukh_spark.operators.dedup import (N_HASHES, _md5_band_keys,
+                                              _verdict, canonical_text)
     from batukh_spark.operators.text import tokens_col, word_shingles
 
     exact_store = (spark.read.parquet(f"{store_dir}/exact")
                    .select("text_hash")
                    .withColumn("__exact", F.lit(True)))
-    sig_store = (spark.read.parquet(f"{store_dir}/sigs")
-                 .select(F.col("doc_id").alias("__sid"),
-                         F.col("sig").alias("__ssig")))
-    band_store = spark.read.parquet(f"{store_dir}/bands")
-    buckets = (band_store
-               .join(sig_store, band_store["doc_id"] == F.col("__sid"))
-               .groupBy("band_id", "band_hash")
-               .agg(F.collect_list("__ssig").alias("__cands")))
 
     stream = (spark.readStream
               .schema(TRANSCRIPTS_SCHEMA)
@@ -202,33 +219,18 @@ def streaming_store_keep_set(spark: SparkSession, source_dir: str,
 
     df = df.withColumn("__sig",
                        F.array(*[_slot_min(s) for s in range(N_HASHES)]))
-    rows_per_band = N_HASHES // N_BANDS
-    for b in range(N_BANDS):
-        parts = [F.col("__sig").getItem(b * rows_per_band + r)
-                 for r in range(rows_per_band)]
-        df = df.withColumn(f"__bh{b}", F.md5(F.concat_ws("|", *parts)))
-        bk = (buckets.filter(F.col("band_id") == b)
-              .select(F.col("band_hash").alias(f"__bh{b}"),
-                      F.col("__cands").alias(f"__cands{b}")))
-        df = df.join(bk, f"__bh{b}", "left")
-    empty = F.array().cast("array<array<string>>")
-    all_cands = F.concat(*[F.coalesce(F.col(f"__cands{b}"), empty)
-                           for b in range(N_BANDS)])
+    df, all_cands = _probe_bands(
+        df, spark.read.parquet(f"{store_dir}/bands"),
+        spark.read.parquet(f"{store_dir}/sigs"), "doc_id", "sig",
+        "band_hash", _md5_band_keys(F.col("__sig")))
     agree = lambda c: F.size(F.filter(          # noqa: E731
         F.zip_with(F.col("__sig"), c, lambda x, y: x == y),
         lambda m: m))
     near = ((F.size(F.col("__sh")) > 0)
             & F.exists(all_cands, lambda c: agree(c) >= min_sig_agree))
     df = df.join(exact_store, "text_hash", "left")
-    reason = (F.when(F.col("__exact"), "exact_dup")
-              .when(near, "near_dup")
-              .otherwise("unique"))
-    drop = (["__sh", "__sig", "__exact"]
-            + [f"__bh{b}" for b in range(N_BANDS)]
-            + [f"__cands{b}" for b in range(N_BANDS)])
-    return (df.withColumn("reason", reason)
-            .withColumn("keep", F.col("reason") == "unique")
-            .drop(*drop))
+    return df.select(*stream.columns, "text_hash",
+                     *_verdict(F.col("__exact"), near))
 
 
 def streaming_decontaminate(spark: SparkSession, source_dir: str,
@@ -243,11 +245,13 @@ def streaming_decontaminate(spark: SparkSession, source_dir: str,
 
     Implemented with `foreachBatch`: the per-doc hit COUNT needs an
     aggregation after the gram join, which append-mode stream-static
-    joins disallow — foreachBatch runs the full BATCH operator on each
-    micro-batch instead (the standard escape hatch for batch-only
-    logic), so stream verdicts are the batch operator's verdicts by
-    construction.  The benchmark gram set is computed once and
-    persisted; each micro-batch reuses the broadcast.
+    joins disallow — foreachBatch runs batch logic on each micro-batch
+    instead (the standard escape hatch).  The doc grams come from the
+    batch operator's own derivation (`decontam.doc_grams`), and the
+    hit count is the same broadcast join + per-doc count, so stream
+    verdicts match `decontaminate` (pinned by the twin test).  The
+    benchmark gram set is computed once and persisted; each
+    micro-batch reuses the broadcast.
 
     Each row is treated as its own document keyed by
     (conv_id, turn_idx).  Exactly-once per input file via the stream
@@ -259,25 +263,17 @@ def streaming_decontaminate(spark: SparkSession, source_dir: str,
     Returns the STARTED StreamingQuery."""
     from pyspark.sql import functions as F
 
-    from batukh_spark.operators.decontam import benchmark_ngrams
+    from batukh_spark.operators.decontam import benchmark_ngrams, doc_grams
 
     bgrams = benchmark_ngrams(benchmark, n).persist()
     bgrams.count()      # materialize once, before the stream starts
 
     def _process(batch_df, _batch_id):
-        from batukh_spark.operators.text import tokens_col, word_shingles
         keyed = batch_df.withColumn(
             "__doc", F.concat_ws("#", F.col("conv_id"),
                                  F.col("turn_idx").cast("string")))
-        dgrams = (keyed
-                  .select(F.col("__doc"),
-                          tokens_col("text").alias("__tk"))
-                  .select(F.col("__doc"),
-                          F.explode(F.array_distinct(
-                              word_shingles(F.col("__tk"), n)))
-                          .alias("g"))
-                  .select(F.col("__doc"), F.md5("g").alias("gram_hash")))
-        hits = (dgrams.join(F.broadcast(bgrams), "gram_hash")
+        hits = (doc_grams(keyed, ["__doc"], n)
+                .join(F.broadcast(bgrams), "gram_hash")
                 .groupBy("__doc")
                 .agg(F.count(F.lit(1)).alias("__n_hits")))
         out = (keyed.join(hits, "__doc", "left")
@@ -472,9 +468,8 @@ def streaming_embedding_keep_set(spark: SparkSession, source_dir: str,
     precedence exact_dup > near_dup.
 
     Streaming shape (mirrors `streaming_store_keep_set`):
-      - the SRP signature is scan-local by construction (codegen flat
-        sums over literal hyperplane signs — no aggregation to
-        disallow);
+      - the SRP signature is the batch operator's scan-local Arrow
+        column (`srp_signature_col` — no aggregation to disallow);
       - band matching is ONE stream-static left join per band against
         the store's (band_id, band_sig) -> list<struct(id, e)> vector
         buckets, so a stream row stays ONE row end-to-end (no
@@ -495,21 +490,14 @@ def streaming_embedding_keep_set(spark: SparkSession, source_dir: str,
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    from batukh_spark.operators.similarity import (_srp_sign, cosine,
+    from batukh_spark.operators.dedup import _bit_band_keys, _verdict
+    from batukh_spark.operators.similarity import (cosine,
+                                                   srp_signature_col,
                                                    vec_hash)
 
     exact_store = (spark.read.parquet(f"{store_dir}/exact")
                    .select(F.col("vec_hash").alias("__vh"))
                    .withColumn("__exact", F.lit(True)))
-    vec_store = (spark.read.parquet(f"{store_dir}/vecs")
-                 .select(F.col("vec_id").alias("__hid"),
-                         F.col("e").alias("__he")))
-    band_store = spark.read.parquet(f"{store_dir}/bands")
-    buckets = (band_store
-               .join(vec_store,
-                     band_store["vec_id"] == F.col("__hid"))
-               .groupBy("band_id", "band_sig")
-               .agg(F.collect_list(F.col("__he")).alias("__cands")))
 
     schema = T.StructType([
         T.StructField("vec_id", T.LongType()),
@@ -519,35 +507,14 @@ def streaming_embedding_keep_set(spark: SparkSession, source_dir: str,
           .withColumn("__vh", vec_hash(F.col("embedding")))
           .withColumn("__e",
                       F.col("embedding").cast("array<double>")))
-    # scan-local SRP signature: same literal hyperplanes as the batch
-    # path; the staged __e column keeps the flat sums from re-casting
-    # the array per term
+    # the batch operator's Arrow SRP signature, so both bucket alike
     e = F.col("__e")
-    bits = []
-    for j in range(n_bits):
-        acc = None
-        for i in range(dim):
-            term = e.getItem(i) if _srp_sign(j, i) > 0 else -e.getItem(i)
-            acc = term if acc is None else acc + term
-        bits.append(F.when(acc > 0, "1").otherwise("0"))
-    df = df.withColumn("__sig", F.concat(*bits))
-    rpb = n_bits // n_bands
-    for b in range(n_bands):
-        bk = (buckets.filter(F.col("band_id") == b)
-              .select(F.col("band_sig").alias(f"__bs{b}"),
-                      F.col("__cands").alias(f"__cands{b}")))
-        df = (df.withColumn(f"__bs{b}",
-                            F.substring("__sig", b * rpb + 1, rpb))
-              .join(bk, f"__bs{b}", "left"))
-    empty = F.array().cast("array<array<double>>")
-    all_cands = F.concat(*[F.coalesce(F.col(f"__cands{b}"), empty)
-                           for b in range(n_bands)])
+    df = df.withColumn("__sig", srp_signature_col(e, n_bits, dim))
+    df, all_cands = _probe_bands(
+        df, spark.read.parquet(f"{store_dir}/bands"),
+        spark.read.parquet(f"{store_dir}/vecs"), "vec_id", "e",
+        "band_sig", _bit_band_keys(F.col("__sig"), n_bits, n_bands))
     near = F.exists(all_cands,
                     lambda c: F.round(cosine(e, c), 6) > threshold)
     df = df.join(exact_store, "__vh", "left")
-    reason = (F.when(F.col("__exact"), "exact_dup")
-              .when(near, "near_dup")
-              .otherwise("unique"))
-    return df.select(F.col("vec_id"),
-                     (reason == "unique").alias("keep"),
-                     reason.alias("reason"))
+    return df.select(F.col("vec_id"), *_verdict(F.col("__exact"), near))

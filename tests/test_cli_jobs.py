@@ -197,6 +197,22 @@ def test_cli_semdedup_audit_gate(tmp_path):
     assert not os.path.exists(out)
 
 
+def test_cli_semdedup_store_rejects_max_bucket(tmp_path):
+    """--max-bucket only guards whole-corpus candidate generation; with
+    --store it would be silently ignored, so the CLI rejects the pair
+    before starting Spark."""
+    out = str(tmp_path / "verdicts")
+    env = dict(os.environ, PYTHONPATH=REPO)
+    r = subprocess.run(
+        [sys.executable, "-m", "batukh_spark.cli", "--job", "semdedup",
+         "--input", str(tmp_path / "emb.parquet"), "--output", out,
+         "--store", str(tmp_path / "store"), "--max-bucket", "8"],
+        capture_output=True, text=True, timeout=900, env=env, cwd=REPO)
+    assert r.returncode == 2, r.stderr[-2000:]
+    assert "--max-bucket" in r.stderr
+    assert not os.path.exists(out)
+
+
 def test_cli_embstore_then_incremental_semdedup(tmp_path):
     """embstore persists the signature store; semdedup --store then
     assigns incremental verdicts for new arrivals against it.

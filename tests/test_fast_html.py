@@ -14,9 +14,9 @@ tag soup the fast scanner must uphold all span/structure invariants.
 import random
 
 from batukh_spark import synth
-from batukh_spark.oracle.html_extract import (tokenize_html,
-                                              tokenize_html_reference)
+from batukh_spark.oracle.html_extract import tokenize_html
 from fixture_corpus import FIXTURES
+from reference_twins import tokenize_html_reference
 
 
 def _sig(blocks):

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from batukh_spark.operators import dedup, multimodal, similarity, textstats
+from reference_twins import assign_expr, simhash_expr, srp_signature_expr
 
 
 @pytest.fixture(scope="module")
@@ -241,7 +242,7 @@ def test_srp_signature_arrow_equals_expression_form(spark):
     new = {r.vec_id: r.sig
            for r in similarity.srp_signature(df, 32, 64).collect()}
     old = {r.vec_id: r.sig
-           for r in similarity.srp_signature_expr(df, 32, 64).collect()}
+           for r in srp_signature_expr(df, 32, 64).collect()}
     assert new == old
     assert new[2] == "0" * 32 and new[4] == "0" * 32
     assert new[5] == "1" * 32
@@ -252,7 +253,7 @@ def test_srp_signature_arrow_equals_expression_form(spark):
     n2 = {r.vec_id: r.sig
           for r in similarity.srp_signature(emb8, 32, 64).collect()}
     o2 = {r.vec_id: r.sig
-          for r in similarity.srp_signature_expr(emb8, 32, 64).collect()}
+          for r in srp_signature_expr(emb8, 32, 64).collect()}
     assert n2 == o2
     # short vectors: documented divergence — the Arrow form degrades
     # to the all-'0' signature where the expression form's
@@ -275,8 +276,7 @@ def test_assign_arrow_equals_expression_form(spark, emb):
     new = {r.vec_id: r.cluster
            for r in similarity._assign(q, cents, dim=8, k=4).collect()}
     old = {r.vec_id: r.cluster
-           for r in similarity._assign_expr(q, cents, dim=8,
-                                            k=4).collect()}
+           for r in assign_expr(q, cents, dim=8, k=4).collect()}
     assert new == old and len(new) == 40
     assert new[30] == new[9]       # identical vectors co-assign
     # zero-norm vector: the expression form RAISES under ANSI (double
@@ -320,27 +320,13 @@ def test_simhash_arrow_equals_expression_form(spark):
             (7, "x"), (8, "a b c d e f g h i j k l m n o p")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     new = {r.doc_id: r.simhash for r in dedup.simhash(df).collect()}
-    old = {r.doc_id: r.simhash for r in dedup.simhash_expr(df).collect()}
+    old = {r.doc_id: r.simhash for r in simhash_expr(df).collect()}
     assert new == old
     assert new[1] == new[2] and new[3] == "0" * 64 and new[4] == "0" * 64
 
 
-def test_cos_pairs_fast_null_on_zero_norm(spark):
-    """fast-verify cosine must yield NULL (not NaN) for zero-norm
-    pairs so the fast path's is_near_dup verdict matches the exact
-    path on degenerate input (NaN > threshold is TRUE under Spark's
-    NaN-greatest ordering — the silent flip this pins against)."""
-    rows = [(1, 2, [1.0] * 8, [1.0] * 8),
-            (3, 4, [0.0] * 8, [1.0] * 8),
-            (5, 6, [0.0] * 8, [0.0] * 8)]
-    df = spark.createDataFrame(
-        rows, "id_a int, id_b int, ea array<double>, eb array<double>")
-    out = {(r.id_a, r.id_b): r.c for r in df.select(
-        "id_a", "id_b",
-        similarity._cos_pairs_fast(F.col("ea"), F.col("eb")).alias("c"))
-        .collect()}
-    assert out[(1, 2)] == 1.0
-    assert out[(3, 4)] is None and out[(5, 6)] is None
+def test_token_counts_pieces(spark):
+    """token_counts: whitespace tokens, BPE-style pieces and chars."""
     df = spark.createDataFrame([(1, "Hello world, 42 times!")],
                                "doc_id long, text string")
     r = textstats.token_counts(df).collect()[0]
@@ -619,26 +605,3 @@ def test_srp_hot_bucket_guard_bounds_candidates(spark):
     assert uncapped == 50 * 49 // 2 + 1
     with pytest.raises(ValueError):
         similarity.srp_candidate_pairs(df, max_bucket=1)
-
-
-def test_srp_near_dup_fast_equals_exact_on_real_corpus(spark):
-    """The vectorized verify path must produce IDENTICAL rounded
-    cosines and verdicts to the interpreted oracle-exact form on real
-    data (the assign_ivf_clusters fast/exact contract), including
-    planted twins right at high similarity."""
-    from pyspark.sql import functions as F
-    emb = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet") \
-        .select("vec_id", "embedding")
-    twins = (emb.filter(F.col("vec_id") < 50)
-             .select((F.col("vec_id") + 10000).alias("vec_id"),
-                     F.transform(F.col("embedding").cast("array<double>"),
-                                 lambda x: x * 1.0001)
-                     .cast("array<float>").alias("embedding")))
-    aug = emb.unionByName(twins)
-    exact = {(r.id_a, r.id_b): (r.cos_sim, r.is_near_dup)
-             for r in similarity.srp_near_dup_pairs(aug).collect()}
-    fast = {(r.id_a, r.id_b): (r.cos_sim, r.is_near_dup)
-            for r in similarity.srp_near_dup_pairs(aug,
-                                                   fast=True).collect()}
-    assert fast == exact and len(exact) > 1000
