@@ -129,7 +129,8 @@ def extract_turns_lean(
         batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """The fused mapInArrow kernel: each batch's columns pass through
     except the raw `text`, which is replaced by `text_nbytes:int`
-    (manifests need bytes_in), followed by EXTRA_FIELDS.  Echoing the
+    (the payload's UTF-8 size, the only trace of the input text the
+    extracted table keeps), followed by EXTRA_FIELDS.  Echoing the
     payload back through Arrow IPC + parquet write would roughly double
     the JVM-side volume (the feed bottleneck) for a column the
     extracted table doesn't need (readers re-join on

@@ -19,10 +19,10 @@ SHUFFLE mode (auto for DataFrame sources and catalog tables):
 
 then, written once for both:
       -> kernels.extract_turns                     [ONE Python crossing]
-      -> sortWithinPartitions(conv_id, turn_idx)   [on the lean output]
+      -> sortWithinPartitions(unit, conv_id, turn_idx) [lean output]
       -> write extracted, partitionBy(unit), dynamic overwrite
-      -> append per-unit manifest rows (single KERNEL pass, aggregated
-         from the cached kernel output — see _write_with_manifest)
+      -> append per-unit manifest rows built on the driver from file
+         metadata (see _manifest)
 
 Design for 10^12 turns / 1000 executors:
 
@@ -41,24 +41,32 @@ Design for 10^12 turns / 1000 executors:
   those units on resume and OVERWRITES their partitions (no duplicate
   rows) — the checkpoint-restore analogue of
   /root/reference/batukh/torch/segmenter.py:267-278,313-370.
-* Single-kernel-pass manifest (see _write_with_manifest): aggregated
-  from the executor-cached kernel output, so the Python kernel never
-  runs twice.  At 100 TB that cache spills every extracted byte to
-  executor disk; the planned replacement derives the manifest from the
-  written files' parquet footers (ROADMAP direction 2).
-* Ordering: (conv_id, turn_idx) sort within unit partitions + unit dirs
-  in the output. Readers reconstruct global order with
-  ORDER BY conv_id, turn_idx — same contract as the reference's sorted,
-  name-aligned directory scan (torch dataloader.py:29-32).
+* Manifest from metadata (see _manifest), as an Iceberg manifest
+  records each data file's record count, bounds and null counts: the
+  output side (rows, conv_id bounds, errors) comes from the committed
+  files' parquet footers, read on the driver after the write; in files
+  mode the input side comes from the input file's footer, read before
+  the write with the output's store resolved, so a store the manifest
+  cannot read fails the run before anything commits.  Nothing is
+  persisted and no job re-reads the output, yet a lost row shows: a
+  unit whose rows_out differs from its rows_in is `failed`, and the
+  run raises after appending it.
+* Ordering: every committed file is sorted by (conv_id, turn_idx), and
+  units are dirs in the output.  The sort leads with `unit`, which is
+  the partitioned write's required ordering; a sort without it would
+  be replaced by the write's own Sort(unit).  Readers reconstruct
+  global order with ORDER BY conv_id, turn_idx — same contract as the
+  reference's sorted, name-aligned directory scan (torch
+  dataloader.py:29-32).
 """
 
 from __future__ import annotations
 
 import time
 import uuid
+from datetime import datetime, timezone
 
 import pyarrow as pa
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -72,6 +80,7 @@ CHUNK_TURNS = 512
 _INPUT_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 
 STATUS_DONE = "done"
+STATUS_FAILED = "failed"
 
 
 def with_unit(df: DataFrame, n_units: int) -> DataFrame:
@@ -118,24 +127,36 @@ def run_extraction(spark: SparkSession, source: str | DataFrame,
     one aligning exchange) for DataFrame sources such as a freshly
     synthesized corpus and for catalog tables, whose files are not
     ours to plan.  `n_units` sizes shuffle mode; files mode has one
-    unit per file."""
+    unit per file.
+
+    With `metrics`, one manifest row per planned unit is appended after
+    the write commits (see `_manifest`); a unit whose output row count
+    differs from its input's is recorded `failed`, and the run then
+    raises naming those units, so a resume re-plans them.  A source
+    without parquet footers (shuffle mode, JSONL files) has its input
+    rows counted by a job of their own, a second evaluation of the
+    source; such a source must give the same rows on every evaluation
+    (a table read at one snapshot, no unseeded `rand()` filter), or
+    its units come out `failed`."""
     t0 = time.time()
     run_id = run_id or uuid.uuid4().hex[:12]
     fmt = (None if isinstance(source, DataFrame)
            else bio.source_format(spark, source))
     if mode == "auto":
         mode = "files" if fmt in ("parquet", "jsonl") else "shuffle"
-    done = _done_units(spark, metrics) if resume and metrics else None
+    done = latest_done_units(spark, metrics) if resume and metrics else None
 
     # the modes differ only in how a row gets its unit
     if mode == "files":
-        paths = bio.read_transcripts(spark, source, fmt).inputFiles()
+        src = bio.read_transcripts(spark, source, fmt)
+        paths = src.inputFiles()
         n_units = len(paths)
         units = _pending(file_units(spark, paths), done).collect()
         # driver-side file list, as in any Spark/Iceberg planning step:
         # at 10^7 files this is ~1-2 GB of driver heap (path strings) —
         # size spark.driver.memory accordingly, or plan per partition
-        df = (bio.read_transcripts(spark, [u.path for u in units], fmt)
+        df = (bio.read_transcripts(spark, [u.path for u in units], fmt,
+                                   schema=src.schema)
               .select(*_INPUT_COLS)
               .withColumn("unit", F.xxhash64(F.input_file_name()))
               if units else None)
@@ -149,33 +170,45 @@ def run_extraction(spark: SparkSession, source: str | DataFrame,
         src = (source if isinstance(source, DataFrame)
                else bio.read_transcripts(spark, source, fmt))
         # column pruning is explicit so the scan reads only what the
-        # kernel needs even if the table grows columns later; one
-        # shuffle aligns units to tasks, so each task writes into few
-        # unit dirs
-        df = (_pending(with_unit(src.select(*_INPUT_COLS), n_units), done)
-              .repartition(n_units, "unit"))
+        # kernel needs even if the table grows columns later
+        df = _pending(with_unit(src.select(*_INPUT_COLS), n_units), done)
+        units = None
 
     completed = 0
     if df is not None:
+        if metrics:
+            # before the write: the input side, and the output's store
+            # resolved, so a store the manifest cannot read fails the
+            # run before anything commits
+            ins = _input_side(spark, df, units, fmt)
+            out = (None if bio.source_format(spark, output) == "table"
+                   else bio.arrow_paths(spark, [output])[0])
+        if mode == "shuffle":
+            # one shuffle aligns units to tasks, so each task writes
+            # into few unit dirs
+            df = df.repartition(n_units, "unit")
         # the ordering sort runs AFTER the kernel, on the lean extracted
         # rows (~half the bytes of the input payloads): JVM work ahead
-        # of the kernel is the feed bottleneck, so it is minimized
+        # of the kernel is the feed bottleneck, so it is minimized.
+        # Leading with `unit` meets the partitioned write's required
+        # ordering, so the planner adds no sort of its own on top
         extracted = kernels.extract_turns(df).sortWithinPartitions(
-            "conv_id", "turn_idx")
-        completed = _write_with_manifest(extracted, output, metrics,
-                                         run_id, t0)
+            "unit", "conv_id", "turn_idx")
+        bio.write_extracted(extracted, output, partition_col="unit")
+        wall_ms = int((time.time() - t0) * 1000)
+        if metrics:
+            manifest = _manifest(spark, output, out, ins, run_id, wall_ms)
+            bio.append_manifest(spark.createDataFrame(manifest), metrics)
+            failed = [r["unit"] for r in manifest.to_pylist()
+                      if r["status"] != STATUS_DONE]
+            if failed:
+                raise RuntimeError(
+                    f"run {run_id}: output row count differs from input "
+                    f"for units {failed}; resume re-plans them")
+            completed = manifest.num_rows
     return {"run_id": run_id, "mode": mode, "n_units": n_units,
             "resumed": done is not None, "units_completed": completed,
             "wall_s": time.time() - t0}
-
-
-def _done_units(spark: SparkSession, metrics: str) -> DataFrame | None:
-    """Units the manifest records as done, or None before a first run."""
-    prior = bio.read_manifest(spark, metrics)
-    if prior is None:
-        return None
-    return (prior.filter(F.col("status") == STATUS_DONE)
-            .select("unit").distinct())
 
 
 def _pending(units: DataFrame, done: DataFrame | None) -> DataFrame:
@@ -184,88 +217,99 @@ def _pending(units: DataFrame, done: DataFrame | None) -> DataFrame:
     files are never scanned; in shuffle mode over the data."""
     if done is None:
         return units
-    return units.join(F.broadcast(done), "unit", "left_anti")
+    return units.join(F.broadcast(done.select("unit")), "unit", "left_anti")
 
 
-def _write_with_manifest(extracted: DataFrame, output: str,
-                         metrics: str | None, run_id: str,
-                         t0: float) -> int:
-    """Write the extracted table, then derive the per-unit manifest in
-    a single KERNEL pass: persist the kernel output at executor storage
-    while the write materializes it, and aggregate the manifest from
-    the SAME cache (a cache-hit aggregate is ~free while the run's
-    output fits executor memory).  The Python kernel never runs twice.
-    Returns the number of units this invocation committed (0 without a
-    manifest).
+def _input_side(spark: SparkSession, df: DataFrame, units: list | None,
+                fmt: str | None) -> dict[int, tuple[int, int]]:
+    """{unit: (rows_in, bytes_in)} for the units this run planned.
 
-    At 100 TB the persist spills every extracted byte to executor disk
-    just to feed four narrow aggregates; the planned replacement reads
-    the manifest fields from the written files' parquet footers
-    (ROADMAP direction 2), which also lets the manifest see lost rows."""
-    if not metrics:
-        bio.write_extracted(extracted, output, partition_col="unit")
-        return 0
-    extracted = extracted.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        bio.write_extracted(extracted, output, partition_col="unit")
-        bio.append_manifest(_build_manifest(extracted, run_id, t0), metrics)
-    finally:
-        extracted.unpersist()
-    return _written_unit_count(extracted.sparkSession, metrics, run_id, t0)
+    A parquet input file (files mode) gives its footer row count and
+    its size.  A source without footers (JSONL files, DataFrames,
+    tables) gives one JVM-only grouped count of the pending input, with
+    bytes_in the UTF-8 bytes of `text`; a planned file without rows is
+    absent from that count and gets (0, 0)."""
+    if units is not None and fmt == "parquet":
+        footers = bio.read_footers(
+            bio.arrow_paths(spark, [u.path for u in units]))
+        return {u.unit: (f.rows, f.nbytes) for u, f in zip(units, footers)}
+    counted = {r.unit: (r.rows, r.nbytes) for r in df.groupBy("unit").agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.sum(F.octet_length("text")).alias("nbytes")).collect()}
+    if units is None:
+        return counted
+    return {u.unit: counted.get(u.unit, (0, 0)) for u in units}
 
 
-def _written_unit_count(spark: SparkSession, metrics: str,
-                        run_id: str, t0: float) -> int:
-    """Count committed units by reading back the (tiny) manifest table —
-    re-counting the manifest DataFrame would re-execute its whole
-    aggregation DAG over the extracted output a second time.
-
-    Scoped to rows stamped at/after this invocation's start: a resumed
-    run reusing the caller's run_id must report only the units IT
-    completed, not the prior run's rows (the manifest ts comes from
-    current_timestamp(), fixed driver-side at planning, so it is
-    comparable with the driver's t0)."""
-    try:
-        spark.catalog.refreshByPath(metrics)
-    except Exception:
-        pass
-    m = bio.read_manifest(spark, metrics)
-    if m is None:
-        return 0
-    return m.filter((F.col("run_id") == run_id)
-                    & (F.col("ts") >= F.timestamp_seconds(F.lit(t0)))).count()
+_MANIFEST_SCHEMA = pa.schema([
+    ("run_id", pa.string()), ("unit", pa.int64()),
+    ("conv_id_min", pa.string()), ("conv_id_max", pa.string()),
+    ("rows_in", pa.int64()), ("rows_out", pa.int64()),
+    ("bytes_in", pa.int64()), ("n_errors", pa.int64()),
+    ("wall_ms", pa.int32()), ("status", pa.string()),
+    ("ts", pa.timestamp("us", tz="UTC"))])
 
 
-def _build_manifest(written: DataFrame, run_id: str, t0: float) -> DataFrame:
-    return (
-        written.groupBy("unit").agg(
-            F.min("conv_id").alias("conv_id_min"),
-            F.max("conv_id").alias("conv_id_max"),
-            F.count(F.lit(1)).alias("rows_in"),
-            F.count(F.lit(1)).alias("rows_out"),
-            F.sum("text_nbytes").alias("bytes_in"),
-            F.sum(F.when(F.col("error").isNotNull(), 1)
-                  .otherwise(0)).cast("long").alias("n_errors"),
-        )
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("wall_ms", F.lit(int((time.time() - t0) * 1000)))
-        .withColumn("status", F.lit(STATUS_DONE))
-        .withColumn("ts", F.current_timestamp())
-        .select("run_id", "unit", "conv_id_min", "conv_id_max",
-                "rows_in", "rows_out", "bytes_in", "n_errors",
-                "wall_ms", "status", "ts"))
+def _manifest(spark: SparkSession, output: str, out: tuple | None,
+              ins: dict, run_id: str, wall_ms: int) -> pa.Table:
+    """One manifest row per unit this run planned, as an Arrow table:
+    the input side `ins` (`_input_side`) against the committed output's
+    rows, conv_id bounds and error count (`_output_stats`).  A unit is
+    `done` only if rows_in == rows_out."""
+    outs = _output_stats(spark, output, out, list(ins))
+    ts = datetime.now(timezone.utc)
+    records = []
+    for unit, (rows_in, bytes_in) in ins.items():
+        rows_out, cmin, cmax, n_errors = outs[unit]
+        records.append({
+            "run_id": run_id, "unit": unit, "conv_id_min": cmin,
+            "conv_id_max": cmax, "rows_in": rows_in, "rows_out": rows_out,
+            "bytes_in": bytes_in, "n_errors": n_errors, "wall_ms": wall_ms,
+            "status": (STATUS_DONE if rows_in == rows_out
+                       else STATUS_FAILED), "ts": ts})
+    return pa.Table.from_pylist(records, schema=_MANIFEST_SCHEMA)
+
+
+def _output_stats(spark: SparkSession, output: str, out: tuple | None,
+                  units: list[int]) -> dict:
+    """{unit: (rows, conv_id_min, conv_id_max, n_errors)} of the
+    committed output, from the parquet footers of each unit's files
+    under `out`, the output's (FileSystem, path).  A catalog table
+    (`out` None) cannot be listed by path, so there it is one grouped
+    count over the committed table, restricted to `units`."""
+    if out is None:
+        got = {r.unit: (r.rows, r.lo, r.hi, r.errs) for r in
+               spark.read.table(output).filter(F.col("unit").isin(units))
+               .groupBy("unit").agg(F.count(F.lit(1)).alias("rows"),
+                                    F.min("conv_id").alias("lo"),
+                                    F.max("conv_id").alias("hi"),
+                                    F.count("error").alias("errs"))
+               .collect()}
+        return {u: got.get(u, (0, None, None, 0)) for u in units}
+    stats = {}
+    for unit, footers in bio.partition_footers(
+            out, units, ("conv_id", "error")).items():
+        los = [f.stats["conv_id"][0] for f in footers if f.rows]
+        his = [f.stats["conv_id"][1] for f in footers if f.rows]
+        stats[unit] = (sum(f.rows for f in footers),
+                       min(los, default=None), max(his, default=None),
+                       sum(f.rows - f.stats["error"][2] for f in footers))
+    return stats
 
 
 def latest_done_units(spark: SparkSession, metrics: str) -> DataFrame | None:
-    """Latest manifest row per unit (max_by ts, epoch-tie analogue of
-    get_latest_ckpt_path, /root/reference/batukh/torch/segmenter.py:355-370).
-    """
+    """Units whose LATEST manifest row (max_by ts, then run_id) is
+    `done`, or None before a first run — the epoch-tie analogue of the
+    reference's get_latest_ckpt_path (batukh/torch/segmenter.py:355-370).
+    A newer `failed` row overrides an older `done` one, so resume
+    re-plans it."""
     prior = bio.read_manifest(spark, metrics)
     if prior is None:
         return None
     w = Window.partitionBy("unit").orderBy(F.desc("ts"), F.desc("run_id"))
     return (prior.withColumn("_rn", F.row_number().over(w))
-            .filter("_rn = 1").drop("_rn"))
+            .filter((F.col("_rn") == 1) & (F.col("status") == STATUS_DONE))
+            .drop("_rn"))
 
 
 def compact_manifest(spark: SparkSession, metrics: str,

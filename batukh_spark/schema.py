@@ -1,7 +1,7 @@
 """The transcripts input schema (SURVEY §1.2).
 
 The extraction output schema is derived from its input by
-`kernels.extract_turns`; the manifest's by `pipeline._build_manifest`.
+`kernels.extract_turns`; the manifest's is `pipeline._MANIFEST_SCHEMA`.
 The transcripts shape is EXACTLY the BASELINE.json input_hint:
 (conv_id:string, turn_idx:int32, role:string, text:string, tool:string,
 ts:timestamp).

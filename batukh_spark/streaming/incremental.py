@@ -18,6 +18,7 @@ from pyspark.sql import SparkSession
 
 from batukh_spark import kernels
 from batukh_spark.schema import TRANSCRIPTS_SCHEMA
+from batukh_spark.session import materialize
 
 
 def incremental_extract(spark: SparkSession, source_dir: str,
@@ -250,8 +251,9 @@ def streaming_decontaminate(spark: SparkSession, source_dir: str,
     batch operator's own derivation (`decontam.doc_grams`), and the
     hit count is the same broadcast join + per-doc count, so stream
     verdicts match `decontaminate` (pinned by the twin test).  The
-    benchmark gram set is computed once and persisted; each
-    micro-batch reuses the broadcast.
+    benchmark gram set is computed once (`session.materialize`, so no
+    persisted cache outlives the query); each micro-batch reuses the
+    broadcast.
 
     Each row is treated as its own document keyed by
     (conv_id, turn_idx).  Exactly-once per input file via the stream
@@ -265,8 +267,9 @@ def streaming_decontaminate(spark: SparkSession, source_dir: str,
 
     from batukh_spark.operators.decontam import benchmark_ngrams, doc_grams
 
-    bgrams = benchmark_ngrams(benchmark, n).persist()
-    bgrams.count()      # materialize once, before the stream starts
+    # computed once, before the stream starts
+    bgrams = materialize(benchmark_ngrams(benchmark, n),
+                         "incremental.streaming_decontaminate:bgrams")
 
     def _process(batch_df, _batch_id):
         keyed = batch_df.withColumn(

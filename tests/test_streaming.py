@@ -219,6 +219,29 @@ def test_streaming_decontaminate_matches_batch(spark, dirs, tmp_path):
     assert flags == {True, False}      # fixture exercises both classes
 
 
+def test_streaming_decontaminate_leaves_no_cache(spark, dirs, tmp_path):
+    """The benchmark gram set is cut with `session.materialize` (a
+    local checkpoint), not a cache: once the query stops, every
+    persisted RDD it added is a checkpoint."""
+    from batukh_spark.streaming.incremental import streaming_decontaminate
+
+    sc = spark.sparkContext
+
+    def cached():
+        return {i for i, r in sc._jsc.getPersistentRDDs().items()
+                if not r.rdd().isCheckpointed()}
+
+    arriving = make_transcripts(spark, 6, partitions=1)
+    arriving.write.parquet(dirs["src"])
+    before = cached()
+    q = streaming_decontaminate(spark, dirs["src"],
+                                arriving.limit(4).select("text"),
+                                str(tmp_path / "decontam_out"), dirs["ckpt"])
+    q.awaitTermination(120)
+    assert not q.isActive
+    assert cached() <= before
+
+
 def test_streaming_conversation_docs_matches_batch(spark, dirs):
     """The running assembler's FINAL update per conversation must be
     byte-identical to the batch assemble_conversations over the same
