@@ -26,3 +26,8 @@ Package layout:
 """
 
 __version__ = "0.1.0"
+
+from batukh_spark import worker as _worker
+
+if _worker.on_worker():
+    _worker.prepare_worker()

@@ -29,6 +29,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from batukh_spark.operators.text import tokens_col
+from batukh_spark.worker import prepare_worker
 
 N_DECONTAM = 13     # n-gram length: GPT-3/PaLM-style 13-token overlap
 
@@ -55,6 +56,7 @@ def gram_hashes(tokens: Column, n: int) -> Column:
 
     @pandas_udf(T.ArrayType(T.StringType()))
     def _gh(tks: pd.Series) -> pd.Series:
+        prepare_worker()
         import hashlib
         out = []
         for tk in tks:

@@ -26,6 +26,7 @@ from pyspark.sql.functions import pandas_udf
 
 from batukh_spark.operators.text import tokens_col, word_shingles
 from batukh_spark.session import materialize
+from batukh_spark.worker import prepare_worker
 
 N_HASHES = 16          # minhash signature length
 N_BANDS = 4            # LSH bands (4 rows/band): ~Jaccard>0.5 candidates
@@ -275,6 +276,7 @@ def simhash(docs: DataFrame, id_col: str = "doc_id",
 
     @pandas_udf(T.StringType())
     def _vote(hs: pd.Series) -> pd.Series:
+        prepare_worker()
         out = []
         for v in hs:
             if v is None or len(v) == 0:

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -22,7 +23,8 @@ from pyspark.sql.functions import pandas_udf
 from batukh_spark.operators.dedup import (_band_pairs, _bit_band_keys,
                                           _cluster_verdict, _explode_bands,
                                           _verdict)
-from batukh_spark.session import materialize
+from batukh_spark.session import arrow_frame, materialize
+from batukh_spark.worker import prepare_worker
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -166,6 +168,7 @@ def _assign(q: DataFrame, cents: DataFrame, id_col: str = "vec_id",
 
     @pandas_udf(T.IntegerType())
     def _best(qs: pd.Series) -> pd.Series:
+        prepare_worker()
         n = len(qs)
         if n == 0:
             return pd.Series([], dtype="Int32")
@@ -281,6 +284,7 @@ def srp_signature_col(vec: Column, n_bits: int = 16,
 
     @pandas_udf(T.StringType())
     def _sig(vs: pd.Series, is_bad: pd.Series) -> pd.Series:
+        prepare_worker()
         n = len(vs)
         if n == 0:
             return pd.Series([], dtype=object)
@@ -733,11 +737,12 @@ def train_ivf_pq(emb: DataFrame, index_dir: str, n_centroids: int = 8,
         sc = kmeans_centroids(sub, k=ks, iters=iters, dim=dsub,
                               id_col=id_col, vec_col="__sv")
         sub_books.append(sorted(sc.collect(), key=lambda r: r.c_id))
-    spark = emb.sparkSession
-    spark.createDataFrame(
-        [(j, r.c_id, [float(v) for v in r.c_vec])
+    arrow_frame(emb.sparkSession, pa.Table.from_pylist(
+        [{"sub_id": j, "c_id": r.c_id,
+          "c_vec": [float(v) for v in r.c_vec]}
          for j, book in enumerate(sub_books) for r in book],
-        "sub_id int, c_id int, c_vec array<double>") \
+        pa.schema([("sub_id", pa.int32()), ("c_id", pa.int32()),
+                   ("c_vec", pa.list_(pa.float64()))]))) \
         .write.mode("overwrite").parquet(f"{index_dir}/pq_codebook")
     # one scan-local pass: quantized sub-slices staged as columns, then
     # per-sub-space sims over the literal codebooks, then the argmax

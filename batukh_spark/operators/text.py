@@ -7,11 +7,11 @@ linearly with the scan, no Python in the hot path.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from batukh_spark.session import materialize
+from batukh_spark.session import arrow_frame, materialize
 
 
 def tokens_col(text: Column | str) -> Column:
@@ -231,7 +231,8 @@ def _prefix_before(df, order_cols, group_col=None, weight=None):
          collect to the driver — the same k-row planning-collect class
          as the IVF codebook; each group's offsets accumulate over those
          totals in partition-id order (group values are hashed, never
-         compared) and come back as a broadcast offsets join.
+         compared) and come back as an Arrow local relation (no job,
+         no Python worker) in a broadcast offsets join.
     The result depends only on the total order, not on where range
     partitioning drew its boundaries."""
     spark = df.sparkSession
@@ -245,21 +246,23 @@ def _prefix_before(df, order_cols, group_col=None, weight=None):
            .rowsBetween(Window.unboundedPreceding, -1))
     local = ordered.withColumn(
         "__local", F.coalesce(F.sum(w).over(win), F.lit(0)))
+    # the totals leave and the offsets return as Arrow, so each group
+    # value comes back with its own Arrow type (a collected Row turns a
+    # timestamp into a naive local-time datetime)
     totals = (ordered.groupBy("__part", *groups)
               .agg(F.coalesce(F.sum(w), F.lit(0)).alias("__tot"))
-              .collect())
+              .toArrow().sort_by("__part"))
     acc: dict = {}
     offsets = []
-    for r in sorted(totals, key=lambda r: r["__part"]):
+    for r in totals.to_pylist():
         g = r[group_col] if group_col else None
-        offsets.append((r["__part"], g, acc.get(g, 0)))
+        offsets.append({"__opart": r["__part"], "__og": g,
+                        "__off": acc.get(g, 0)})
         acc[g] = acc.get(g, 0) + r["__tot"]
-    gtype = ordered.schema[group_col].dataType if group_col \
-        else T.NullType()
-    odf = spark.createDataFrame(offsets, T.StructType([
-        T.StructField("__opart", T.IntegerType()),
-        T.StructField("__og", gtype),
-        T.StructField("__off", T.LongType())]))
+    gtype = totals.schema.field(group_col).type if group_col \
+        else pa.null()
+    odf = arrow_frame(spark, pa.Table.from_pylist(offsets, pa.schema([
+        ("__opart", pa.int32()), ("__og", gtype), ("__off", pa.int64())])))
     cond = local["__part"] == odf["__opart"]
     if group_col:
         cond = cond & local[group_col].eqNullSafe(odf["__og"])

@@ -23,15 +23,21 @@ the learned merge table is bit-reproducible by the SQL oracle.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from batukh_spark.session import materialize
+from batukh_spark.session import arrow_frame, materialize
 
 # training only considers word-ish tokens (standard BPE
 # pre-tokenization); this also guarantees symbols never contain the
 # oracle's fold separators (C0 controls)
 BPE_WORD_RE = "^[a-z0-9]+$"
+
+# train_bpe's result: one row per learned merge
+_MERGES = pa.schema([("round", pa.int32()), ("left", pa.string()),
+                     ("right", pa.string()), ("merged", pa.string()),
+                     ("pair_count", pa.int64())])
 
 
 def _apply_merge(syms, left: str, right: str):
@@ -75,10 +81,7 @@ def train_bpe(docs: DataFrame, n_merges: int = 6,
     winning pair travels as a literal (no join).  Stops early if the
     corpus runs out of adjacent pairs (returns fewer rows)."""
     rows, _vocab = _train_bpe_full(docs, n_merges, text_col)
-    return docs.sparkSession.createDataFrame(
-        rows,
-        "round int, left string, right string, merged string, "
-        "pair_count long")
+    return arrow_frame(docs.sparkSession, pa.Table.from_pylist(rows, _MERGES))
 
 
 def _train_bpe_full(docs: DataFrame, n_merges: int, text_col: str):
@@ -115,8 +118,9 @@ def _train_bpe_full(docs: DataFrame, n_merges: int, text_col: str):
         if not best:
             break
         left, right = best[0]["pair"].split("\x1f")
-        out_rows.append((rnd, left, right, left + right,
-                         int(best[0]["cnt"])))
+        out_rows.append({"round": rnd, "left": left, "right": right,
+                         "merged": left + right,
+                         "pair_count": int(best[0]["cnt"])})
         words = materialize(words.select(
             "w", "n",
             _apply_merge(F.col("syms"), left, right).alias("syms")),

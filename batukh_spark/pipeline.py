@@ -71,7 +71,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from batukh_spark import kernels
-from batukh_spark.session import materialize
+from batukh_spark.session import arrow_frame, materialize
 from batukh_spark.sources import io as bio
 
 # max turns one conversation contributes to a single work unit
@@ -107,11 +107,10 @@ def file_units(spark: SparkSession, paths: list[str]) -> DataFrame:
     collisions fail LOUD at plan level if two paths tie, because both
     would resume together, never drop).
 
-    The paths cross to the JVM as one Arrow table, so the plan is a
-    local relation: no job and no Python worker (`createDataFrame`
-    over a Python list would be a pickled Python RDD)."""
+    The paths cross to the JVM as one Arrow table (`arrow_frame`), so
+    the plan is a local relation: no job and no Python worker."""
     table = pa.table({"path": pa.array(sorted(paths), pa.string())})
-    return (spark.createDataFrame(table)
+    return (arrow_frame(spark, table)
             .select("path", F.xxhash64("path").alias("unit")))
 
 
@@ -154,10 +153,13 @@ def run_extraction(spark: SparkSession, source: str | DataFrame,
         units = _pending(file_units(spark, paths), done).collect()
         # driver-side file list, as in any Spark/Iceberg planning step:
         # at 10^7 files this is ~1-2 GB of driver heap (path strings) —
-        # size spark.driver.memory accordingly, or plan per partition
-        df = (bio.read_transcripts(spark, [u.path for u in units], fmt,
-                                   schema=src.schema)
-              .select(*_INPUT_COLS)
+        # size spark.driver.memory accordingly, or plan per partition.
+        # The pending scan reuses the listing read's file index: done
+        # files are pruned by a file-metadata filter, never re-listed
+        if len(units) < n_units:
+            src = src.where(F.col("_metadata.file_path").isin(
+                [_metadata_path(u.path) for u in units]))
+        df = (src.select(*_INPUT_COLS)
               .withColumn("unit", F.xxhash64(F.input_file_name()))
               if units else None)
     else:
@@ -198,7 +200,7 @@ def run_extraction(spark: SparkSession, source: str | DataFrame,
         wall_ms = int((time.time() - t0) * 1000)
         if metrics:
             manifest = _manifest(spark, output, out, ins, run_id, wall_ms)
-            bio.append_manifest(spark.createDataFrame(manifest), metrics)
+            bio.append_manifest(arrow_frame(spark, manifest), metrics)
             failed = [r["unit"] for r in manifest.to_pylist()
                       if r["status"] != STATUS_DONE]
             if failed:
@@ -209,6 +211,15 @@ def run_extraction(spark: SparkSession, source: str | DataFrame,
     return {"run_id": run_id, "mode": mode, "n_units": n_units,
             "resumed": done is not None, "units_completed": completed,
             "wall_s": time.time() - t0}
+
+
+def _metadata_path(uri: str) -> str:
+    """A listed file URI (`inputFiles()`, `input_file_name()`) in the
+    form of `_metadata.file_path`, Hadoop's `Path.toString`: both are
+    URL-encoded, but there an empty authority drops its `//`
+    (`file:///a/b` is `file:/a/b`), so a raw `isin` matches nothing."""
+    scheme, sep, rest = uri.partition(":///")
+    return f"{scheme}:/{rest}" if sep and "/" not in scheme else uri
 
 
 def _pending(units: DataFrame, done: DataFrame | None) -> DataFrame:

@@ -1,10 +1,12 @@
-"""SparkSession factory with the engine's tuned defaults, and the
-engine's one plan cut (`materialize`)."""
+"""SparkSession factory with the engine's tuned defaults, the engine's
+one plan cut (`materialize`) and its one driver-built frame
+(`arrow_frame`)."""
 
 from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -77,3 +79,16 @@ def materialize(df: DataFrame, name: str) -> DataFrame:
     finally:
         for k, v in zip(keys, old):
             sc.setLocalProperty(k, v)
+
+
+def arrow_frame(spark: SparkSession, table: pa.Table) -> DataFrame:
+    """The package's one `createDataFrame`: a frame built on the driver
+    crosses to the JVM as one Arrow table, a local relation that needs
+    no job and no Python worker.  A Python list would be a pickled
+    Python RDD, scanned by one Python task per core, and from a second
+    worker daemon: Spark keys Python worker pools by environment, and
+    a Python RDD's differs from a SQL UDF's."""
+    if not isinstance(table, pa.Table):
+        raise TypeError(
+            f"arrow_frame takes a pyarrow.Table, not {type(table).__name__}")
+    return spark.createDataFrame(table)

@@ -73,14 +73,11 @@ def source_format(spark: SparkSession, source: str) -> str:
     return "jsonl" if _looks_jsonl(source) else "parquet"
 
 
-def read_transcripts(spark: SparkSession, source: str | list[str],
-                     fmt: str | None = None, schema=None) -> DataFrame:
+def read_transcripts(spark: SparkSession, source: str,
+                     fmt: str | None = None) -> DataFrame:
     """source = catalog table ident, parquet path/dir, or JSONL
     (.jsonl/.json) path/dir — web-scale transcript dumps commonly
-    arrive as line-delimited JSON before compaction to parquet — or a
-    list of data files of one format (a files-mode plan's pending
-    files; pass their source's `fmt`, and its `schema` so the parquet
-    read does not run a schema-inference job again).
+    arrive as line-delimited JSON before compaction to parquet.
     `fmt` ('table' | 'jsonl' | 'parquet') overrides detection; without
     it, JSONL is detected by path suffix or by sniffing a local
     directory's contents (a dir of .jsonl part files routes correctly
@@ -89,15 +86,13 @@ def read_transcripts(spark: SparkSession, source: str | list[str],
         fmt = source_format(spark, source)
     if fmt == "table":
         return spark.read.table(source)
-    paths = [source] if isinstance(source, str) else list(source)
     if fmt in ("jsonl", "json"):
         from batukh_spark.schema import TRANSCRIPTS_SCHEMA
         return (spark.read.schema(TRANSCRIPTS_SCHEMA)
                 .option("timestampFormat",
                         "yyyy-MM-dd'T'HH:mm:ss[.SSSSSS]")
-                .json(paths))
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(*paths)
+                .json(source))
+    return spark.read.parquet(source)
 
 
 def write_extracted(df: DataFrame, target: str, partition_col: str = "unit",

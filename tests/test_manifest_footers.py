@@ -187,6 +187,42 @@ def test_files_mode_runs_at_most_three_jobs(spark, dirs):
     assert len(jobs) <= 3, jobs
 
 
+def test_files_mode_lists_40_files_once(spark, dirs):
+    """Above Spark's parallel-listing threshold (32 paths) the pending
+    scan still reuses the listing read's file index: no listing job,
+    and the `input_file_name` units are the plan's units.  A resume
+    over part of the files prunes the done ones by file metadata."""
+    make_transcripts(spark, 80, partitions=40).write.parquet(dirs["src"])
+    plan = set(_units(spark, dirs["src"]))
+    assert len(plan) == 40
+    sc = spark.sparkContext
+    sc.setJobGroup("test_files_mode_40", "files-mode extraction")
+    try:
+        s = pipeline.run_extraction(spark, dirs["src"], dirs["out"],
+                                    metrics=dirs["metrics"], run_id="f1")
+        jobs = sc.statusTracker().getJobIdsForGroup("test_files_mode_40")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert s["units_completed"] == 40
+    assert len(jobs) <= 3, jobs
+    out = spark.read.parquet(dirs["out"])
+    assert {r.unit for r in out.select("unit").distinct().collect()} == plan
+
+    redo = sorted(plan)[:5]
+    for u in redo:
+        shutil.rmtree(f"{dirs['out']}/unit={u}")
+    bio.rewrite_manifest(bio.read_manifest(spark, dirs["metrics"])
+                         .filter(~F.col("unit").isin(redo)), dirs["metrics"])
+    s2 =pipeline.run_extraction(spark, dirs["src"], dirs["out"],
+                                 metrics=dirs["metrics"], run_id="f2",
+                                 resume=True)
+    assert s2["units_completed"] == 5
+    spark.catalog.refreshByPath(dirs["out"])
+    back = spark.read.parquet(dirs["out"])
+    assert back.count() == spark.read.parquet(dirs["src"]).count()
+    assert {r.unit for r in back.select("unit").distinct().collect()} == plan
+
+
 def test_pipeline_never_persists():
     """The manifest needs no cache of the output: pipeline.py holds no
     persist/cache call, no StorageLevel, and none of the removed

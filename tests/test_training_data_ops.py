@@ -1478,3 +1478,37 @@ def test_prefix_before_matches_single_window(spark, case):
         parts = {r["__part"] for r in
                  _prefix_before(df, ["id"], "g")[0].collect()}
         assert len(parts) == spark.sparkContext.defaultParallelism
+
+
+@pytest.mark.parametrize("gtype", ["timestamp", "date", "double"])
+def test_prefix_before_group_types_in_local_time_zone(spark, gtype):
+    """Group values return through the offsets join with their own type,
+    also when the driver's local time zone is not UTC: a collected
+    timestamp is a naive local-time datetime, which an Arrow UTC column
+    would read as UTC and match no row."""
+    import os
+    import time
+    from pyspark.sql import Window
+    from batukh_spark.operators.text import _prefix_before
+    k = F.col("id") % 3
+    g = {"timestamp": F.timestamp_seconds(k * 86400),
+         "date": F.date_from_unix_date(k.cast("int")),
+         "double": k / 2}[gtype]
+    df = spark.range(40).select("id", g.alias("g"))
+    ref = df.select("id", F.count(F.lit(1)).over(
+        Window.partitionBy("g").orderBy("id")
+        .rowsBetween(Window.unboundedPreceding, -1)).alias("b"))
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        out, totals = _prefix_before(df, ["id"], "g")
+        got = sorted((r["id"], r["__before"]) for r in out.collect())
+    finally:
+        if old is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old
+        time.tzset()
+    assert got == sorted((r.id, r.b) for r in ref.collect())
+    assert sorted(totals.values()) == [13, 13, 14]
