@@ -25,7 +25,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from batukh_spark.operators.text import tokens_col, word_shingles
-from batukh_spark.session import materialize
+from batukh_spark.session import materialize, named_jobs
 from batukh_spark.worker import prepare_worker
 
 N_HASHES = 16          # minhash signature length
@@ -215,7 +215,9 @@ def resolve_clusters(pairs: DataFrame, id_a: str = "id_a",
     # propagation loop — each round costs fixed shuffle overhead even
     # over empty inputs, and the edges are already materialized so
     # this probe is a cheap local scan
-    if not edges.take(1):
+    with named_jobs(edges.sparkSession, "dedup.resolve_clusters:edges"):
+        empty = not edges.take(1)
+    if empty:
         return edges.select(F.col("src").alias("doc_id"),
                             F.col("dst").alias("cluster_id"),
                             F.lit(True).alias("is_keeper"))
@@ -242,9 +244,10 @@ def resolve_clusters(pairs: DataFrame, id_a: str = "id_a",
                     F.least("label", F.coalesce("nbr", "label"))
                     .alias("label")),
             "dedup.resolve_clusters:round")
-        changed = (new_labels
-                   .filter(F.col("label") != F.col("__old"))
-                   .limit(1).count())
+        with named_jobs(edges.sparkSession, "dedup.resolve_clusters:round"):
+            changed = (new_labels
+                       .filter(F.col("label") != F.col("__old"))
+                       .limit(1).count())
         labels = new_labels.select("id", "label")
         if changed == 0:
             return labels.select(

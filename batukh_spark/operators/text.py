@@ -11,7 +11,7 @@ import pyarrow as pa
 from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 
-from batukh_spark.session import arrow_frame, materialize
+from batukh_spark.session import arrow_frame, materialize, named_jobs
 
 
 def tokens_col(text: Column | str) -> Column:
@@ -249,9 +249,10 @@ def _prefix_before(df, order_cols, group_col=None, weight=None):
     # the totals leave and the offsets return as Arrow, so each group
     # value comes back with its own Arrow type (a collected Row turns a
     # timestamp into a naive local-time datetime)
-    totals = (ordered.groupBy("__part", *groups)
-              .agg(F.coalesce(F.sum(w), F.lit(0)).alias("__tot"))
-              .toArrow().sort_by("__part"))
+    with named_jobs(spark, "text._prefix_before:totals"):
+        totals = (ordered.groupBy("__part", *groups)
+                  .agg(F.coalesce(F.sum(w), F.lit(0)).alias("__tot"))
+                  .toArrow().sort_by("__part"))
     acc: dict = {}
     offsets = []
     for r in totals.to_pylist():

@@ -876,16 +876,32 @@ select cluster::bigint as cluster, count(*) as n from assign group by 1
 _IVF_CACHE_VER = "v2_k8_i2_d64"
 
 
-def _ivf_index_dir(sf: str) -> str:
-    """Deterministic per-corpus index location: train once per testdata
-    dir, serve on every subsequent call.  Keyed by corpus file identity
-    (a regenerated corpus retrains) AND a code/param version token (a
-    training change retrains)."""
+def _cached_build(sf: str, table: str, kind: str, marker: str,
+                  build) -> str:
+    """Deterministic per-corpus artifact location: build once per
+    testdata dir, serve on every subsequent call.  The directory
+    `/tmp/batukh_<kind>_<base>_<size>_<mtime>` is keyed by the identity
+    of `{sf}/{table}.parquet` (a regenerated corpus rebuilds) AND by
+    `kind`, which carries a code/param version token (a training change
+    rebuilds).  Concurrent-safe: `build(tmp)` writes a pid-unique tmp
+    dir that is atomically renamed into place; a builder that loses the
+    rename removes its tmp dir and serves the winner's identical
+    artifact, whose `marker` file then exists."""
     import os
-    st = os.stat(f"{sf}/embeddings.parquet")
+    st = os.stat(f"{sf}/{table}.parquet")
     base = os.path.basename(os.path.normpath(sf))
-    return (f"/tmp/batukh_ivf_{_IVF_CACHE_VER}_{base}_"
-            f"{st.st_size}_{int(st.st_mtime)}")
+    out = f"/tmp/batukh_{kind}_{base}_{st.st_size}_{int(st.st_mtime)}"
+    if not os.path.exists(f"{out}/{marker}"):
+        tmp = f"{out}.build{os.getpid()}"
+        build(tmp)
+        try:
+            os.rename(tmp, out)
+        except OSError:
+            import shutil
+            shutil.rmtree(tmp, ignore_errors=True)
+            if not os.path.exists(f"{out}/{marker}"):
+                raise
+    return out
 
 
 def ivf_recall_topk(spark, sf):
@@ -896,22 +912,10 @@ def ivf_recall_topk(spark, sf):
     vectors) is trained ONCE per corpus by `train_ivf`; the query path
     (`ivf_topk`) runs zero Lloyd rounds and partition-prunes the scan
     to the probed clusters."""
-    import os
     emb = t(spark, sf, "embeddings")
-    idx = _ivf_index_dir(sf)
-    if not os.path.exists(f"{idx}/vectors/_SUCCESS"):
-        # concurrent-safe creation: train into a pid-unique tmp dir,
-        # then atomically rename into place; a racing trainer that
-        # loses the rename just uses the winner's identical index
-        tmp = f"{idx}.train{os.getpid()}"
-        similarity.train_ivf(emb, tmp)
-        try:
-            os.rename(tmp, idx)
-        except OSError:
-            import shutil
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.exists(f"{idx}/vectors/_SUCCESS"):
-                raise
+    idx = _cached_build(sf, "embeddings", f"ivf_{_IVF_CACHE_VER}",
+                        "vectors/_SUCCESS",
+                        lambda tmp: similarity.train_ivf(emb, tmp))
     brute = similarity.cosine_topk(emb, query_id=0, k=10).select("vec_id")
     ivf = similarity.ivf_topk(spark, idx, query_id=0, k=10,
                               nprobe=3).select("vec_id")
@@ -1170,17 +1174,6 @@ select vec_id, reason = 'unique' as keep, reason from verdict
 """
 
 
-def _emb_store_dir(sf: str) -> str:
-    """Deterministic per-corpus embedding signature store — build once
-    per testdata dir (keyed by corpus file identity + code version),
-    serve the incremental query from it."""
-    import os
-    st = os.stat(f"{sf}/embeddings.parquet")
-    base = os.path.basename(os.path.normpath(sf))
-    return (f"/tmp/batukh_embstore_v1_b32_{base}_"
-            f"{st.st_size}_{int(st.st_mtime)}")
-
-
 def incremental_embedding_keep_set_q(spark, sf):
     """Cross-run incremental SemDeDup: verdicts for NEW vectors
     against the persisted embedding signature store (similarity.
@@ -1192,19 +1185,11 @@ def incremental_embedding_keep_set_q(spark, sf):
     IDENTICALLY in both engines), and negated vectors (vec_id%19,
     cos <= -1 with their source and below threshold against
     everything -> unique)."""
-    import os
     emb = t(spark, sf, "embeddings")
-    store = _emb_store_dir(sf)
-    if not os.path.exists(f"{store}/vecs/_SUCCESS"):
-        tmp = f"{store}.build{os.getpid()}"
-        similarity.build_embedding_store(emb, tmp)
-        try:
-            os.rename(tmp, store)
-        except OSError:
-            import shutil
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.exists(f"{store}/vecs/_SUCCESS"):
-                raise
+    # the embedding signature store, built once per corpus
+    store = _cached_build(
+        sf, "embeddings", "embstore_v1_b32", "vecs/_SUCCESS",
+        lambda tmp: similarity.build_embedding_store(emb, tmp))
     base = emb.select("vec_id",
                       F.col("embedding").cast("array<double>")
                       .alias("e"))
@@ -1289,12 +1274,11 @@ select vec_id, reason = 'unique' as keep, reason from verdict
 _IVF_PQ_CACHE_VER = "v1_k8_m8_ks16_i2_d64"
 
 
-def _ivf_pq_index_dir(sf: str) -> str:
-    import os
-    st = os.stat(f"{sf}/embeddings.parquet")
-    base = os.path.basename(os.path.normpath(sf))
-    return (f"/tmp/batukh_ivfpq_{_IVF_PQ_CACHE_VER}_{base}_"
-            f"{st.st_size}_{int(st.st_mtime)}")
+def _ivf_pq_index(sf: str, emb: DataFrame) -> str:
+    """The IVF-PQ index both PQ queries serve from, trained once."""
+    return _cached_build(sf, "embeddings", f"ivfpq_{_IVF_PQ_CACHE_VER}",
+                         "vectors/_SUCCESS",
+                         lambda tmp: similarity.train_ivf_pq(emb, tmp))
 
 
 def ivf_pq_topk_q(spark, sf):
@@ -1305,19 +1289,8 @@ def ivf_pq_topk_q(spark, sf):
     codes, cluster-partitioned) is trained once per corpus by
     `train_ivf_pq`; the query path reads ONLY (vec_id, code) from the
     probed partitions — no join, no aggregation, no vector shuffle."""
-    import os
     emb = t(spark, sf, "embeddings")
-    idx = _ivf_pq_index_dir(sf)
-    if not os.path.exists(f"{idx}/vectors/_SUCCESS"):
-        tmp = f"{idx}.train{os.getpid()}"
-        similarity.train_ivf_pq(emb, tmp)
-        try:
-            os.rename(tmp, idx)
-        except OSError:
-            import shutil
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.exists(f"{idx}/vectors/_SUCCESS"):
-                raise
+    idx = _ivf_pq_index(sf, emb)
     brute = similarity.cosine_topk(emb, query_id=0, k=10).select("vec_id")
     pq = similarity.ivf_pq_topk(spark, idx, query_id=0, k=10,
                                 nprobe=3).select("vec_id")
@@ -1387,19 +1360,8 @@ def ivf_pq_refine_topk_q(spark, sf):
     refinement recovers everything quantization lost (ADC 0.2 ->
     refined 0.9 at sf0.01, exactly the exact-cosine nprobe=3 ceiling
     ivf_recall_topk measures; 0.4 -> 0.8 at sf0.001)."""
-    import os
     emb = t(spark, sf, "embeddings")
-    idx = _ivf_pq_index_dir(sf)
-    if not os.path.exists(f"{idx}/vectors/_SUCCESS"):
-        tmp = f"{idx}.train{os.getpid()}"
-        similarity.train_ivf_pq(emb, tmp)
-        try:
-            os.rename(tmp, idx)
-        except OSError:
-            import shutil
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.exists(f"{idx}/vectors/_SUCCESS"):
-                raise
+    idx = _ivf_pq_index(sf, emb)
     brute = similarity.cosine_topk(emb, query_id=0, k=10).select("vec_id")
     pq = similarity.ivf_pq_topk(spark, idx, query_id=0, k=10,
                                 nprobe=3, refine=50).select("vec_id")
@@ -1963,16 +1925,6 @@ group by 1, 2
 _SIGSTORE_CACHE_VER = "v1_h16_b4"
 
 
-def _sigstore_dir(sf: str) -> str:
-    """Deterministic per-corpus signature-store location (same file-
-    identity + code-version keying as the IVF index cache)."""
-    import os
-    st = os.stat(f"{sf}/documents.parquet")
-    base = os.path.basename(os.path.normpath(sf))
-    return (f"/tmp/batukh_sigstore_{_SIGSTORE_CACHE_VER}_{base}_"
-            f"{st.st_size}_{int(st.st_mtime)}")
-
-
 def incremental_keep_set_q(spark, sf):
     """Cross-run incremental dedup: run N = even doc_ids (its signature
     store is built once and persisted — run N's TEXT is never re-read);
@@ -1981,20 +1933,11 @@ def incremental_keep_set_q(spark, sf):
     appended tokens for doc_id%40==0, which perturbs only the trailing
     shingles so >= 1 minhash band survives).  Emits the same (doc_id,
     keep, reason) verdict shape as corpus_keep_set."""
-    import os
     docs = t_spread(spark, sf, "documents").select("doc_id", "text")
     run_a = docs.filter(F.col("doc_id") % 2 == 0)
-    store = _sigstore_dir(sf)
-    if not os.path.exists(f"{store}/bands/_SUCCESS"):
-        tmp = f"{store}.build{os.getpid()}"
-        dedup.build_signature_store(run_a, tmp)
-        try:
-            os.rename(tmp, store)
-        except OSError:
-            import shutil
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.exists(f"{store}/bands/_SUCCESS"):
-                raise
+    store = _cached_build(
+        sf, "documents", f"sigstore_{_SIGSTORE_CACHE_VER}", "bands/_SUCCESS",
+        lambda tmp: dedup.build_signature_store(run_a, tmp))
     exact_twins = run_a.filter(F.col("doc_id") % 50 == 0).select(
         (F.col("doc_id") + 2000000).alias("doc_id"), "text")
     near_twins = run_a.filter(F.col("doc_id") % 40 == 0).select(
@@ -3724,13 +3667,13 @@ from cum group by source
 
 
 def bpe_merges_q(spark, sf):
-    """Distributed BPE merge-table training over the documents corpus
-    (vocab.train_bpe — one corpus shuffle to the (word, count)
-    working set, then per round: pair explode + map-side-combined
-    groupBy + one-row argmax collect + scan-local greedy-leftmost
-    fold).  Deterministic: integer counts, (count desc, pair asc)
-    tie-break — the oracle replays the identical six rounds with
-    list_reduce folds."""
+    """BPE merge-table training over the documents corpus
+    (vocab.train_bpe — one corpus shuffle to the (word, count) working
+    set, collected as Arrow; the driver learns every merge with an
+    incremental pair count and greedy-leftmost application).
+    Deterministic: integer counts, (count desc, pair asc) tie-break —
+    the oracle replays the identical six rounds with list_reduce
+    folds."""
     from batukh_spark.operators.vocab import train_bpe
     return train_bpe(t_spread(spark, sf, "documents"), n_merges=6)
 
@@ -3808,8 +3751,9 @@ order by round
 def bpe_token_counts_q(spark, sf):
     """Per-document token counts under the TRAINED 6-merge BPE
     vocabulary (vocab.bpe_token_counts — encoding joins each doc's
-    tokens against the trained word->symbols table, a training
-    by-product; non-word tokens count 1, token-less docs report 0)."""
+    tokens against a driver-built (word, n_syms) frame of the
+    training's final segmentations; non-word tokens count 1,
+    token-less docs report 0)."""
     from batukh_spark.operators.vocab import bpe_token_counts
     return bpe_token_counts(t_spread(spark, sf, "documents"),
                             n_merges=6)

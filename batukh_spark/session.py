@@ -1,10 +1,11 @@
 """SparkSession factory with the engine's tuned defaults, the engine's
-one plan cut (`materialize`) and its one driver-built frame
-(`arrow_frame`)."""
+one plan cut (`materialize`), its job naming (`named_jobs`) and its one
+driver-built frame (`arrow_frame`)."""
 
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -64,21 +65,29 @@ def get_spark(app_name: str = "batukh-spark", cores: int | None = None,
     return b.getOrCreate()
 
 
-def materialize(df: DataFrame, name: str) -> DataFrame:
-    """Eager localCheckpoint of `df` into executor storage — the engine's
-    one plan cut.  Its jobs carry `name` ("<module>.<function>:<frame>")
-    as job description and `batukh.op`, so the event log names them;
-    both local properties are restored afterwards, also on failure."""
-    sc = df.sparkSession.sparkContext
+@contextmanager
+def named_jobs(spark: SparkSession, name: str):
+    """Name the Spark jobs started inside the block: `name`
+    ("<module>.<function>:<frame>") becomes their job description and
+    `batukh.op`, so the event log says which operator owns them.  Both
+    local properties are restored afterwards, also on failure."""
+    sc = spark.sparkContext
     keys = ("spark.job.description", "batukh.op")
     old = [sc.getLocalProperty(k) for k in keys]
     for k in keys:
         sc.setLocalProperty(k, name)
     try:
-        return df.localCheckpoint()
+        yield
     finally:
         for k, v in zip(keys, old):
             sc.setLocalProperty(k, v)
+
+
+def materialize(df: DataFrame, name: str) -> DataFrame:
+    """Eager localCheckpoint of `df` into executor storage — the engine's
+    one plan cut.  Its jobs are named by `named_jobs`."""
+    with named_jobs(df.sparkSession, name):
+        return df.localCheckpoint()
 
 
 def arrow_frame(spark: SparkSession, table: pa.Table) -> DataFrame:

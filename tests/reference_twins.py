@@ -9,7 +9,10 @@ operator, and a test pins the two equal:
 - `simhash_expr`: expression-form bit vote vs `dedup.simhash`;
 - `assign_expr`: HOF cosine argmax vs `similarity._assign`;
 - `srp_signature_expr`: flat-sum SRP bits vs
-  `similarity.srp_signature`.
+  `similarity.srp_signature`;
+- `train_bpe_loop`: one Catalyst argmax and one materialized
+  `_apply_merge` fold per merge vs the driver's incremental pair count
+  in `vocab.train_bpe` / `vocab.bpe_token_counts`.
 """
 
 from __future__ import annotations
@@ -25,6 +28,7 @@ from batukh_spark.operators.text import tokens_col
 from batukh_spark.oracle import constants as C
 from batukh_spark.oracle.blocks import Block, finalize_block
 from batukh_spark.oracle.canonical import canonicalize
+from batukh_spark.session import materialize
 
 _VOID_TAGS = frozenset({
     "area", "base", "br", "col", "embed", "hr", "img", "input", "link",
@@ -299,3 +303,93 @@ def srp_signature_expr(emb: DataFrame, n_bits: int = 16, dim: int = 64,
             acc = term if acc is None else acc + term
         bits.append(F.when(acc > 0, "1").otherwise("0"))
     return pre.select(F.col(id_col), F.concat(*bits).alias("sig"))
+
+
+def _apply_merge(syms, left: str, right: str):
+    """Greedy leftmost application of ONE merge (left, right) to a
+    symbol array — a scan-local aggregate fold with (out, pending)
+    state: pending==left followed by right emits the merged symbol
+    and clears pending, so a run like 'aaaa' under (a,a) becomes
+    [aa, aa] exactly as reference BPE does."""
+    merged = left + right
+    init = F.struct(F.array().cast("array<string>").alias("out"),
+                    F.lit("").alias("p"))
+
+    def step(acc, s):
+        hit = (acc["p"] == left) & (s == right)
+        flushed = F.when(acc["p"] != "",
+                         F.concat(acc["out"], F.array(acc["p"]))) \
+            .otherwise(acc["out"])
+        return F.struct(
+            F.when(hit, F.concat(acc["out"], F.array(F.lit(merged))))
+            .otherwise(flushed).alias("out"),
+            F.when(hit, F.lit("")).otherwise(s).alias("p"))
+
+    def finish(acc):
+        return F.when(acc["p"] != "",
+                      F.concat(acc["out"], F.array(acc["p"]))) \
+            .otherwise(acc["out"])
+
+    return F.aggregate(syms, init, step, finish)
+
+
+def train_bpe_loop(docs: DataFrame, n_merges: int,
+                   text_col: str = "text") -> tuple[list, DataFrame]:
+    """Per-merge loop form of `vocab.train_bpe`: each round is a pair
+    explode, a groupBy(pair), a one-row argmax collect and a
+    materialized `_apply_merge` fold over the (w, n, syms) word table.
+    Returns (merge rows, word table after all merges)."""
+    from batukh_spark.operators.vocab import BPE_WORD_RE
+    words = materialize(
+        docs.select(F.explode(tokens_col(text_col)).alias("w"))
+        .where(F.col("w").rlike(BPE_WORD_RE))
+        .groupBy("w").agg(F.count(F.lit(1)).alias("n"))
+        .select("w", "n",
+                F.transform(F.sequence(F.lit(1), F.length("w")),
+                            lambda i: F.col("w").substr(i, F.lit(1)))
+                .alias("syms")),
+        "reference_twins.train_bpe_loop:words")
+    out_rows = []
+    for rnd in range(1, n_merges + 1):
+        pair = F.explode(
+            F.when(F.size("syms") >= 2,
+                   F.transform(
+                       F.sequence(F.lit(1), F.size("syms") - 1),
+                       lambda i: F.concat(
+                           F.element_at("syms", i.cast("int")),
+                           F.lit("\x1f"),
+                           F.element_at("syms", (i + 1).cast("int")))))
+            .otherwise(F.array().cast("array<string>"))).alias("pair")
+        best = (words.select("n", pair)
+                .groupBy("pair").agg(F.sum("n").alias("cnt"))
+                .orderBy(F.desc("cnt"), F.asc("pair"))
+                .limit(1).collect())
+        if not best:
+            break
+        left, right = best[0]["pair"].split("\x1f")
+        out_rows.append({"round": rnd, "left": left, "right": right,
+                         "merged": left + right,
+                         "pair_count": int(best[0]["cnt"])})
+        words = materialize(words.select(
+            "w", "n",
+            _apply_merge(F.col("syms"), left, right).alias("syms")),
+            "reference_twins.train_bpe_loop:round")
+    return out_rows, words
+
+
+def bpe_token_counts_from(docs: DataFrame, vocab: DataFrame,
+                          text_col: str = "text",
+                          id_col: str = "doc_id") -> DataFrame:
+    """`vocab.bpe_token_counts`'s encoding over a (w, syms) word table,
+    e.g. the one `train_bpe_loop` returns."""
+    toks = docs.select(F.col(id_col),
+                       F.explode(tokens_col(text_col)).alias("w"))
+    sized = vocab.select("w", F.size("syms").alias("__ns"))
+    per = (toks.join(sized, "w", "left")
+           .groupBy(id_col)
+           .agg(F.sum(F.coalesce(F.col("__ns"), F.lit(1)))
+                .cast("long").alias("__n")))
+    return (docs.select(F.col(id_col)).join(per, id_col, "left")
+            .select(F.col(id_col),
+                    F.coalesce(F.col("__n"), F.lit(0))
+                    .alias("n_bpe_tokens")))

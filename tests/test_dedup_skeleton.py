@@ -12,7 +12,8 @@ import pathlib
 PKG = pathlib.Path(__file__).resolve().parents[1] / "batukh_spark"
 
 TWINS = {"tokenize_html_reference", "simhash_expr", "_assign_expr",
-         "srp_signature_expr", "_cos_pairs_fast"}
+         "srp_signature_expr", "_cos_pairs_fast", "_apply_merge",
+         "train_bpe_loop", "_train_bpe_full"}
 
 
 def _functions():

@@ -1,18 +1,34 @@
-"""`session.materialize`: the engine's one plan cut names its jobs, restores
-the caller's local properties, and is the only checkpoint call site."""
+"""`session.materialize` and `session.named_jobs`: the engine's plan cut
+and its driver probes name their jobs and restore the caller's local
+properties, and `materialize` is the only checkpoint call site."""
 
 import ast
 import pathlib
 
 import pytest
 
+from batukh_spark.session import materialize, named_jobs
+
 PKG = pathlib.Path(__file__).resolve().parent.parent / "batukh_spark"
 
 
-def test_name_reaches_tasks_and_is_restored(spark):
-    from pyspark import TaskContext
+def _via_materialize(df, name):
+    return materialize(df, name).collect()
 
-    from batukh_spark.session import materialize
+
+def _via_named_jobs(df, name):
+    with named_jobs(df.sparkSession, name):
+        return df.collect()
+
+
+NAMING = pytest.mark.parametrize(
+    "run", [_via_materialize, _via_named_jobs],
+    ids=["materialize", "named_jobs"])
+
+
+@NAMING
+def test_name_reaches_tasks_and_is_restored(spark, run):
+    from pyspark import TaskContext
     sc = spark.sparkContext
     desc = sc.getLocalProperty("spark.job.description")
     sc.setLocalProperty("batukh.op", "outer")
@@ -25,23 +41,23 @@ def test_name_reaches_tasks_and_is_restored(spark):
                                     * len(b)})
 
         df = spark.range(0, 40, 1, 4).mapInPandas(op_of, "op string")
-        out = materialize(df, "test_materialize:probe")
-        assert out.count() == 40
-        assert {r.op for r in out.collect()} == {"test_materialize:probe"}
+        out = run(df, "test_materialize:probe")
+        assert len(out) == 40
+        assert {r.op for r in out} == {"test_materialize:probe"}
         assert sc.getLocalProperty("batukh.op") == "outer"
         assert sc.getLocalProperty("spark.job.description") == desc
     finally:
         sc.setLocalProperty("batukh.op", None)
 
 
-def test_properties_restored_on_failure(spark):
-    from batukh_spark.session import materialize
+@NAMING
+def test_properties_restored_on_failure(spark, run):
     sc = spark.sparkContext
     sc.setLocalProperty("spark.job.description", "caller")
     try:
         with pytest.raises(Exception, match="boom"):
-            materialize(spark.range(1).selectExpr("raise_error('boom')"),
-                        "test_materialize:fails")
+            run(spark.range(1).selectExpr("raise_error('boom')"),
+                "test_materialize:fails")
         assert sc.getLocalProperty("spark.job.description") == "caller"
         assert sc.getLocalProperty("batukh.op") is None
     finally:

@@ -41,14 +41,18 @@ def _docs(spark, n=40):
                           for i in range(n)], pa.string())}))
 
 
+def _executed_plan(df):
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    return plan
+
+
 def _python_rdd_scans(df) -> list[str]:
     """The scans in `df`'s executed plan whose RDD derives from a
     Python RDD.  A checkpoint's scan also prints as `Scan ExistingRDD`,
     so the RDD lineage tells them apart."""
-    plan = df._jdf.queryExecution().executedPlan()
-    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-        plan = plan.executedPlan()
-    found, stack = [], [plan]
+    found, stack = [], [_executed_plan(df)]
     while stack:
         p = stack.pop()
         if p.getClass().getSimpleName() == "RDDScanExec" \
@@ -65,7 +69,7 @@ def _operators():
     from batukh_spark.operators.text import (epoch_order,
                                              length_bucketed_batches,
                                              pack_sequences)
-    from batukh_spark.operators.vocab import train_bpe
+    from batukh_spark.operators.vocab import bpe_token_counts, train_bpe
     return {
         "pack_sequences": lambda d: pack_sequences(d, seq_len=16),
         "token_budget_sample": lambda d: token_budget_sample(d, budget=60),
@@ -74,17 +78,20 @@ def _operators():
             lambda d: length_bucketed_batches(d, batch_max_tokens=32),
         "epoch_order": lambda d: epoch_order(d, 1),
         "train_bpe": lambda d: train_bpe(d, n_merges=3),
+        "bpe_token_counts": lambda d: bpe_token_counts(d, n_merges=3),
     }
 
 
 @pytest.mark.parametrize("name", sorted(_operators()))
 def test_driver_built_frames_scan_no_python_rdd(spark, name):
-    """The five `_prefix_before` operators (offsets frame) and
-    `train_bpe` (merge table) plan an Arrow local relation where a
-    Python list would have planned a Python-RDD scan."""
+    """The five `_prefix_before` operators (offsets frame), `train_bpe`
+    (merge table) and `bpe_token_counts` (segmentation frame) plan an
+    Arrow local relation where a Python list would have planned a
+    Python-RDD scan."""
     out = _operators()[name](_docs(spark))
     assert out.count() > 0
     assert _python_rdd_scans(out) == []
+    assert "LocalTableScan" in _executed_plan(out).toString()
 
 
 def test_python_rdd_scan_is_detected(spark):

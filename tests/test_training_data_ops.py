@@ -1412,6 +1412,8 @@ def test_train_bpe_stops_early_and_validates(spark):
     assert train_bpe(docs, n_merges=4).count() == 0
     with pytest.raises(ValueError):
         train_bpe(docs, n_merges=0)
+    with pytest.raises(ValueError):
+        train_bpe(docs, n_merges=2.0)
     # non-word tokens are excluded from training
     docs2 = spark.createDataFrame([(1, "ab ab @@ @@ @@")],
                                   "doc_id long, text string")
@@ -1431,6 +1433,91 @@ def test_bpe_token_counts_semantics(spark):
     # doc1: [low][low][low,er] = 4; doc2: [er][er] + '@@' as 1 = 3;
     # doc3: token-less -> 0
     assert got == {1: 4, 2: 3, 3: 0}
+
+
+def _bpe_corpus(spark, n_docs=60, n_words=240, seed=11):
+    """Seeded corpus with enough distinct words that hundreds of merges
+    exist: a small alphabet (so pairs recur and merges chain), runs
+    such as 'aaaa' (overlapping adjacencies), skewed word frequencies
+    (count ties and non-ties) and non-word tokens."""
+    import random
+    rng = random.Random(seed)
+    alphabet = "aeilnorst0123"
+    vocab = {"aaaa", "aaaaaaa", "abab", "ababab", "low", "lower"}
+    while len(vocab) < n_words:
+        vocab.add("".join(rng.choice(alphabet)
+                          for _ in range(rng.randint(2, 9))))
+    vocab = sorted(vocab)
+    weights = [1.0 / (1 + i % 37) for i in range(len(vocab))]
+    texts = []
+    for d in range(n_docs):
+        toks = rng.choices(vocab, weights, k=rng.randint(4, 30))
+        if d % 7 == 0:
+            toks += ["@@", "x-y", "Hello,"]
+        texts.append(" ".join(toks))
+    return spark.createDataFrame(list(enumerate(texts)),
+                                 "doc_id long, text string")
+
+
+def test_bpe_matches_loop_twin_at_200_merges(spark):
+    """The driver's incremental pair count learns the same 200 merges
+    as the per-merge Catalyst loop, and encodes every doc to the same
+    token count."""
+    from reference_twins import bpe_token_counts_from, train_bpe_loop
+
+    from batukh_spark.operators.vocab import bpe_token_counts, train_bpe
+    docs = _bpe_corpus(spark)
+    want_rows, want_vocab = train_bpe_loop(docs, 200)
+    assert len(want_rows) == 200
+    got = [r.asDict() for r in train_bpe(docs, n_merges=200)
+           .orderBy("round").collect()]
+    assert got == want_rows
+    want = {r.doc_id: r.n_bpe_tokens
+            for r in bpe_token_counts_from(docs, want_vocab).collect()}
+    assert {r.doc_id: r.n_bpe_tokens
+            for r in bpe_token_counts(docs, n_merges=200).collect()} == want
+
+
+def _jobs(spark, run):
+    """Number of Spark jobs `run()` starts."""
+    import uuid
+    sc = spark.sparkContext
+    group = f"bpe-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("op", ["train_bpe", "bpe_token_counts"])
+def test_bpe_job_count_independent_of_n_merges(spark, op):
+    from batukh_spark.operators import vocab
+    docs = _bpe_corpus(spark)
+    fn = getattr(vocab, op)
+    jobs = {m: _jobs(spark, lambda: fn(docs, n_merges=m).collect())
+            for m in (2, 50)}
+    assert jobs[2] == jobs[50], jobs
+
+
+@pytest.mark.parametrize("texts,counts", [
+    # NULL, empty and whitespace-only text: no tokens at all
+    ([None, "", " \t\n "], [0, 0, 0]),
+    # only non-word tokens: nothing to train, each token counts 1
+    (["@@ !! x-y", "a.b ..."], [3, 2]),
+    # an empty frame
+    ([], []),
+], ids=["no_tokens", "non_word_only", "empty_frame"])
+def test_bpe_degenerate_inputs_learn_nothing(spark, texts, counts):
+    from batukh_spark.operators.vocab import bpe_token_counts, train_bpe
+    docs = spark.createDataFrame(list(enumerate(texts)),
+                                 "doc_id long, text string")
+    assert train_bpe(docs, n_merges=5).count() == 0
+    got = {r.doc_id: r.n_bpe_tokens
+           for r in bpe_token_counts(docs, n_merges=5).collect()}
+    assert got == dict(enumerate(counts))
 
 
 # ---------------------------------------------------------------------------
