@@ -1,9 +1,11 @@
 """spark-submit entry point (SURVEY §7 step 6).
 
 Cluster usage:
-    spark-submit --py-files batukh_spark.zip -m batukh_spark.cli \
-        --input cat.db.transcripts --output cat.db.extracted \
-        --metrics cat.db.extract_manifest --run-id r42 [--resume]
+    spark-submit --py-files batukh_spark.zip \
+        --conf spark.driver.defaultJavaOptions=-XX:TieredStopAtLevel=1 \
+        -m batukh_spark.cli --input cat.db.transcripts \
+        --output cat.db.extracted --metrics cat.db.extract_manifest \
+        --run-id r42 [--resume]
 
 Local / sandbox usage (parquet fallback, synthesizes a corpus on demand):
     python -m batukh_spark.cli --synthesize 1000 --output /tmp/out \

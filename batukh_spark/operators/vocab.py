@@ -49,8 +49,7 @@ _MERGES = pa.schema([("round", pa.int32()), ("left", pa.string()),
 _SEGS = pa.schema([("w", pa.string()), ("n_syms", pa.int32())])
 
 
-def train_bpe(docs: DataFrame, n_merges: int = 6,
-              text_col: str = "text", id_col: str = "doc_id"):
+def train_bpe(docs: DataFrame, n_merges: int = 6, text_col: str = "text"):
     """Learn a BPE merge table from the corpus.  Returns a DataFrame
     (round, left, right, merged, pair_count): round r's row is the
     adjacent symbol pair with the highest frequency-weighted count

@@ -174,14 +174,17 @@ def test_prepare_worker_runs_once(monkeypatch):
     assert not worker.on_worker()
     monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches",
                         zipimport.zipimporter.invalidate_caches)
+    # count the freezes: the frozen count itself drops whenever a frozen
+    # object is freed by reference counting
+    freezes, freeze = [], gc.freeze
+    monkeypatch.setattr(gc, "freeze", lambda: (freezes.append(1), freeze()))
     try:
         worker.prepare_worker()
         guarded = zipimport.zipimporter.invalidate_caches
-        frozen = gc.get_freeze_count()
-        assert frozen > 0
+        assert gc.get_freeze_count() > 0
         worker.prepare_worker()
         assert zipimport.zipimporter.invalidate_caches is guarded
-        assert gc.get_freeze_count() == frozen
+        assert freezes == [1]
     finally:
         gc.unfreeze()
 
