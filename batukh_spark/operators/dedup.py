@@ -179,23 +179,28 @@ def lsh_candidate_pairs(docs: DataFrame, id_col: str = "doc_id",
     return _band_pairs(bands, id_col, "band_hash")
 
 
-def resolve_clusters(pairs: DataFrame, id_a: str = "id_a",
-                     id_b: str = "id_b", max_iters: int = 20) -> DataFrame:
-    """Candidate pairs -> duplicate clusters: connected components by
-    iterative min-label propagation over pure DataFrame joins.
+def resolve_clusters(pairs: DataFrame) -> DataFrame:
+    """Candidate pairs (id_a, id_b) -> duplicate clusters: connected
+    components by min-label hooking with pointer jumping, over pure
+    DataFrame joins.
 
     Returns (doc_id, cluster_id, is_keeper): cluster_id is the minimum
     doc id in the component, is_keeper marks the one row per cluster a
     dedup keep-set retains.  This is the last mile LSH needs — real
     corpus dedup drops *clusters*, not pairs.
 
-    Scale: plain min-label propagation — each round (one join +
-    groupBy shuffled on id, materialized so plans do not grow) lowers
-    every label to its neighbours' minimum, so rounds = graph diameter.
-    Near-dup graphs are mostly tiny cliques (diameter 1-2); a chain
-    longer than max_iters raises RuntimeError rather than returning a
-    silently-partial clustering (ROADMAP direction 4: logarithmic
-    rounds).
+    One loop, one plan shape for cliques and chains.  Each pass first
+    checks whether any edge still joins two different labels; if none
+    does, the labels are the components.  Otherwise one round hooks
+    every node to the least of its own and its neighbours' labels, then
+    jumps it to that label's label (Liu & Tarjan, SOSA 2019; Kiveris et
+    al., SoCC 2014), materialized so plans do not grow.  Every label
+    names a member of its node's component and is <= the node's id, and
+    a round after a failed check strictly lowers some label, so the
+    loop ends, with each component carrying its own minimum id.  The
+    jump shortens chains geometrically, so a path of n nodes takes
+    about log2(n) rounds; near-dup cliques are done at the seed and run
+    no round.  An empty pair frame passes the first check.
     """
     # symmetrize via ONE explode pass, not a two-arm union: the union
     # form re-executed the whole upstream candidate-generation DAG
@@ -204,58 +209,41 @@ def resolve_clusters(pairs: DataFrame, id_a: str = "id_a",
     # (round-7 plan sweep; interleaved A/B on keep_set 2.87 -> 2.77 s
     # at sf0.1; at scale the candidate join is the dominant stage, so
     # running it once instead of twice is the real win).  Materialized
-    # ONCE: every propagation round joins edges, and would otherwise
+    # ONCE: every check and round joins edges, and would otherwise
     # re-execute the whole upstream candidate-generation DAG
     edges = materialize(pairs.select(F.explode(F.array(
-        F.struct(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
-        F.struct(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))))
+        F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+        F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))))
         .alias("__e")).select("__e.src", "__e.dst").distinct(),
         "dedup.resolve_clusters:edges")
-    # empty candidate graph (a fully-distinct corpus): skip the
-    # propagation loop — each round costs fixed shuffle overhead even
-    # over empty inputs, and the edges are already materialized so
-    # this probe is a cheap local scan
-    with named_jobs(edges.sparkSession, "dedup.resolve_clusters:edges"):
-        empty = not edges.take(1)
-    if empty:
-        return edges.select(F.col("src").alias("doc_id"),
-                            F.col("dst").alias("cluster_id"),
-                            F.lit(True).alias("is_keeper"))
-    # seed = round 1 fused into initialization: label(v) = min(v, all
-    # neighbors of v) comes straight off the materialized edge list as
-    # ONE groupBy — no self-label table to build and join first.  For
-    # the dominant near-dup graph shape (tiny cliques, diameter 1-2)
-    # this alone is the fixpoint and the loop below only confirms it.
+    # seed = the first hook fused into initialization: label(v) = min(v,
+    # all neighbours of v) comes straight off the edge list as ONE
+    # groupBy.  Every node is a src (the edges are symmetric), so the
+    # inner joins below drop none.
     labels = materialize(edges.groupBy("src").agg(F.min("dst").alias("__m"))
                          .select(F.col("src").alias("id"),
                                  F.least("__m", "src").alias("label")),
                          "dedup.resolve_clusters:seed")
-    for _ in range(max_iters):
-        nbr_min = (edges.join(labels, edges.dst == labels.id)
-                   .groupBy("src").agg(F.min("label").alias("nbr")))
-        # carry the OLD label through the checkpoint so convergence is
-        # a scan-local filter over the materialized result — the
-        # per-iteration labels-vs-labels equality JOIN this replaces
-        # was two extra exchanges per round (measured ~40% of the
-        # whole propagation wall on clique-shaped graphs)
-        new_labels = materialize(
-            labels.join(nbr_min, labels.id == nbr_min.src, "left")
-            .select(labels.id, F.col("label").alias("__old"),
-                    F.least("label", F.coalesce("nbr", "label"))
-                    .alias("label")),
-            "dedup.resolve_clusters:round")
-        with named_jobs(edges.sparkSession, "dedup.resolve_clusters:round"):
-            changed = (new_labels
-                       .filter(F.col("label") != F.col("__old"))
-                       .limit(1).count())
-        labels = new_labels.select("id", "label")
-        if changed == 0:
+    while True:
+        with named_jobs(edges.sparkSession, "dedup.resolve_clusters:check"):
+            split = (edges.join(labels.toDF("src", "ls"), "src")
+                     .join(labels.toDF("dst", "ld"), "dst")
+                     .filter(F.col("ls") != F.col("ld"))
+                     .limit(1).count())
+        if not split:
             return labels.select(
                 F.col("id").alias("doc_id"),
                 F.col("label").alias("cluster_id"),
                 (F.col("id") == F.col("label")).alias("is_keeper"))
-    raise RuntimeError(
-        f"resolve_clusters: not converged after {max_iters} iterations")
+        hooked = (edges.join(labels.toDF("dst", "ld"), "dst")
+                  .groupBy("src").agg(F.min("ld").alias("__n"))
+                  .join(labels.toDF("src", "ls"), "src")
+                  .select("src", F.least("ls", "__n").alias("hook")))
+        labels = materialize(
+            hooked.join(labels.toDF("hook", "lh"), "hook")
+            .select(F.col("src").alias("id"),
+                    F.least("hook", "lh").alias("label")),
+            "dedup.resolve_clusters:round")
 
 
 def simhash(docs: DataFrame, id_col: str = "doc_id",
@@ -373,8 +361,9 @@ def keep_set(docs: DataFrame, id_col: str = "doc_id",
     LSH pair, so the cluster keeper is never itself an exact dup).
 
     Scale: composes exact_dedup (hash+id shuffle), lsh_candidate_pairs
-    (bucketed), resolve_clusters (per-round join+groupBy) — no stage
-    is all-pairs; the final assembly is two key joins on doc id.
+    (bucketed), resolve_clusters (edge-keyed joins, log rounds on
+    chains, none on cliques) — no stage is all-pairs; the final
+    assembly is two key joins on doc id.
 
     Exact-dup groups are collapsed to their min-id REPRESENTATIVE
     before the LSH chain: exact copies have byte-identical signatures,
@@ -384,7 +373,7 @@ def keep_set(docs: DataFrame, id_col: str = "doc_id",
     rep, so a component's min id is always a rep — the (keep, reason)
     verdicts are IDENTICAL to running LSH over the full corpus, while
     the expensive stages (shingle explode, signature groupBy, band
-    join, cluster propagation) see only one doc per distinct text.  On
+    join, cluster resolution) see only one doc per distinct text.  On
     real crawl corpora (30-50% exact dup; templated transcript turns
     measured ~2.4x here) that factor comes straight off the dominant
     cost; the price is one key semi-join of the corpus against the rep

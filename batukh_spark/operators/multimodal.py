@@ -17,20 +17,6 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType(), False),
-    T.StructField("kind", T.StringType(), False),     # image|audio|video
-    T.StructField("payload", T.BinaryType(), True),   # opaque bytes
-    T.StructField("meta", T.StructType([
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("sample_rate", T.IntegerType(), True),
-        T.StructField("n_frames", T.IntegerType(), True),
-        T.StructField("mime", T.StringType(), True),
-    ]), True),
-])
 
 FEATURE_SCHEMA_SQL = ("media_id long, kind string, n_bytes int, "
                       "checksum string, feat array<float>")

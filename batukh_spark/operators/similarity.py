@@ -633,7 +633,7 @@ def embedding_keep_set(emb: DataFrame, n_bits: int = 32,
     identical signatures, so components over reps == components over
     all vectors restricted, and a component's min id is always a
     rep — verdicts equal running LSH over the full corpus while the
-    band self-join and cluster propagation see one vector per distinct
+    band self-join and cluster resolution see one vector per distinct
     embedding.  Caveat: "identical" is defined at the 1e-6 quantized
     resolution of vec_hash, while signatures/cosines use the raw
     floats — two vectors equal at 1e-6 but unequal in the last float
@@ -641,8 +641,8 @@ def embedding_keep_set(emb: DataFrame, n_bits: int = 32,
     cosine rounding and diverge from a full-corpus run; no checked
     corpus exhibits this); candidate generation is bucketed
     (srp_candidate_pairs — never all-pairs); the verify join ships
-    vectors for candidates only; min-label propagation shuffles only
-    the candidate-graph edges.  Degenerate vectors (NULL / NaN / zero)
+    vectors for candidates only; cluster resolution (log rounds on
+    chains, none on cliques) shuffles only the candidate-graph edges.  Degenerate vectors (NULL / NaN / zero)
     should be audited out first via `embedding_audit` — a zero vector
     has undefined cosine and never verifies as near_dup."""
     # ONE corpus scan: (id, vector, identity hash) materializes once

@@ -70,5 +70,3 @@ KIND_BOILERPLATE = "boilerplate"
 KIND_HEADING = "heading"
 KIND_CODE = "code"
 KIND_TOOL = "tool_output"
-
-ALL_KINDS = (KIND_CONTENT, KIND_BOILERPLATE, KIND_HEADING, KIND_CODE, KIND_TOOL)

@@ -1091,8 +1091,9 @@ def embedding_keep_set_q(spark, sf):
     augmentation exercises both drop reasons and the exact_dup >
     near_dup precedence: an exact copy is band-identical to its rep
     and always also a near-dup pair).  Bucketed SRP-LSH candidates,
-    cosine verify on candidates only, min-label cluster propagation —
-    never all-pairs (similarity.embedding_keep_set)."""
+    cosine verify on candidates only, connected components by min-label
+    hooking with pointer jumping — never all-pairs
+    (similarity.embedding_keep_set)."""
     emb = t_spread(spark, sf, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e"))
     vid = F.col("vec_id")

@@ -95,17 +95,17 @@ def read_transcripts(spark: SparkSession, source: str,
     return spark.read.parquet(source)
 
 
-def write_extracted(df: DataFrame, target: str, partition_col: str = "unit",
-                    dynamic_overwrite: bool = True) -> None:
+def write_extracted(df: DataFrame, target: str,
+                    partition_col: str = "unit") -> None:
+    """Overwrite only the partitions `df` holds: a resume never deletes
+    the files other units committed."""
     spark = df.sparkSession
     if _is_catalog_table(spark, target):
         # Iceberg: overwritePartitions == dynamic overwrite semantics
         df.writeTo(target).overwritePartitions()
         return
-    writer = df.write.mode("overwrite")
-    if dynamic_overwrite:
-        writer = writer.option("partitionOverwriteMode", "dynamic")
-    writer.partitionBy(partition_col).parquet(target)
+    (df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+     .partitionBy(partition_col).parquet(target))
 
 
 @dataclass(frozen=True)

@@ -6,11 +6,14 @@ operator SEMANTICS on small hand-built inputs.
 """
 
 import math
+import random
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from batukh_spark.operators import dedup, multimodal, similarity, textstats
+from batukh_spark.session import arrow_frame
 from reference_twins import assign_expr, simhash_expr, srp_signature_expr
 
 
@@ -407,19 +410,63 @@ def test_multimodal_plumbing(spark, docs):
         "the quick brown fox jumps over the lazy dog".encode())
 
 
-def test_resolve_clusters_chain_and_clique(spark):
-    """Min-label propagation must merge multi-hop chains (1-2, 2-3, 3-4
-    -> one cluster) and keep disjoint cliques separate."""
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4),        # chain -> cluster 1
-         (10, 11), (10, 12), (11, 12),  # clique -> cluster 10
-         (20, 21)],                     # pair  -> cluster 20
-        "id_a long, id_b long")
+def _union_find_clusters(pairs):
+    """{id: (min id of its component, id is that min)} — the plain
+    driver union-find resolve_clusters must agree with."""
+    parent = {}
+
+    def root(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = root(a), root(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: (root(x), root(x) == x) for x in parent}
+
+
+def _mixed_cliques(n, seed=7):
+    rng = random.Random(seed)
+    pairs, base = [], 0
+    for _ in range(n):
+        ids = list(range(base, base + rng.randint(2, 12)))
+        pairs += [(a, b) for i, a in enumerate(ids) for b in ids[i + 1:]]
+        base = ids[-1] + 5
+    return pairs
+
+
+CLUSTER_GRAPHS = {
+    "chain_clique_pair": [(1, 2), (2, 3), (3, 4),        # chain
+                          (10, 11), (10, 12), (11, 12),  # clique
+                          (20, 21)],                     # pair
+    "path_41": [(i, i + 1) for i in range(40)],
+    "path_4096_asc": [(i, i + 1) for i in range(4095)],
+    "path_4096_desc": [(i + 1, i) for i in reversed(range(4095))],
+    "star_4096": [(0, i) for i in range(1, 4096)],
+    "mixed_cliques_200": _mixed_cliques(200),
+    "empty": [],
+    "string_ids": [("c12", "c12_x"), ("c12_x", "c3"), ("c3", "c30"),
+                   ("c7_x", "c7"), ("b", "a_1"), ("a_1", "a")],
+}
+
+
+@pytest.mark.parametrize("graph", list(CLUSTER_GRAPHS))
+def test_resolve_clusters_matches_union_find(spark, graph):
+    """Connected components equal a driver union-find on every graph
+    shape — paths far longer than a fixed round budget, in either id
+    order, stars, cliques, no edges and string ids — with cluster_id
+    the component's min id and one keeper per cluster."""
+    pairs = CLUSTER_GRAPHS[graph]
+    kind = pa.string() if graph == "string_ids" else pa.int64()
+    frame = arrow_frame(spark, pa.table({
+        "id_a": pa.array([a for a, _ in pairs], kind),
+        "id_b": pa.array([b for _, b in pairs], kind)}))
     out = {r.doc_id: (r.cluster_id, r.is_keeper)
-           for r in dedup.resolve_clusters(pairs).collect()}
-    assert out == {1: (1, True), 2: (1, False), 3: (1, False),
-                   4: (1, False), 10: (10, True), 11: (10, False),
-                   12: (10, False), 20: (20, True), 21: (20, False)}
+           for r in dedup.resolve_clusters(frame).collect()}
+    assert out == _union_find_clusters(pairs)
 
 
 def test_resolve_clusters_symmetrize_dedups(spark):
