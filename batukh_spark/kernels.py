@@ -44,7 +44,8 @@ from batukh_spark.oracle.extract import extract as oracle_extract
 
 
 def _extract_cols(texts, roles, tools):
-    """Apply the oracle over aligned sequences; returns dict of columns.
+    """Apply the oracle over aligned sequences; returns dict of columns,
+    `spans` as a ready Arrow list array.
 
     The per-string tokenizer loop is inherently Python, but it runs once
     per Arrow batch inside the worker — the same granularity at which the
@@ -55,8 +56,12 @@ def _extract_cols(texts, roles, tools):
     extracted = [None] * n
     n_blocks = [0] * n
     n_kept = [0] * n
-    spans = [None] * n
     errors = [None] * n
+    # spans flattened: row i owns span_off[i]:span_off[i + 1]
+    span_off = [0] * (n + 1)
+    starts: list[int] = []
+    ends: list[int] = []
+    kinds: list[str] = []
     for i in range(n):
         t = texts[i]
         r = oracle_extract(
@@ -67,14 +72,23 @@ def _extract_cols(texts, roles, tools):
         extracted[i] = r.extracted_text
         errors[i] = r.error
         if r.family == FAMILY_PDF:
-            n_blocks[i] = len(r.lines)
-            n_kept[i] = len(r.lines)
-            spans[i] = []
+            n_blocks[i] = n_kept[i] = len(r.lines)
         else:
             n_blocks[i] = len(r.blocks)
-            n_kept[i] = sum(1 for b in r.blocks if b.keep)
-            spans[i] = [{"start": s, "end": e, "kind": k}
-                        for s, e, k in r.spans]
+            for b in r.blocks:
+                if b.keep:
+                    starts.append(b.start)
+                    ends.append(b.end)
+                    kinds.append(b.kind)
+            n_kept[i] = len(starts) - span_off[i]
+        span_off[i + 1] = len(starts)
+    spans = pa.ListArray.from_arrays(
+        pa.array(span_off, pa.int32()),
+        pa.StructArray.from_arrays(
+            [pa.array(starts, pa.int32()), pa.array(ends, pa.int32()),
+             pa.array(kinds, pa.string())],
+            fields=list(_SPAN_TYPE.value_type)),
+        type=_SPAN_TYPE)
     return dict(family=family, extracted_text=extracted, n_blocks=n_blocks,
                 n_kept=n_kept, spans=spans, error=errors)
 
@@ -153,7 +167,7 @@ def extract_turns_lean(
             pa.array(cols["extracted_text"], pa.string()),
             pa.array(cols["n_blocks"], pa.int32()),
             pa.array(cols["n_kept"], pa.int32()),
-            pa.array(cols["spans"], _SPAN_TYPE),
+            cols["spans"],
             pa.array(cols["error"], pa.string()),
         ]
         fields = ([batch.schema.field(i) for i in keep]

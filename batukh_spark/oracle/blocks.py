@@ -10,11 +10,10 @@ pdf_layout.py).
 
 from __future__ import annotations
 
-import math
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from batukh_spark.oracle import constants as C
-from batukh_spark.oracle.canonical import canonicalize, word_count
+from batukh_spark.oracle.canonical import canonical_words
 
 
 @dataclass(slots=True)
@@ -23,7 +22,6 @@ class Block:
     start: int = 0            # char offset of first raw segment
     end: int = 0              # char offset one past last raw segment
     text: str = ""            # canonicalized block text
-    tag_path: str = ""        # dom path at block start, e.g. "html/body/div/p"
     n_chars: int = 0          # len(canonical text)
     n_words: int = 0
     n_anchor_chars: int = 0   # canonical chars contributed inside <a>
@@ -33,23 +31,19 @@ class Block:
     keep: bool = False
 
 
-def finalize_block(raw_parts: list[str], anchor_chars: int, start: int,
-                   end: int, kind: str, tag_path: str,
-                   structural: bool) -> Block | None:
-    """Build a Block from accumulated raw text segments; None if empty."""
-    text = canonicalize("".join(raw_parts))
+def finalize_block(raw: str, anchor_chars: int, start: int, end: int,
+                   kind: str, structural: bool) -> Block | None:
+    """Build a Block from its raw (decoded) text; None if empty."""
+    text, n_words = canonical_words(raw)
     if not text:
         return None
     n_chars = len(text)
-    n_words = word_count(text)
-    lines = max(1, math.ceil(n_chars / C.WRAP_CHARS))
-    b = Block(kind=kind, start=start, end=end, text=text, tag_path=tag_path,
-              n_chars=n_chars, n_words=n_words,
-              n_anchor_chars=min(anchor_chars, n_chars),
-              structural=structural)
-    b.score = n_words / lines
-    b.link_density = b.n_anchor_chars / n_chars if n_chars else 0.0
-    return b
+    n_anchor = anchor_chars if anchor_chars < n_chars else n_chars
+    # words per virtual line of C.WRAP_CHARS chars (integer ceil)
+    return Block(kind, start, end, text, n_chars, n_words, n_anchor,
+                 structural, n_words / ((n_chars + C.WRAP_CHARS - 1)
+                                        // C.WRAP_CHARS),
+                 n_anchor / n_chars)
 
 
 def classify_and_keep(blocks: list[Block], role: str | None = None) -> None:
@@ -87,45 +81,33 @@ def classify_and_keep(blocks: list[Block], role: str | None = None) -> None:
 
     # Pass 2: neighbour smoothing — a short, link-light block sandwiched
     # next to content is content (U-Net context analogue, SURVEY §2 K1).
-    # Only soft boilerplate (not structural, not link-dense) is rescued.
-    soft = [i for i, b in enumerate(blocks)
-            if b.kind == C.KIND_BOILERPLATE and not b.structural
-            and b.link_density <= C.LINK_DENSITY_MAX]
-    # neighbour list skips hard boilerplate so a nav bar doesn't shield.
-    seq = [i for i, b in enumerate(blocks)
+    # Only soft boilerplate (not structural, not link-dense) is rescued;
+    # the neighbour sequence skips hard boilerplate so a nav bar doesn't
+    # shield.  In order, so a rescued block counts as content for the
+    # soft block after it.
+    seq = [b for b in blocks
            if not (b.structural or (b.kind == C.KIND_BOILERPLATE
                                     and b.link_density > C.LINK_DENSITY_MAX))]
-    pos_in_seq = {i: j for j, i in enumerate(seq)}
-    for i in soft:
-        j = pos_in_seq.get(i)
-        if j is None:
-            continue
-        prev_c = (j > 0 and blocks[seq[j - 1]].kind == C.KIND_CONTENT)
-        next_c = (j + 1 < len(seq)
-                  and blocks[seq[j + 1]].kind == C.KIND_CONTENT)
-        if prev_c or next_c:
-            blocks[i].kind = C.KIND_CONTENT
+    last = len(seq) - 1
+    for j, b in enumerate(seq):
+        if b.kind == C.KIND_BOILERPLATE and (
+                (j > 0 and seq[j - 1].kind == C.KIND_CONTENT)
+                or (j < last and seq[j + 1].kind == C.KIND_CONTENT)):
+            b.kind = C.KIND_CONTENT
 
-    # Pass 3: keep decision.
-    for idx, b in enumerate(blocks):
-        if b.kind == C.KIND_CONTENT:
-            b.keep = True
-        elif b.kind == C.KIND_CODE:
-            b.keep = True
-        elif b.kind == C.KIND_TOOL:
-            b.keep = is_tool_role
-        elif b.kind == C.KIND_HEADING:
-            # A heading is kept iff the next non-heading, non-structural
-            # block is kept (it "titles" kept content).
-            b.keep = False
-            for nb in blocks[idx + 1:]:
-                if nb.structural or nb.kind == C.KIND_HEADING:
-                    continue
-                b.keep = nb.kind in (C.KIND_CONTENT, C.KIND_CODE) or (
-                    nb.kind == C.KIND_TOOL and is_tool_role)
-                break
-        else:
-            b.keep = False
+    # Pass 3: keep decision, back to front.  A heading is kept iff the
+    # next non-heading, non-structural block is kept (it "titles" kept
+    # content); pass 1 made every structural block boilerplate.
+    next_keep = False
+    for b in reversed(blocks):
+        kind = b.kind
+        if kind == C.KIND_HEADING:
+            b.keep = next_keep
+            continue
+        b.keep = (kind == C.KIND_CONTENT or kind == C.KIND_CODE
+                  or (kind == C.KIND_TOOL and is_tool_role))
+        if not b.structural:
+            next_keep = b.keep
 
 
 def assemble(blocks: list[Block]) -> str:

@@ -17,11 +17,22 @@ def canonicalize(s: str) -> str:
     """NFC-normalize, fold NBSP into space, collapse whitespace runs, strip."""
     if not s:
         return ""
-    if not s.isascii():  # NFC is the identity on ASCII — skip the call
+    if s.isascii():  # NFC is the identity on ASCII
+        # str.split() splits on _WS_RE's class plus the ASCII separators
+        # \x1c-\x1f, so without those it folds exactly as the regex does
+        if not ("\x1c" in s or "\x1d" in s or "\x1e" in s or "\x1f" in s):
+            return " ".join(s.split())
+    else:
         s = unicodedata.normalize("NFC", s)
     return _WS_RE.sub(" ", s).strip()
 
 
-def word_count(s: str) -> int:
-    """Number of whitespace-separated words in an already-canonical string."""
-    return len(s.split()) if s else 0
+def canonical_words(s: str) -> tuple[str, int]:
+    """`canonicalize(s)` and its number of whitespace-separated words,
+    splitting once where the split is exact."""
+    if s.isascii() and not ("\x1c" in s or "\x1d" in s or "\x1e" in s
+                            or "\x1f" in s):
+        words = s.split()
+        return " ".join(words), len(words)
+    text = canonicalize(s)
+    return text, len(text.split())

@@ -46,10 +46,9 @@ class ExtractResult:
 
 def detect_family(text: str | None) -> str:
     """Deterministic payload-family sniffing (no metadata trusted)."""
-    if text is None or not text.strip():
+    if not text or text.isspace():
         return FAMILY_EMPTY
-    stripped = text.lstrip()
-    if stripped.startswith("{") and '"pdf_layout"' in text[:200]:
+    if '"pdf_layout"' in text[:200] and text.lstrip().startswith("{"):
         return FAMILY_PDF
     if _HTML_HINT_RE.search(text):
         return FAMILY_HTML

@@ -3,9 +3,11 @@
 This scanner DEFINES extraction semantics (goldens + the driver's DuckDB
 gate pin it); the HTMLParser-based tokenizer in tests/reference_twins.py
 is only a differential-test aid on the well-terminated-refs input class.
-The regex scanner is the oracle rather than html.parser because (a) it is
-~2x faster and the oracle rate bounds the engine's per-core throughput,
-and (b) html.parser's recovery on malformed refs is pathological for an
+The regex scanner is the oracle rather than html.parser because (a) the
+oracle rate bounds the engine's per-core throughput, and on the
+synthetic corpus's HTML turns it takes ~70 µs a turn against ~320 µs
+for the html.parser form (one core of a 4-core Xeon host), and (b)
+html.parser's recovery on malformed refs is pathological for an
 extraction oracle: it swallows all remaining markup after a bare '&#',
 invents trailing semicolons for unknown names, and silently drops '&' at
 EOF — this scanner instead follows browser-style (HTML5 text-parsing)
@@ -30,6 +32,7 @@ from __future__ import annotations
 
 import html as _htmlmod
 import re
+from collections import defaultdict
 
 from batukh_spark.oracle import constants as C
 from batukh_spark.oracle.blocks import Block, finalize_block
@@ -40,20 +43,25 @@ _VOID_TAGS = frozenset({
     "meta", "param", "source", "track", "wbr",
 })
 
-# master scanner: ordered alternatives, leftmost-longest within each
+# master scanner: ordered alternatives, leftmost-longest within each.
+# Alternatives that can match at the same position keep their relative
+# order (comment before decl, the ;-forms before the bare refs, stray
+# last); text and tags come first because they are most of every page.
+# The attribute runs are possessive: a run of plain characters has one
+# parse, and an unclosed tag must not retry its splits.
 _TOKEN_RE = re.compile(r"""
-    (?P<comment><!--.*?(?:-->|$))
+    (?P<text>[^<&]+)
+  | (?P<starttag><(?P<stag>[a-zA-Z][a-zA-Z0-9._:-]*)
+        (?P<attrs>(?:[^>"']++|"[^"]*"|'[^']*')*)
+        >)
+  | (?P<endtag></\s*(?P<etag>[a-zA-Z][a-zA-Z0-9._:-]*)[^>]*>)
+  | (?P<comment><!--.*?(?:-->|$))
   | (?P<decl><![^>]*>?)
   | (?P<pi><\?[^>]*>?)
-  | (?P<endtag></\s*(?P<etag>[a-zA-Z][a-zA-Z0-9._:-]*)[^>]*>)
-  | (?P<starttag><(?P<stag>[a-zA-Z][a-zA-Z0-9._:-]*)
-        (?P<attrs>(?:[^>"']|"[^"]*"|'[^']*')*)
-        >)
   | (?P<charref>&\#(?:[0-9]+|[xX][0-9a-fA-F]+);)
   | (?P<charref_ns>&\#(?:[0-9]+|[xX][0-9a-fA-F]+))
   | (?P<entityref>&[a-zA-Z][a-zA-Z0-9]*;)
   | (?P<entityref_ns>&[a-zA-Z][a-zA-Z0-9]*)
-  | (?P<text>[^<&]+)
   | (?P<stray>[<&])
 """, re.VERBOSE | re.DOTALL)
 
@@ -74,208 +82,198 @@ _RAWTEXT_CLOSE = {
     for t in ("script", "style")
 }
 
-# tag -> (is_skip, is_boiler, is_code, is_block, rawtext); the frozenset
-# memberships are invariant per tag, so look them up once per distinct tag
-_TAG_FLAGS: dict[str, tuple] = {}
+_G = _TOKEN_RE.groupindex
+_TEXT, _STARTTAG, _STAG, _ATTRS, _ENDTAG, _ETAG = (
+    _G["text"], _G["starttag"], _G["stag"], _G["attrs"], _G["endtag"],
+    _G["etag"])
+_CHARREF, _CHARREF_NS, _ENTITYREF, _ENTITYREF_NS, _STRAY = (
+    _G["charref"], _G["charref_ns"], _G["entityref"], _G["entityref_ns"],
+    _G["stray"])
 
 
-def _tag_flags(tag: str) -> tuple:
-    f = _TAG_FLAGS.get(tag)
-    if f is None:
-        f = (tag in C.SKIP_TAGS, tag in C.BOILERPLATE_TAGS,
-             tag in C.CODE_TAGS, tag in C.BLOCK_TAGS,
-             tag in C.SKIP_TAGS and tag in ("script", "style"))
-        _TAG_FLAGS[tag] = f
-    return f
+def _tag_table() -> dict[str, tuple]:
+    """tag -> (flags, is_block, is_void, is_rawtext) for every tag with a
+    role in `constants`; any other tag is `_OTHER_TAG`.  `flags` is the
+    frame's (skip, boiler, code, tool, anchor) counts, or None when all
+    are zero."""
+    table = {}
+    for tag in (C.SKIP_TAGS | C.BOILERPLATE_TAGS | C.CODE_TAGS
+                | C.BLOCK_TAGS | _VOID_TAGS | {"a"}):
+        flags = (int(tag in C.SKIP_TAGS), int(tag in C.BOILERPLATE_TAGS),
+                 int(tag in C.CODE_TAGS), 0, int(tag == "a"))
+        table[tag] = (flags if any(flags) else None, tag in C.BLOCK_TAGS,
+                      tag in _VOID_TAGS, tag in _RAWTEXT_CLOSE)
+    return table
 
 
-class _Ctx:
-    """Tokenizer context shared with no inheritance overhead."""
-
-    __slots__ = ("blocks", "stack", "n_skip", "n_boiler", "n_code",
-                 "n_tool", "n_anchor", "parts", "anchor_parts", "b_start",
-                 "b_end", "b_kind", "b_path", "b_structural", "block_tag")
-
-    def __init__(self):
-        self.blocks: list[Block] = []
-        # stack entries: (tag, skip, boiler, code, tool, anchor,
-        # block_under) — block_under is the nearest block tag at or below
-        # this frame, so _close_tag recomputes block_tag in O(1) instead
-        # of rescanning the stack
-        self.stack: list[tuple] = []
-        self.n_skip = 0
-        self.n_boiler = 0
-        self.n_code = 0
-        self.n_tool = 0
-        self.n_anchor = 0
-        self.parts: list[str] = []
-        self.anchor_parts: list[str] = []
-        self.b_start = -1
-        self.b_end = -1
-        self.b_kind = None
-        self.b_path = ""
-        self.b_structural = False
-        self.block_tag = None
+_TAGS = _tag_table()
+_OTHER_TAG = (None, False, False, False)
 
 
-def _flush(ctx: _Ctx) -> None:
-    if ctx.b_start < 0:
-        # no block open: only <br> newlines can have accumulated (they
-        # never open a block); anchor_parts is filled solely alongside
-        # b_start, so it is empty here and b_end/b_kind hold reset values
-        if ctx.parts:
-            ctx.parts = []
-        return
-    anchor_len = (len(canonicalize("".join(ctx.anchor_parts)))
-                  if ctx.anchor_parts else 0)
-    b = finalize_block(ctx.parts, anchor_len, ctx.b_start, ctx.b_end,
-                       ctx.b_kind or C.KIND_CONTENT, ctx.b_path,
-                       ctx.b_structural)
+def _emit(blocks: list[Block], parts: list[str], anchor_parts: list[str],
+          start: int, last, kind: str, structural: bool) -> None:
+    """Close the open block: `last` is the match of its last segment."""
+    anchor_len = (len(canonicalize("".join(anchor_parts)))
+                  if anchor_parts else 0)
+    b = finalize_block("".join(parts), anchor_len, start, last.end(), kind,
+                       structural)
     if b is not None:
-        ctx.blocks.append(b)
-    ctx.parts = []
-    ctx.anchor_parts = []
-    ctx.b_start = -1
-    ctx.b_end = -1
-    ctx.b_kind = None
-
-
-def _append_text(ctx: _Ctx, decoded: str, raw_start: int,
-                 raw_len: int) -> None:
-    if ctx.n_skip:
-        return
-    if ctx.b_start < 0:
-        ctx.b_start = raw_start
-        ctx.b_path = "/".join(f[0] for f in ctx.stack)
-        ctx.b_structural = ctx.n_boiler > 0
-        if ctx.n_tool:
-            ctx.b_kind = C.KIND_TOOL
-        elif ctx.n_code:
-            ctx.b_kind = C.KIND_CODE
-        elif ctx.block_tag in C.HEADING_TAGS:
-            ctx.b_kind = C.KIND_HEADING
-        else:
-            ctx.b_kind = C.KIND_CONTENT
-    ctx.b_end = raw_start + raw_len
-    ctx.parts.append(decoded)
-    if ctx.n_anchor:
-        ctx.anchor_parts.append(decoded)
-
-
-def _pop_from(ctx: _Ctx, i: int) -> None:
-    for f in ctx.stack[i:]:
-        ctx.n_skip -= f[1]
-        ctx.n_boiler -= f[2]
-        ctx.n_code -= f[3]
-        ctx.n_tool -= f[4]
-        ctx.n_anchor -= f[5]
-    del ctx.stack[i:]
-
-
-def _close_tag(ctx: _Ctx, tag: str) -> None:
-    if tag in _VOID_TAGS:
-        return
-    if tag in C.BLOCK_TAGS:
-        _flush(ctx)
-    stack = ctx.stack
-    if stack and stack[-1][0] == tag:
-        # well-formed fast path: close matches the innermost open tag
-        f = stack.pop()
-        ctx.n_skip -= f[1]
-        ctx.n_boiler -= f[2]
-        ctx.n_code -= f[3]
-        ctx.n_tool -= f[4]
-        ctx.n_anchor -= f[5]
-    else:
-        for i in range(len(stack) - 1, -1, -1):
-            if stack[i][0] == tag:
-                _pop_from(ctx, i)
-                break
-    # nearest block tag in the remaining stack, O(1) via frame[6]
-    ctx.block_tag = stack[-1][6] if stack else None
+        blocks.append(b)
 
 
 def tokenize_html_fast(raw: str) -> list[Block]:
-    ctx = _Ctx()
+    blocks: list[Block] = []
+    # frames (tag, flags, block_under) over a sentinel; block_under is the
+    # nearest block tag at or below the frame, so a close recomputes
+    # block_tag in O(1)
+    stack: list[tuple] = [(None, None, None)]
+    # open frames per tag: a close with no open frame returns at once
+    n_open: defaultdict[str, int] = defaultdict(int)
+    n_skip = n_boiler = n_code = n_tool = n_anchor = 0
+    block_tag = None
+    # the open block: b_start < 0 when none is open
+    parts: list[str] = []
+    anchor_parts: list[str] = []
+    b_start = -1
+    b_last = b_kind = b_structural = None
     pos = 0
-    n = len(raw)
-    scan = _TOKEN_RE.match
-    rawtext_until: str | None = None  # inside <script>/<style>/...: tag name
-    while pos < n:
-        if rawtext_until is not None:
-            # raw-text mode: content is skipped wholesale; find close tag
-            pat = _RAWTEXT_CLOSE.get(rawtext_until)
-            if pat is None:
-                pat = re.compile(rf"</\s*{rawtext_until}[^>]*>",
-                                 re.IGNORECASE)
-            m = pat.search(raw, pos)
-            if m is None:
-                break  # unterminated script/style: rest is skipped
-            _close_tag(ctx, rawtext_until)
-            pos = m.end()
-            rawtext_until = None
-            continue
-        m = scan(raw, pos)
-        if m is None:  # cannot happen (stray covers < and &) — safety
-            break
-        kind = m.lastgroup
-        if kind == "text" or kind == "stray":
-            _append_text(ctx, m.group(), pos, m.end() - pos)
-        elif kind == "starttag":
-            tag = m.group("stag").lower()
-            if tag == "br":
-                ctx.parts.append("\n")
-            elif tag not in _VOID_TAGS:
-                attrs = m.group("attrs") or ""
-                is_tool = False
-                if "class" in attrs or "CLASS" in attrs or "Class" in attrs:
-                    cm = _CLASS_RE.search(attrs)
-                    if cm:
-                        cls = (cm.group(1) or cm.group(2)
-                               or cm.group(3) or "").lower()
-                        is_tool = C.TOOL_CLASS_MARKER in cls
-                self_closing = attrs.rstrip().endswith("/")
-                skip, boiler, code, is_block, rawtext = _tag_flags(tag)
+    while True:
+        rawtext = None
+        for m in _TOKEN_RE.finditer(raw, pos):
+            kind = m.lastindex
+            if kind == _TEXT or kind == _STRAY:
+                s = m.group()
+            elif kind == _STARTTAG:
+                tag = m.group(_STAG)
+                info = _TAGS.get(tag)
+                if info is None:
+                    tag = tag.lower()
+                    info = _TAGS.get(tag, _OTHER_TAG)
+                flags, is_block, is_void, is_rawtext = info
+                if is_block and b_start >= 0:
+                    _emit(blocks, parts, anchor_parts, b_start, b_last,
+                          b_kind, b_structural)
+                    parts = []
+                    anchor_parts = []
+                    b_start = -1
+                if is_void:
+                    # a <br> before a block's first segment would only
+                    # lead its text with whitespace, which canonicalize
+                    # strips
+                    if tag == "br" and b_start >= 0:
+                        parts.append("\n")
+                    continue
                 if is_block:
-                    _flush(ctx)
-                    ctx.block_tag = tag
-                if not self_closing:
-                    stack = ctx.stack
-                    block_under = (tag if is_block
-                                   else (stack[-1][6] if stack else None))
-                    is_anchor = tag == "a"
-                    stack.append((tag, skip, boiler, code, is_tool,
-                                  is_anchor, block_under))
-                    ctx.n_skip += skip
-                    ctx.n_boiler += boiler
-                    ctx.n_code += code
-                    ctx.n_tool += is_tool
-                    ctx.n_anchor += is_anchor
-                    if rawtext:
-                        rawtext_until = tag
-            elif tag == "hr" and tag in C.BLOCK_TAGS:
-                _flush(ctx)
-        elif kind == "endtag":
-            _close_tag(ctx, m.group("etag").lower())
-        elif kind == "entityref" or kind == "entityref_ns":
-            # unescape implements HTML5 named refs including the legacy
-            # semicolon-less table; unknown names come back verbatim
-            g = m.group()
-            decoded = _COMMON_ENTITIES.get(g)
-            if decoded is None:
-                decoded = _htmlmod.unescape(g)
-            _append_text(ctx, decoded, pos, m.end() - pos)
-        elif kind == "charref" or kind == "charref_ns":
-            body = (m.group()[2:-1] if kind == "charref"
-                    else m.group()[2:])
-            try:
-                cp = int(body[1:], 16) if body[0] in "xX" else int(body)
-                decoded = chr(cp)
-            except (ValueError, OverflowError):
-                decoded = ""
-            if decoded:
-                _append_text(ctx, decoded, pos, m.end() - pos)
-        # comment / decl / pi: skipped
+                    block_tag = tag
+                attrs = m.group(_ATTRS)
+                if attrs:
+                    if "class" in attrs or "CLASS" in attrs or (
+                            "Class" in attrs):
+                        cm = _CLASS_RE.search(attrs)
+                        if cm and C.TOOL_CLASS_MARKER in (
+                                cm.group(1) or cm.group(2) or cm.group(3)
+                                or "").lower():
+                            flags = (flags[:3] + (1,) + flags[4:]
+                                     if flags else (0, 0, 0, 1, 0))
+                    if attrs.rstrip().endswith("/"):
+                        continue  # self-closing: no frame
+                stack.append((tag, flags,
+                              tag if is_block else stack[-1][2]))
+                n_open[tag] += 1
+                if flags:
+                    n_skip += flags[0]
+                    n_boiler += flags[1]
+                    n_code += flags[2]
+                    n_tool += flags[3]
+                    n_anchor += flags[4]
+                if is_rawtext:
+                    rawtext = tag
+                    pos = m.end()
+                    break
+                continue
+            elif kind == _ENDTAG:
+                tag = m.group(_ETAG)
+                info = _TAGS.get(tag)
+                if info is None:
+                    tag = tag.lower()
+                    info = _TAGS.get(tag, _OTHER_TAG)
+                if info[2]:
+                    continue  # void
+                if info[1] and b_start >= 0:
+                    _emit(blocks, parts, anchor_parts, b_start, b_last,
+                          b_kind, b_structural)
+                    parts = []
+                    anchor_parts = []
+                    b_start = -1
+                if n_open[tag]:
+                    # pop down to the innermost open frame of this tag
+                    while True:
+                        f = stack.pop()
+                        n_open[f[0]] -= 1
+                        flags = f[1]
+                        if flags:
+                            n_skip -= flags[0]
+                            n_boiler -= flags[1]
+                            n_code -= flags[2]
+                            n_tool -= flags[3]
+                            n_anchor -= flags[4]
+                        if f[0] == tag:
+                            break
+                block_tag = stack[-1][2]
+                continue
+            elif kind == _ENTITYREF or kind == _ENTITYREF_NS:
+                # unescape implements HTML5 named refs including the
+                # legacy semicolon-less table; unknown names come back
+                # verbatim
+                g = m.group()
+                s = _COMMON_ENTITIES.get(g)
+                if s is None:
+                    s = _htmlmod.unescape(g)
+            elif kind == _CHARREF or kind == _CHARREF_NS:
+                g = m.group()
+                body = g[2:-1] if kind == _CHARREF else g[2:]
+                try:
+                    s = chr(int(body[1:], 16) if body[0] in "xX"
+                            else int(body))
+                except (ValueError, OverflowError):
+                    continue
+            else:
+                continue  # comment / decl / pi
+            if n_skip:
+                continue
+            if b_start < 0:
+                b_start = m.start()
+                b_structural = n_boiler > 0
+                if n_tool:
+                    b_kind = C.KIND_TOOL
+                elif n_code:
+                    b_kind = C.KIND_CODE
+                elif block_tag in C.HEADING_TAGS:
+                    b_kind = C.KIND_HEADING
+                else:
+                    b_kind = C.KIND_CONTENT
+            b_last = m
+            parts.append(s)
+            if n_anchor:
+                anchor_parts.append(s)
+        if rawtext is None:
+            break
+        # raw-text mode: the content is skipped wholesale up to the close
+        # tag, which pops the frame just pushed
+        m = _RAWTEXT_CLOSE[rawtext].search(raw, pos)
+        if m is None:
+            break  # unterminated script/style: rest is skipped
+        f = stack.pop()
+        n_open[rawtext] -= 1
+        flags = f[1]
+        n_skip -= flags[0]
+        n_boiler -= flags[1]
+        n_code -= flags[2]
+        n_tool -= flags[3]
+        n_anchor -= flags[4]
+        block_tag = f[2]
         pos = m.end()
-    _flush(ctx)
-    return ctx.blocks
+    if b_start >= 0:
+        _emit(blocks, parts, anchor_parts, b_start, b_last, b_kind,
+              b_structural)
+    return blocks

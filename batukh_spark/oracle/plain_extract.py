@@ -62,7 +62,7 @@ def tokenize_plain(raw: str, role: str | None = None,
     for seg_s, seg_e, seg_kind in segments:
         chunk = raw[seg_s:seg_e]
         if seg_kind != "prose":
-            b = finalize_block([chunk], 0, seg_s, seg_e, seg_kind, "", False)
+            b = finalize_block(chunk, 0, seg_s, seg_e, seg_kind, False)
             if b is not None:
                 blocks.append(b)
             continue
@@ -80,6 +80,6 @@ def _add_prose(blocks: list[Block], piece: str, start: int, end: int) -> None:
     if not piece.strip():
         return
     kind = C.KIND_HEADING if _HEADING_RE.match(piece) else C.KIND_CONTENT
-    b = finalize_block([piece], 0, start, end, kind, "", False)
+    b = finalize_block(piece, 0, start, end, kind, False)
     if b is not None:
         blocks.append(b)

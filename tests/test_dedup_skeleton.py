@@ -13,7 +13,11 @@ PKG = pathlib.Path(__file__).resolve().parents[1] / "batukh_spark"
 
 TWINS = {"tokenize_html_reference", "simhash_expr", "_assign_expr",
          "srp_signature_expr", "_cos_pairs_fast", "_apply_merge",
-         "train_bpe_loop", "_train_bpe_full"}
+         "train_bpe_loop", "_train_bpe_full", "canonicalize_reference",
+         "finalize_block_reference", "classify_and_keep_reference",
+         "tokenize_html_fast_reference", "parse_pdf_layout_reference",
+         "tokenize_plain_reference", "extract_reference",
+         "extract_cols_reference"}
 
 
 def _functions():

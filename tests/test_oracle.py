@@ -11,6 +11,7 @@ import json
 import os
 import random
 import re
+import time
 
 import pytest
 
@@ -142,3 +143,48 @@ def test_randomized_html_never_raises():
         assert r.extracted_text is not None
         for st, en, _ in r.spans:
             assert 0 <= st < en <= len(s)
+
+
+# Inputs that were quadratic in the scanner or the keep pass: an
+# unclosed tag per block (HTML5 omits `</li>`), stray close tags over a
+# deep stack, and a run of headings.  Each took 5-16 CPU-s before.
+@pytest.mark.parametrize("raw", [
+    "<ul>" + "<li>a" * 16000,
+    "<span>x " * 16000 + "</p>" * 16000,
+    "<h2>t</h2>" * 32000,
+], ids=["unclosed_li", "stray_close", "heading_run"])
+def test_html_pathological_inputs_are_linear(raw):
+    t0 = time.process_time()
+    r = extract(raw, role="assistant")
+    assert time.process_time() - t0 <= 1.0
+    assert r.family == FAMILY_HTML and r.blocks
+
+
+def _layout(tokens):
+    return json.dumps({"kind": "pdf_layout", "tokens": tokens})
+
+
+_TOKEN = {"t": "w", "x0": 1.0, "y0": 1.0, "x1": 9.0, "y1": 9.0, "page": 0}
+
+
+# Payloads the layout parser cannot process: each raised out of
+# `extract`, and so failed the whole kernel task.
+@pytest.mark.parametrize("payload", [
+    _layout([dict(_TOKEN, x0="1", x1="9")]),
+    _layout([dict(_TOKEN, y0=None)]),
+    _layout([dict(_TOKEN, page="p1")]),
+    _layout([dict(_TOKEN, t=5)]),
+    '{"kind": "pdf_layout", "tokens": 5}',
+    '{"kind": "pdf_layout", "tokens": ' + "[" * 5000 + "]" * 5000 + "}",
+], ids=["string_coords", "null_coord", "page_p1", "numeric_text",
+        "tokens_int", "deep_nesting"])
+def test_malformed_pdf_layout_is_a_counted_parse_error(payload):
+    from reference_twins import parse_pdf_layout_reference
+    with pytest.raises((TypeError, ValueError, RecursionError)):
+        parse_pdf_layout_reference(payload)
+    from batukh_spark.oracle.extract import _extract_plain
+    r = extract(payload, role="assistant")
+    assert r.error == "pdf_layout_parse_error"
+    assert r.family == FAMILY_PLAIN
+    assert r.extracted_text == _extract_plain(
+        payload, "assistant", None).extracted_text

@@ -154,3 +154,26 @@ def test_files_mode_extraction_equals_shuffle_mode(spark, dirs):
         "conv_id", "turn_idx", "extracted_text", "family") \
         .orderBy("conv_id", "turn_idx").collect()
     assert a == b
+
+
+def test_files_mode_counts_a_malformed_layout_turn(spark, dirs):
+    """A PDF-layout turn with string coordinates used to raise in the
+    kernel and fail the whole run; it is now one counted parse error."""
+    bad = ('{"kind": "pdf_layout", "tokens": [{"t": "w", "x0": "1", '
+           '"y0": 1, "x1": "9", "y1": 9, "page": 0}]}')
+    src = make_transcripts(spark, 3, partitions=1)
+    first = src.orderBy("conv_id", "turn_idx").limit(1)
+    src.unionByName(first.withColumn("turn_idx", F.lit(999))
+                    .withColumn("text", F.lit(bad))) \
+        .coalesce(1).write.parquet(dirs["src"])
+    assert len(spark.read.parquet(dirs["src"]).inputFiles()) == 1
+
+    s = pipeline.run_extraction(spark, dirs["src"], dirs["out"],
+                                metrics=dirs["metrics"], run_id="bad1")
+    assert s["units_completed"] == 1
+    from batukh_spark.sources import io as bio
+    (m,) = bio.read_manifest(spark, dirs["metrics"]).collect()
+    assert (m.status, m.n_errors) == (pipeline.STATUS_DONE, 1)
+    (row,) = spark.read.parquet(dirs["out"]) \
+        .filter(F.col("turn_idx") == 999).collect()
+    assert (row.family, row.error) == ("plain", "pdf_layout_parse_error")
