@@ -47,12 +47,13 @@ _VOID_TAGS = frozenset({
 # Alternatives that can match at the same position keep their relative
 # order (comment before decl, the ;-forms before the bare refs, stray
 # last); text and tags come first because they are most of every page.
-# The attribute runs are possessive: a run of plain characters has one
-# parse, and an unclosed tag must not retry its splits.
+# An attribute run is atomic (a lookahead captures it and the
+# backreference consumes it, since `++` needs Python 3.11): a run of plain
+# characters has one parse, and an unclosed tag must not retry its splits.
 _TOKEN_RE = re.compile(r"""
     (?P<text>[^<&]+)
   | (?P<starttag><(?P<stag>[a-zA-Z][a-zA-Z0-9._:-]*)
-        (?P<attrs>(?:[^>"']++|"[^"]*"|'[^']*')*)
+        (?P<attrs>(?:(?=(?P<run>[^>"']+))(?P=run)|"[^"]*"|'[^']*')*)
         >)
   | (?P<endtag></\s*(?P<etag>[a-zA-Z][a-zA-Z0-9._:-]*)[^>]*>)
   | (?P<comment><!--.*?(?:-->|$))

@@ -210,6 +210,8 @@ def parse_pdf_layout(raw: str) -> list[Line] | None:
             y1 = t["y1"]
         except KeyError:
             continue
+        if not isinstance(text, str):
+            return None
         try:
             page = int(t.get("page", 0))
             tok = (x0, y0, x1, y1, 0.5 * (x0 + x1), 0.5 * (y0 + y1), text)
@@ -222,9 +224,8 @@ def parse_pdf_layout(raw: str) -> list[Line] | None:
             ptoks.append(tok)
     try:
         return _layout(by_page)
-    except (TypeError, OverflowError):
-        # a non-string token text (the line join), or an integer
-        # coordinate too large for float arithmetic
+    except OverflowError:
+        # an integer coordinate too large for float arithmetic
         return None
 
 

@@ -1,7 +1,6 @@
 """Python profile of the extraction kernel on one core, without Spark.
 
     PYTHONPATH=. python tools/oracle_profile.py [--seed 1601] [--reps 5]
-        [--profile-every 3] [--top 15]
 
 Rebuilds the `extract_files` benchmark corpus of `--seed` in this
 process (the conversations `perfbench.inputs.draw_conversations` picks,
@@ -14,9 +13,9 @@ core and prints one JSON line:
                          of `--reps` passes over every turn
   kernel_turns_per_s     `kernels.extract_turns_lean` over the whole
                          corpus as one Arrow batch, fastest of `--reps`
-  top_self               the `--top` functions by self time under
+  top_self               the 15 functions by self time under
                          cProfile, over one kernel pass on every
-                         `--profile-every`-th turn
+                         third turn
 
 Only reads `perfbench`; it writes nothing.
 """
@@ -36,6 +35,8 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
 _FAMILY = {"html": "html", "pdf_layout": "pdf", "plain": "plain",
            "empty": "empty"}
+TOP = 15
+PROFILE_EVERY = 3
 
 
 def corpus_turns(seed: int) -> list[dict]:
@@ -67,13 +68,13 @@ def _kernel_pass(batch) -> float:
     return time.perf_counter() - t0
 
 
-def _top_self(batch, top: int) -> list[dict]:
+def _top_self(batch) -> list[dict]:
     prof = cProfile.Profile()
     prof.enable()
     _kernel_pass(batch)
     prof.disable()
     stats = pstats.Stats(prof).stats
-    rows = sorted(stats.items(), key=lambda kv: -kv[1][2])[:top]
+    rows = sorted(stats.items(), key=lambda kv: -kv[1][2])[:TOP]
     return [{"func": f"{os.path.basename(fn)}:{line}({name})",
              "calls": nc, "self_s": round(tt, 4), "cum_s": round(ct, 4)}
             for (fn, line, name), (_cc, nc, tt, ct, _callers) in rows]
@@ -83,8 +84,6 @@ def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--seed", type=int, default=1601)
     ap.add_argument("--reps", type=int, default=5)
-    ap.add_argument("--profile-every", type=int, default=3)
-    ap.add_argument("--top", type=int, default=15)
     args = ap.parse_args(argv)
     os.sched_setaffinity(0, {min(os.sched_getaffinity(0))})
 
@@ -117,8 +116,7 @@ def main(argv=None) -> int:
         "seed": args.seed, "turns": len(turns), "families": dict(counts),
         "reps": args.reps, "oracle_us_per_turn": us,
         "kernel_turns_per_s": round(len(turns) / kernel_s, 1),
-        "top_self": _top_self(_batch(turns[::args.profile_every]),
-                              args.top),
+        "top_self": _top_self(_batch(turns[::PROFILE_EVERY])),
     }))
     return 0
 
